@@ -1,8 +1,8 @@
-"""Shared measurement plumbing for bench.py and the scripts/ pair
-runners (review r11: the noisy-window threshold and the DuckDB pairing
-boilerplate were hand-duplicated in three files — a recalibration must
-happen in ONE place or the artifacts of record silently disagree on
-what counts as a noisy window)."""
+"""Shared measurement plumbing for ``bench.py``, ``perfbench/`` and
+``scripts/measure_baseline.py`` (review r11: the noisy-window threshold
+and the DuckDB pairing boilerplate were hand-duplicated in three files —
+a recalibration must happen in ONE place or the artifacts of record
+silently disagree on what counts as a noisy window)."""
 
 from __future__ import annotations
 

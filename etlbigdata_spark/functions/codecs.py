@@ -115,16 +115,6 @@ def ppm_features(key: str, blob: bytes) -> dict:
     return {"key": key, "width": w, "height": h, "n_frames": 1, "feature": feature}
 
 
-def ppm_resize(blob: bytes, width: int, height: int) -> bytes:
-    """Real decode → nearest-neighbor resample → re-encode P6.
-    Nearest-neighbor via integer index maps (pure numpy, no scipy)."""
-    img = decode_ppm(blob)
-    src_h, src_w = img.shape[:2]
-    rows = np.minimum((np.arange(height) + 0.5) * src_h / height, src_h - 1).astype(np.int64)
-    cols = np.minimum((np.arange(width) + 0.5) * src_w / width, src_w - 1).astype(np.int64)
-    return encode_ppm(img[rows[:, None], cols[None, :]])
-
-
 def ppm_frames(blob: bytes, n_frames: int) -> list[bytes]:
     """Real frame sampling: split the concatenated-P6 stream and take
     ``n_frames`` evenly spaced frames (all frames if fewer exist)."""

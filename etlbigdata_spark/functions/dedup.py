@@ -768,35 +768,6 @@ def _md5_hash64(col) -> Column:
         )
         .otherwise(dec.cast("long"))
     )
-def simhash_col(text_col, bits: int = 64):
-    """64-bit SimHash, fully JVM-side: xxhash64 per token; for each bit,
-    sign-sum across tokens; assemble the signature with bit ops. No
-    Python in the loop — one fold over the token array that accumulates a
-    ``bits``-slot sign-sum array (bit positions are compile-time ints, so
-    the shift amounts stay literals as Spark's shiftright requires)."""
-    toks = F.array_distinct(tokens_col(text_col))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def bit_signs(h):
-        return F.array(
-            *[
-                F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1).cast("long"))
-                .otherwise(F.lit(-1).cast("long"))
-                for b in range(bits)
-            ]
-        )
-
-    sums = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(acc, bit_signs(h), lambda a, s: a + s),
-    )
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        sig = sig + F.when(
-            F.element_at(sums, b + 1) > 0, F.shiftleft(F.lit(1).cast("long"), b)
-        ).otherwise(F.lit(0).cast("long"))
-    return sig
 
 
 def _simhash_signatures(toks: DataFrame, hash_expr: Column, counter_bits: int = 32) -> DataFrame:

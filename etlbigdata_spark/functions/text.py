@@ -10,8 +10,6 @@ weeks.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -72,9 +70,7 @@ def tokens_col(text: Column | str, lowercase: bool = True) -> Column:
 # the r12 scaling block showed the heavy dedup rows running ~2× faster
 # at 8 cores than 32 at sf0.1: 32 tasks of a few KB each pay more in
 # per-task fixed cost than they gain in parallelism).
-_EXPANSION_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_EXPANSION_BYTES_PER_TASK", str(128 * 1024))
-)
+_EXPANSION_BYTES_PER_TASK = 128 * 1024
 
 
 def rebalance_for_expansion(df: DataFrame) -> DataFrame:

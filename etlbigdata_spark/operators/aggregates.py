@@ -91,12 +91,6 @@ def hll_merge_counts(
     )
 
 
-def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
-    """B7 — global top-k. Spark's sort+limit already does a per-partition
-    partial top-k then merges — no full sort of the table."""
-    return df.orderBy(*order_by).limit(k)
-
-
 def top_k_per_group(
     df: DataFrame, partition_by: list[str], order_by: list[Column], k: int, rank_col: str = "rn"
 ) -> DataFrame:

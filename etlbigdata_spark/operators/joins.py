@@ -3,9 +3,10 @@
 The reference has exactly one join: single-key equi-join with
 left/inner/right/outer picked from a dropdown
 (``/root/reference/simple_etl.py:322-351``).  Here the full family:
-equi/semi/anti/cross/theta plus two CUSTOM compositions Spark lacks as
-built-ins — as-of join and point-in-interval range join — both built to
-shuffle once on the equi key rather than explode a range cross-product.
+equi/semi/anti/cross (theta joins are a plain ``DataFrame.join`` on a
+predicate) plus two CUSTOM compositions Spark lacks as built-ins —
+as-of join and point-in-interval range join — both built to shuffle
+once on the equi key rather than explode a range cross-product.
 """
 
 from __future__ import annotations
@@ -43,12 +44,6 @@ def join(
         cond = c if cond is None else (cond & c)
     r = F.broadcast(right) if broadcast_right else right
     return left.join(r, cond, how)
-
-
-def theta_join(left: DataFrame, right: DataFrame, condition, how: str = "inner") -> DataFrame:
-    """B9 — arbitrary non-equi condition; small right side should be
-    broadcast by the caller or Catalyst falls back to BNLJ."""
-    return left.join(right, condition, how)
 
 
 def asof_join(

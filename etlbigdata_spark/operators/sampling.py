@@ -16,11 +16,6 @@ def sample(df: DataFrame, fraction: float, seed: int = 42, with_replacement: boo
     return df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed)
 
 
-def stratified_sample(df: DataFrame, col: str, fractions: dict, seed: int = 42) -> DataFrame:
-    """B17 — per-stratum fractions (``sampleBy``)."""
-    return df.sampleBy(col, fractions, seed=seed)
-
-
 def null_profile(df: DataFrame) -> DataFrame:
     """B27 — per-column null count + rate, single pass (one aggregate, no
     per-column jobs). Output long-form: (col_name, n_null, null_rate)."""
@@ -43,29 +38,6 @@ def null_profile(df: DataFrame) -> DataFrame:
         "n_null",
         (F.col("n_null") / F.col("__total")).alias("null_rate"),
     )
-
-
-def numeric_profile(df: DataFrame, columns: list[str]) -> DataFrame:
-    """B27 — min/max/avg/stddev per numeric column, long-form, one pass."""
-    aggs = []
-    for c in columns:
-        aggs += [
-            F.min(c).alias(f"min_{c}"),
-            F.max(c).alias(f"max_{c}"),
-            F.avg(c).alias(f"avg_{c}"),
-            F.stddev_samp(c).alias(f"std_{c}"),
-        ]
-    row = df.agg(*aggs).collect()[0]
-    data = [
-        (c, float(row[f"min_{c}"]), float(row[f"max_{c}"]), float(row[f"avg_{c}"]), float(row[f"std_{c}"]))
-        for c in columns
-    ]
-    return df.sparkSession.createDataFrame(data, ["column", "min", "max", "avg", "stddev"])
-
-
-def approx_quantiles(df: DataFrame, column: str, probabilities: list[float], rel_err: float = 0.01) -> list[float]:
-    """B27 — Greenwald-Khanna sketch quantiles; no sort, no shuffle of data."""
-    return df.approxQuantile(column, probabilities, rel_err)
 
 
 def histogram(df: DataFrame, column: str, lo: float, hi: float, n_bins: int) -> DataFrame:

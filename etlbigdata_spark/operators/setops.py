@@ -20,11 +20,6 @@ def union_all(dfs: list[DataFrame], allow_missing_columns: bool = True) -> DataF
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing_columns), dfs)
 
 
-def union_distinct(dfs: list[DataFrame]) -> DataFrame:
-    """B8 — UNION (dedup after concat; one extra shuffle)."""
-    return union_all(dfs).distinct()
-
-
 def intersect(left: DataFrame, right: DataFrame, keep_duplicates: bool = False) -> DataFrame:
     """B8 — INTERSECT [ALL]."""
     return left.intersectAll(right) if keep_duplicates else left.intersect(right)

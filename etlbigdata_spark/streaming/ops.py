@@ -46,10 +46,6 @@ def read_file_stream(
     )
 
 
-def read_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    return spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-
-
 def read_kafka(
     spark: SparkSession,
     bootstrap_servers: str,
@@ -222,24 +218,6 @@ def sliding_counts(
         F.col("win.end").alias("window_end"),
         *[F.col(k) for k in (keys or [])],
         "n_events",
-    )
-
-
-def session_counts(
-    df: DataFrame, ts_col: str, gap: str, keys: list[str], watermark: str = "10 minutes"
-) -> DataFrame:
-    """Session windows (B20): dynamic-length, gap-closed; watermark is
-    mandatory for state cleanup in streaming mode."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("win"), *[F.col(k) for k in keys])
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            *[F.col(k) for k in keys],
-            "n_events",
-        )
     )
 
 

@@ -1038,10 +1038,13 @@ def test_read_csv_with_quarantine_splits_good_and_bad(engine, tmp_path):
 
 
 def test_read_csv_with_quarantine_reference_fixture_is_clean(engine):
-    """Reference parity: the ref's own dirty fixture (data_penjualan.csv
-    - blank fields, duplicate rows) parses CLEAN under its natural
-    schema - its dirt is data-quality dirt (NULLs, dups), not parse
-    corruption, so the quarantine stays empty and no row is lost."""
+    """Reference parity: the ref's dirty fixture (data_penjualan.csv,
+    rebuilt in tests/fixtures/ from the FIXTURES.md §1 layout - blank
+    fields, duplicate rows) parses CLEAN under its natural schema - its
+    dirt is data-quality dirt (NULLs, dups), not parse corruption, so
+    the quarantine stays empty and no row is lost."""
+    from pathlib import Path
+
     import pyspark.sql.types as T
 
     from etlbigdata_spark.sources import readers
@@ -1059,7 +1062,7 @@ def test_read_csv_with_quarantine_reference_fixture_is_clean(engine):
         ]
     )
     good, bad = readers.read_csv_with_quarantine(
-        engine.spark, "/root/reference/data_penjualan.csv", schema
+        engine.spark, str(Path(__file__).parent / "fixtures" / "data_penjualan.csv"), schema
     )
     assert bad.count() == 0
     rows = good.collect()

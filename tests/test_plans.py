@@ -167,7 +167,7 @@ def test_d09_production_path_one_shuffle_on_cell_id(spark, sf_dir):
     a single Exchange hashpartitioning(cluster) feeding the
     FlatMapGroupsInPandas scorer, assignment map-side (no join, no
     second exchange anywhere in the plan).  This is the plan the sf1
-    bench row (scripts/bench_semantic_sf1.py) measures; the 8-cell
+    k-means-scaled d09 row of GROWTH_r08.json measured; the 8-cell
     oracle face keeps its own pin above."""
     from etlbigdata_spark.functions import similarity as fsim
 

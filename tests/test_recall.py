@@ -2092,8 +2092,11 @@ def test_pq_suggest_m_reproduces_r11_frontier_decision(spark):
     corpus (with the persisted k-means cells, residual mode — the
     IVFPQ_FRONTIER_r11.json configuration) the helper must reach the
     frontier's decision: m=32 rate-distortion-infeasible, m=64
-    feasible, suggested_m == 64.  Skip-gated on the harness data
-    (built by scripts/ivfpq_scale_r11.py)."""
+    feasible, suggested_m == 64.  Skip-gated on the harness data:
+    scripts/ivfpq_scale_r10.py writes the corpus,
+    scripts/ivfpq_scale_r11.py the m=32 k-means-cell indexes, and
+    scripts/ivfpq_frontier_r11.py the ivf_pq64_res_km index read here;
+    run them in that order."""
     import os
 
     corpus_path = "/tmp/scaled/ivfpq/corpus_n2000000"
