@@ -72,7 +72,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etlbigdata_spark import workload  # noqa: E402
-from etlbigdata_spark.benchutil import noisy_start  # noqa: E402
+from etlbigdata_spark.benchutil import codegen_stats, noisy_start  # noqa: E402
 from etlbigdata_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -206,6 +206,11 @@ def _sf_from_dir(d: str) -> float:
 
 def time_query(spark, name: str) -> float:
     fn = workload.QUERIES[name]
+    # The warm-up re-times the query it just ran, so its generated
+    # classes are always still cached: this loop cannot show a cache
+    # too small for the classes of many queries run in turn (each
+    # query evicting the next one's).  ``codegen_compiles`` in the
+    # output counts the compiles across the whole headline loop.
     # toArrow, not collect (per-row Python objects) and not toPandas
     # (a second, pandas-side materialization DuckDB's fetch never
     # pays): matched-destination transfer — see module docstring
@@ -262,6 +267,7 @@ def main() -> None:
         except Exception:
             break
     floor = round(measure_floor(spark), 4)
+    compiles0, compile_s0 = codegen_stats(spark)
     timings = {}
     for name in HEADLINE:
         try:
@@ -271,6 +277,7 @@ def main() -> None:
             timings[name] = None
     ok = [v for v in timings.values() if v is not None]
     total = round(sum(ok), 4)
+    compiles1, compile_s1 = codegen_stats(spark)
     floor_end = round(measure_floor(spark), 4)
     load_end = os.getloadavg()
     drift = round(floor_end / floor, 2) if floor > 0 else None
@@ -285,6 +292,8 @@ def main() -> None:
                 "runs_per_query": RUNS,
                 "n_queries": len(ok),
                 "floor_sec": floor,
+                "codegen_compiles": compiles1 - compiles0,
+                "codegen_compile_s": round(compile_s1 - compile_s0, 4),
                 "floor_end_sec": floor_end,
                 "floor_drift": drift,
                 "loadavg_start": [round(x, 2) for x in load_start],

@@ -1,8 +1,9 @@
-"""Shared measurement plumbing for ``bench.py``, ``perfbench/`` and
-``scripts/measure_baseline.py`` (review r11: the noisy-window threshold
-and the DuckDB pairing boilerplate were hand-duplicated in three files —
-a recalibration must happen in ONE place or the artifacts of record
-silently disagree on what counts as a noisy window)."""
+"""Shared measurement plumbing for ``bench.py``, ``perfbench/``,
+``scripts/measure_baseline.py`` and the tests (review r11: the
+noisy-window threshold and the DuckDB pairing boilerplate were
+hand-duplicated in three files — a recalibration must happen in ONE
+place or the artifacts of record silently disagree on what counts as a
+noisy window)."""
 
 from __future__ import annotations
 
@@ -45,3 +46,19 @@ def register_duck_views(con, sf_dir: str) -> None:
         if os.path.isdir(f"{sf_dir}/{t}.parquet"):
             target += "/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{target}')")
+
+
+def codegen_stats(spark) -> tuple[int, float]:
+    """``(compilations, compile_s)``: generated classes Janino compiled
+    in this JVM so far and the seconds spent compiling them.  Spark
+    compiles only on a miss in its generated-code cache, so the
+    difference of two readings counts the misses between them.  The
+    count is ``CodegenMetrics``' compilation-time histogram count; the
+    seconds are ``CodeGenerator.compileTime`` (the histogram keeps only
+    a sample of durations).  In local mode the tasks run in the driver
+    JVM, so their compiles count too; on a cluster only the driver's
+    do."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e9

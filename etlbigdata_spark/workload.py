@@ -111,6 +111,19 @@ def D(c) -> F.Column:
     return (F.col(c) if isinstance(c, str) else c).cast("decimal(18,4)")
 
 
+def _literal_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small table of literal rows, built in the JVM: ``inline`` of
+    literal structs over a one-row range.  ``createDataFrame`` of a
+    Python list goes through ``sc.parallelize`` and so runs Python
+    workers in every stage that scans it.  ``ddl`` is ``name type, ...``
+    with simple types."""
+    cols = [c.split() for c in ddl.split(",")]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(row, cols)])
+        for row in rows
+    ])))
+
+
 def _dec1() -> F.Column:
     return F.lit(1).cast("decimal(18,4)")
 
@@ -2888,7 +2901,7 @@ def s10_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(query, doc) sums exact integer aggregation, s01
     round-before-rank)."""
     docs = load(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(_S10_QUERIES, "query_id int, query_text string")
+    queries = _literal_table(spark, _S10_QUERIES, "query_id int, query_text string")
     return ftext.bm25_topk(docs, queries, k=10)
 
 
@@ -2982,7 +2995,7 @@ def s12_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     path = tempfile.mkdtemp(prefix="s12_bm25_")
     ftext.bm25_write_index(docs, path, n_buckets=16)
-    queries = spark.createDataFrame(_S12_QUERIES, "query_id int, query_text string")
+    queries = _literal_table(spark, _S12_QUERIES, "query_id int, query_text string")
     return ftext.bm25_probe_index(spark, path, queries, k=10)
 
 
@@ -5540,7 +5553,7 @@ def b09_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9 CUSTOM — point-in-interval range join (bucketed equi-join plan,
     no theta cross-product): order price into per-status bands."""
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    bands = spark.createDataFrame(_BANDS, "o_orderstatus string, band string, lo double, hi double")
+    bands = _literal_table(spark, _BANDS, "o_orderstatus string, band string, lo double, hi double")
     j = joins.range_join(
         orders, bands, on="o_orderstatus",
         left_point="o_totalprice", right_lower="lo", right_upper="hi",

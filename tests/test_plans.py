@@ -272,6 +272,14 @@ def test_s01_corpus_never_shuffled(plans):
     )
 
 
+def test_s10_query_table_built_in_jvm(spark, sf_dir):
+    """s10's literal query table is a JVM-side relation: a Python-list
+    ``createDataFrame`` scans as ``ExistingRDD`` and runs Python workers
+    in every stage that reads it."""
+    plan = _final_plan(workload.s10_bm25_topk(spark, sf_dir))
+    assert "ExistingRDD" not in plan
+
+
 def test_b09_asof_single_shuffle_no_range_blowup(plans):
     """As-of join is the union+window plan: one shuffle on the join key,
     no range cross-product."""
