@@ -16,6 +16,8 @@ Two paths, per the north star:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -590,32 +592,12 @@ def ivf_write_index(
         # ties (e.g. duplicate centroid vectors) in the SAME order or
         # tied vectors land in a partition the probe never reads
         cents = sorted(cents, key=lambda c: c[0])
-        assigned = _assign_to_cents(corpus, cents, vec_col)
     else:
-        assigned, cents = ivf_assign(corpus, n_centroids, id_col, vec_col)
-    if pq is not None:
-        if pq_residual:
-            # encode x − centroid[cell], not x (FAISS IndexIVFPQ): the
-            # cell id already carries the coarse position, so codewords
-            # spend entirely on the within-cell offset — the fix for
-            # round-10's raw-ADC recall collapse (0.43 at 2M×64d)
-            assigned = residualize(assigned, cents, vec_col=vec_col)
-            assigned = pq_encode(
-                assigned, pq, vec_col="__resid", assign="blas"
-            ).drop(vec_col)
-        else:
-            assigned = pq_encode(assigned, pq, vec_col=vec_col, assign="blas")
-    elif quantize:
-        assigned = quantize_embeddings(assigned, vec_col=vec_col)
-    # cluster rows by cell before the partitioned write (round 10):
-    # without it every input partition writes a sliver of every cell —
-    # cells x input-partitions tiny files whose per-file open cost
-    # dominated the probe at the 2M/256-cell scale point.  One shuffle
-    # of the (small, coded) rows buys ~one file per cell; a cell is the
-    # parallelism unit at probe time either way, and oversized cell
-    # files still split on read via parquet row groups.
-    assigned = assigned.repartition(F.col("centroid"))
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(f"{path}/vectors")
+        _, cents = ivf_assign(corpus, n_centroids, id_col, vec_col)
+    encoding = "pq" if pq is not None else "sq8" if quantize else "float"
+    _write_ivf_segment(
+        corpus, path, vec_col, _IvfLayout(cents, encoding, pq, pq_residual), "overwrite"
+    )
     spark = corpus.sparkSession
     cdf = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in cents],
@@ -636,12 +618,77 @@ def ivf_write_index(
     return {"n_centroids": len(cents), "path": path}
 
 
-def _read_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
-    """Rebuild the nested codebook list from the ``pq_codebooks``
-    sidecar (written by :func:`ivf_write_index(pq=...)`); validates the
-    (s, j) grid is dense so a torn sidecar fails loudly."""
-    books, _residual = _read_pq_sidecar(spark, path)
-    return books
+class _IvfLayout(NamedTuple):
+    """How one IVF index stores its vectors.  Build states it from its
+    arguments; probe and append get it from :func:`_read_ivf_layout`,
+    so all three agree on one encoding decision."""
+
+    cents: list  # [(cell id, vector)], sorted by cell id
+    encoding: str  # "float" | "sq8" | "pq"
+    books: list | None = None  # PQ codebooks
+    residual: bool = False  # PQ codes quantize x - centroid[cell]
+    vectors: DataFrame | None = None  # <path>/vectors, as read
+    cents_df: DataFrame | None = None  # <path>/centroids, as read
+
+
+def _read_ivf_layout(spark, path: str, vec_col: str) -> _IvfLayout:
+    """The one layout reader of a persisted IVF index, shared by probe
+    and append: the centroid sidecar, the encoding detected from the
+    ``vectors`` schema (``pq_code`` -> PQ with its codebook sidecar and
+    residual flag; ``vec_col`` -> float; ``emb_q`` -> SQ8), and the
+    read frames the probe scans.  A schema that matches none of them
+    raises instead of letting an append land a second file schema."""
+    cents_df = spark.read.parquet(f"{path}/centroids")
+    cents = [(r["centroid"], list(r["vec"])) for r in cents_df.orderBy("centroid").collect()]
+    vectors = spark.read.parquet(f"{path}/vectors")
+    cols = vectors.columns
+    books, residual = None, False
+    if "pq_code" in cols:
+        encoding = "pq"
+        books, residual = _read_pq_sidecar(spark, path)
+    elif vec_col in cols:
+        encoding = "float"
+    elif "emb_q" in cols:
+        encoding = "sq8"
+    else:
+        arrays = [f.name for f in vectors.schema.fields if f.dataType.typeName() == "array"]
+        raise ValueError(
+            f"IVF index at {path} stores its vectors in {arrays}: vec_col={vec_col!r} "
+            "matches neither its float layout nor the SQ8 layout (emb_q)"
+        )
+    return _IvfLayout(cents, encoding, books, residual, vectors, cents_df)
+
+
+def _write_ivf_segment(
+    df: DataFrame, path: str, vec_col: str, layout: _IvfLayout, mode: str
+) -> None:
+    """The one vector write path of build (``mode="overwrite"``) and
+    append (``"append"``): assign rows to the index's frozen cells,
+    encode them in its layout and write them partitioned by cell."""
+    assigned = _assign_to_cents(df, layout.cents, vec_col)
+    if layout.encoding == "pq":
+        if layout.residual:
+            # encode x − centroid[cell], not x (FAISS IndexIVFPQ): the
+            # cell id already carries the coarse position, so codewords
+            # spend entirely on the within-cell offset — the fix for
+            # round-10's raw-ADC recall collapse (0.43 at 2M×64d)
+            assigned = residualize(assigned, layout.cents, vec_col=vec_col)
+            assigned = pq_encode(
+                assigned, layout.books, vec_col="__resid", assign="blas"
+            ).drop(vec_col)
+        else:
+            assigned = pq_encode(assigned, layout.books, vec_col=vec_col, assign="blas")
+    elif layout.encoding == "sq8":
+        assigned = quantize_embeddings(assigned, vec_col=vec_col)
+    # cluster rows by cell before the partitioned write (round 10):
+    # without it every input partition writes a sliver of every cell —
+    # cells x input-partitions tiny files whose per-file open cost
+    # dominated the probe at the 2M/256-cell scale point.  One shuffle
+    # of the (small, coded) rows buys ~one file per cell; a cell is the
+    # parallelism unit at probe time either way, and oversized cell
+    # files still split on read via parquet row groups.
+    assigned = assigned.repartition(F.col("centroid"))
+    assigned.write.mode(mode).partitionBy("centroid").parquet(f"{path}/vectors")
 
 
 def _read_pq_sidecar(spark, path: str) -> tuple[list, bool]:
@@ -721,9 +768,8 @@ def ivf_probe_index(
     if vectorized and round_to is None:
         raise ValueError("vectorized probe requires round_to (rounding absorbs "
                          "float summation-order differences; the s01 contract)")
-    cents_rows = spark.read.parquet(f"{path}/centroids").orderBy("centroid").collect()
-    cents = [(r["centroid"], list(r["vec"])) for r in cents_rows]
-    q = _query_probes(queries, cents, n_probe, id_col, vec_col)
+    layout = _read_ivf_layout(spark, path, vec_col)
+    q = _query_probes(queries, layout.cents, n_probe, id_col, vec_col)
     if vectorized:
         # ONE collect serves both the partition filter and the scoring
         # kernel's query/probe tables — bounded by contract at
@@ -740,47 +786,33 @@ def ivf_probe_index(
         probed = sorted(
             r["centroid"] for r in q.select("centroid").distinct().collect()
         )
-    assigned = spark.read.parquet(f"{path}/vectors").filter(
-        F.col("centroid").isin(probed)
-    )
-    # self-describing layout: an SQ8 index carries codes (scored
-    # directly — the per-vector scale cancels out of cosine); a PQ index
-    # carries m-byte codes scored against the codeword reconstruction
-    # (for cosine that IS ADC — disjoint subspaces), with the codebooks
-    # rebuilt from the sidecar so no caller-side state travels
-    books = None
-    residual_cents = None
-    if "pq_code" in assigned.columns:
-        books, is_residual = _read_pq_sidecar(spark, path)
-        if is_residual:
+    assigned = layout.vectors.filter(F.col("centroid").isin(probed))
+    # an SQ8 index carries codes (scored directly — the per-vector
+    # scale cancels out of cosine); a PQ index carries m-byte codes
+    # scored against the codeword reconstruction (for cosine that IS
+    # ADC — disjoint subspaces), with the codebooks rebuilt from the
+    # sidecar so no caller-side state travels
+    corpus_vec = {"float": vec_col, "sq8": "emb_q", "pq": "pq_code"}[layout.encoding]
+    if layout.encoding == "pq" and not vectorized:
+        recon = pq_reconstruct_col("pq_code", layout.books)
+        if layout.residual:
             # residual layout: x̂ = centroid[cell] + decode(code).  The
             # cell vectors come back via a BROADCAST join against the
             # tiny centroids sidecar (never a cells×dim literal table —
-            # the round-10 plan-size trap), then one zip_with add; the
-            # blas face instead folds the centroid terms into its ADC
-            # LUTs (dot(q,x̂) = q·c + Σ_s LUT, ‖x̂‖² via a per-(cell,
-            # code) cross table) so the kernel stays gather-shaped.
-            residual_cents = {int(i): list(v) for i, v in cents}
-        corpus_vec = "pq_code"
-        if not vectorized:
-            recon = pq_reconstruct_col("pq_code", books)
-            if residual_cents is not None:
-                cvecs = spark.read.parquet(f"{path}/centroids").select(
-                    "centroid", F.col("vec").alias("__centvec")
-                )
-                assigned = assigned.join(F.broadcast(cvecs), "centroid")
-                recon = F.zip_with(recon, F.col("__centvec"), lambda a, b: a + b)
-            assigned = assigned.withColumn("__recon", recon)
-            corpus_vec = "__recon"
-    elif vec_col in assigned.columns:
-        corpus_vec = vec_col
-    else:
-        corpus_vec = "emb_q"
+            # the round-10 plan-size trap), then one zip_with add
+            cvecs = layout.cents_df.select("centroid", F.col("vec").alias("__centvec"))
+            assigned = assigned.join(F.broadcast(cvecs), "centroid")
+            recon = F.zip_with(recon, F.col("__centvec"), lambda a, b: a + b)
+        assigned = assigned.withColumn("__recon", recon)
+        corpus_vec = "__recon"
     if vectorized:
+        # the blas face folds a residual layout's centroid terms into its
+        # ADC LUTs (dot(q,x̂) = q·c + Σ_s LUT, ‖x̂‖² via a per-(cell, code)
+        # cross table) so the kernel stays gather-shaped
         return _probe_score_topk_blas(
             assigned, q, k, id_col, corpus_vec, round_to, threshold,
-            exclude_self, pq_books=books, qrows=qrows,
-            pq_residual_cents=residual_cents,
+            exclude_self, pq_books=layout.books, qrows=qrows,
+            pq_residual_cents=dict(layout.cents) if layout.residual else None,
         )
     return _probe_score_topk(
         assigned, q, k, id_col, corpus_vec, round_to, threshold, exclude_self
@@ -1203,35 +1235,15 @@ def ivf_append_index(
 
     The layout is self-describing: if the index was built with
     ``quantize=True`` the batch is SQ8-encoded with the same encoder
-    before landing, so one index never mixes float and code rows.
-    Frozen centroids mean cell balance can drift as the corpus drifts —
-    monitor with a per-partition count and REBUILD (not append) when a
-    cell outgrows its siblings; the same drift trade every IVF system
-    makes."""
-    spark = new_batch.sparkSession
-    cents_rows = spark.read.parquet(f"{path}/centroids").orderBy("centroid").collect()
-    cents = [(r["centroid"], list(r["vec"])) for r in cents_rows]
-    assigned = _assign_to_cents(new_batch, cents, vec_col)
-    existing_cols = spark.read.parquet(f"{path}/vectors").columns
-    if "pq_code" in existing_cols:
-        # PQ index: encode the batch with the FROZEN sidecar codebooks
-        # (same frozen-vocabulary trade as the frozen centroids above);
-        # a residual index residualizes against the SAME frozen
-        # centroids first, so appended rows stay layout-homogeneous
-        books, is_residual = _read_pq_sidecar(spark, path)
-        if is_residual:
-            assigned = residualize(assigned, cents, vec_col=vec_col)
-            assigned = pq_encode(
-                assigned, books, vec_col="__resid", assign="blas"
-            ).drop(vec_col)
-        else:
-            assigned = pq_encode(assigned, books, vec_col=vec_col, assign="blas")
-    elif "emb_q" in existing_cols and vec_col not in existing_cols:
-        assigned = quantize_embeddings(assigned, vec_col=vec_col)
-    # same cell-clustered layout rule as the initial build (round 10)
-    assigned = assigned.repartition(F.col("centroid"))
-    assigned.write.mode("append").partitionBy("centroid").parquet(f"{path}/vectors")
-    return {"n_centroids": len(cents), "path": path, "appended": True}
+    before landing, so one index never mixes float and code rows; a
+    ``vec_col`` that matches neither the float nor the SQ8 layout
+    raises.  Frozen centroids mean cell balance can drift as the
+    corpus drifts — monitor with a per-partition count and REBUILD (not
+    append) when a cell outgrows its siblings; the same drift trade
+    every IVF system makes."""
+    layout = _read_ivf_layout(new_batch.sparkSession, path, vec_col)
+    _write_ivf_segment(new_batch, path, vec_col, layout, "append")
+    return {"n_centroids": len(layout.cents), "path": path, "appended": True}
 
 
 def ivf_index_stats(spark, path: str) -> DataFrame:
@@ -2157,15 +2169,6 @@ def residualize(
 
     sub = pandas_udf(_sub, returnType=T.ArrayType(T.DoubleType()))
     return df.withColumn(out_col, sub(F.col(vec_col), F.col(cell_col)))
-
-
-def _pq_sidecar_residual(spark, path: str) -> bool:
-    """True iff the ``pq_codebooks`` sidecar marks the index as
-    residual-encoded (thin face over :func:`_read_pq_sidecar` — the
-    index-internal callers read the flag from the same collect that
-    rebuilds the codebooks)."""
-    _books, residual = _read_pq_sidecar(spark, path)
-    return residual
 
 
 def _pq_shape(codebooks: list) -> tuple[int, int, int]:

@@ -648,9 +648,6 @@ def bm25_topk(
     1-row aggregate broadcast in.  At 100 TB the only corpus-sized
     stages are the scan+explode (map-side) and the matched-pair
     shuffle, which scales with hits, not corpus."""
-    d = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__doc"), tokens_col(F.col(text_col)).alias("__toks")
-    )
     qt = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -659,20 +656,70 @@ def bm25_topk(
         .distinct()
     )
     stats = _corpus_stats(docs, text_col)
-    pairs = d.select(
-        "__doc", F.size("__toks").alias("__dl"), F.explode("__toks").alias("term")
-    )
-    matched = pairs.join(
-        F.broadcast(qt.select("term").distinct()), "term"
-    )
     # no persist: since the round-12 window-df rewrite of the scoring
     # tail, tf feeds exactly ONE consumer chain (df rides in as a
     # window over term), so the corpus-sized explode runs once with no
     # cache materialization job
-    tf = matched.groupBy("__doc", "term").agg(
+    tf = _bm25_postings(docs, id_col, text_col, terms=qt.select("term").distinct())
+    return _bm25_rank_from_tf(tf, qt, stats, k, k1, b, id_col)
+
+
+def _bm25_postings(
+    docs: DataFrame, id_col: str, text_col: str, terms: DataFrame | None = None
+) -> DataFrame:
+    """``(__doc, term, __tf, __dl)`` postings of ``docs`` — the one
+    tokenize/explode/count shared by :func:`bm25_topk`, the index build
+    and the append.  ``terms`` (a distinct ``term`` frame) broadcasts
+    into the exploded token stream as a map-side semi filter, so only
+    matching (doc, term) pairs reach the tf shuffle; dl rides along in
+    the projection (no corpus-sized dl join)."""
+    d = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("__doc"), tokens_col(F.col(text_col)).alias("__toks")
+    )
+    pairs = d.select(
+        "__doc", F.size("__toks").alias("__dl"), F.explode("__toks").alias("term")
+    )
+    if terms is not None:
+        pairs = pairs.join(F.broadcast(terms), "term")
+    return pairs.groupBy("__doc", "term").agg(
         F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl")
     )
-    return _bm25_rank_from_tf(tf, qt, stats, k, k1, b, id_col)
+
+
+def _bm25_bucket(n_buckets: int) -> Column:
+    """A term's bucket — the index's partition rule, shared by the
+    writers and the probe's pruning."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets))
+
+
+def _write_bucketed(df: DataFrame, path: str, n_buckets: int, mode: str) -> None:
+    """Write a term-keyed frame partitioned by :func:`_bm25_bucket`
+    with ONE file per bucket (repartition by the partition column
+    before the write: the IVF round-10 lesson — without it every input
+    partition slivers every bucket).  The one writer of the postings
+    and the dfreq sidecar, for build (``"overwrite"``) and append."""
+    (
+        df.withColumn("bucket", _bm25_bucket(n_buckets))
+        .repartition(n_buckets, "bucket")
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
+def _write_bm25_stats(
+    docs: DataFrame, text_col: str, path: str, n_buckets: int, n_docs: int = 0, sum_dl: int = 0
+) -> dict:
+    """Add ``docs``' corpus stats to the totals ``n_docs``/``sum_dl``,
+    write them as the 1-row ``stats`` sidecar and return them as the
+    build/append result dict."""
+    batch = _corpus_stats(docs, text_col).collect()[0]
+    n_docs += int(batch["__n_docs"])
+    sum_dl += int(batch["__sum_dl"] or 0)
+    docs.sparkSession.createDataFrame(
+        [(n_docs, sum_dl, n_buckets)], "__n_docs long, __sum_dl long, __n_buckets int"
+    ).write.mode("overwrite").parquet(f"{path}/stats")
+    return {"n_docs": n_docs, "sum_dl": sum_dl, "n_buckets": n_buckets}
 
 
 def _bm25_rank_from_tf(
@@ -786,25 +833,8 @@ def bm25_write_index(
     its one bucket."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    d = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__doc"), tokens_col(F.col(text_col)).alias("__toks")
-    )
-    stats = _corpus_stats(docs, text_col).withColumn(
-        "__n_buckets", F.lit(n_buckets)
-    )
-    pairs = d.select(
-        "__doc", F.size("__toks").alias("__dl"), F.explode("__toks").alias("term")
-    )
-    postings = (
-        pairs.groupBy("__doc", "term")
-        .agg(F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-    )
-    (
-        postings.repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
+    _write_bucketed(
+        _bm25_postings(docs, id_col, text_col), f"{path}/postings", n_buckets, "overwrite"
     )
     # df sidecar (round 13): a real inverted index stores df in the
     # term dictionary, so probes never aggregate posting lists to
@@ -812,27 +842,31 @@ def bm25_write_index(
     # ADVICE r12 flagged (a stopword-class query term funnels its
     # corpus-scale posting list through one df task).  Derived by
     # reading BACK the just-written postings (posting-sized columnar
-    # scan of (term, bucket) only — no corpus re-tokenize), bucketed
+    # scan of the term column only — no corpus re-tokenize), bucketed
     # like the postings so probes prune the same way.  Rows are
     # ADDITIVE (term, df) segments: append writes batch deltas and
     # probes SUM, keeping appends O(new batch).
-    dfr = (
-        docs.sparkSession.read.parquet(f"{path}/postings")
-        .groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).alias("__df"))
+    dfr = docs.sparkSession.read.parquet(f"{path}/postings").groupBy("term").agg(
+        F.count(F.lit(1)).alias("__df")
     )
-    (
-        dfr.repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/dfreq")
-    )
-    stats.write.mode("overwrite").parquet(f"{path}/stats")
-    row = _read_bm25_stats(docs.sparkSession, path)
-    return {"n_docs": row[0], "sum_dl": row[1], "n_buckets": row[2]}
+    _write_bucketed(dfr, f"{path}/dfreq", n_buckets, "overwrite")
+    return _write_bm25_stats(docs, text_col, path, n_buckets)
 
 
-def _read_bm25_stats(spark, path: str) -> tuple:
+def _read_bm25_stats(spark, path: str) -> tuple[int, int, int]:
+    """The one layout reader of a persisted BM25 index, shared by probe
+    and append: its ``(n_docs, sum_dl, n_buckets)`` stats.  An index
+    without the ``dfreq`` term-dictionary sidecar (the layout from
+    before the sidecar existed) raises: a probe would find no df, and
+    an append would land a batch-only df segment that every later
+    probe undercounts."""
+    dfreq = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/dfreq")
+    fs = dfreq.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(dfreq):
+        raise ValueError(
+            f"bm25 index at {path} has no dfreq sidecar: rebuild the index "
+            "with bm25_write_index"
+        )
     rows = spark.read.parquet(f"{path}/stats").collect()
     if len(rows) != 1:
         raise ValueError(f"bm25 stats sidecar is torn: {len(rows)} rows")
@@ -873,7 +907,7 @@ def bm25_probe_index(
     trows = (
         qt.select("term")
         .distinct()
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
+        .withColumn("bucket", _bm25_bucket(n_buckets))
         .collect()
     )
     buckets = sorted({int(r["bucket"]) for r in trows})
@@ -945,26 +979,9 @@ def bm25_append_index(
     the committed batch's postings (recovery = rebuild the sidecars
     from the postings, which stay authoritative) — stated, not
     silent."""
-    spark = docs.sparkSession
-    n_docs, sum_dl, n_buckets = _read_bm25_stats(spark, path)
-    d = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__doc"), tokens_col(F.col(text_col)).alias("__toks")
-    )
-    batch = _corpus_stats(docs, text_col).collect()[0]
-    pairs = d.select(
-        "__doc", F.size("__toks").alias("__dl"), F.explode("__toks").alias("term")
-    )
-    postings = (
-        pairs.groupBy("__doc", "term")
-        .agg(F.count(F.lit(1)).alias("__tf"), F.first("__dl").alias("__dl"))
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-    )
-    (
-        postings.repartition(n_buckets, "bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
+    n_docs, sum_dl, n_buckets = _read_bm25_stats(docs.sparkSession, path)
+    postings = _bm25_postings(docs, id_col, text_col)
+    _write_bucketed(postings, f"{path}/postings", n_buckets, "append")
     # df sidecar delta (round 13): the batch's per-term doc counts
     # APPEND as an additive segment (probes sum segments), so the
     # existing dictionary is never read or rewritten — O(new batch),
@@ -972,20 +989,6 @@ def bm25_append_index(
     # are new (the append contract above): df adds linearly.  Cost:
     # one batch-sized re-explode (the postings lineage re-runs for
     # this tiny agg) — batch-scale, not corpus-scale.
-    (
-        postings.groupBy("bucket", "term")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .repartition(n_buckets, "bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(f"{path}/dfreq")
-    )
-    new_stats = (
-        int(batch["__n_docs"]) + n_docs,
-        int(batch["__sum_dl"] or 0) + sum_dl,
-        n_buckets,
-    )
-    spark.createDataFrame(
-        [new_stats], "__n_docs long, __sum_dl long, __n_buckets int"
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-    return {"n_docs": new_stats[0], "sum_dl": new_stats[1], "n_buckets": n_buckets}
+    dfr = postings.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
+    _write_bucketed(dfr, f"{path}/dfreq", n_buckets, "append")
+    return _write_bm25_stats(docs, text_col, path, n_buckets, n_docs, sum_dl)

@@ -1,13 +1,21 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans for representative queries → PLANS.md.
+"""Dump the formatted physical plans (``explain("formatted")``) of
+declared queries, in one of two modes.
 
-Plan-quality review artifact: for each query we record the formatted
-physical plan plus automatic checks for the properties that matter at
-100 TB — parquet filter pushdown (PushedFilters), column pruning
-(ReadSchema width), broadcast joins on dimension tables, and
-whole-stage codegen coverage.
+* ``python scripts/dump_plans.py [sf_dir]`` regenerates PLANS.md, the
+  plan-quality review: for each representative query, the AQE-final
+  plan plus automatic checks for the properties that matter at 100 TB —
+  parquet filter pushdown (PushedFilters), column pruning (ReadSchema
+  width), broadcast joins on dimension tables, and whole-stage codegen
+  coverage.
+* ``python scripts/dump_plans.py <tag> <query> [<query> ...]`` writes
+  each named query's plan, built but not executed, to
+  ``$PLAN_OUT_DIR/<query>_<tag>.txt`` — before/after evidence for a
+  plan change.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1; an ``sf_dir``
+     argument overrides it)
+     PLAN_OUT_DIR       (default plans/r13)
 """
 
 from __future__ import annotations
@@ -22,7 +30,7 @@ from etlbigdata_spark import workload  # noqa: E402
 from etlbigdata_spark.plans import audit as plan_audit  # noqa: E402
 from etlbigdata_spark.session import build_session  # noqa: E402
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # one per plan shape; the rest of the workload reuses these shapes
 PICKS = [
@@ -60,24 +68,39 @@ def checks(plan: str) -> list[str]:
     return a.lines() + [f"- WARNING: {w}" for w in a.warnings]
 
 
-def main() -> None:
-    spark = build_session(app_name="dump-plans")
+def formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def dump_queries(spark, tag: str, names: list[str]) -> None:
+    out_dir = os.environ.get("PLAN_OUT_DIR", "plans/r13")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = formatted(workload.QUERIES[name](spark, SF_DIR))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        n_ex = plan.count("Exchange")
+        print(f"{name}: {len(plan.splitlines())} lines, {n_ex} Exchange -> {path}")
+
+
+def dump_review(spark, sf_dir: str) -> None:
     lines = [
         "# PLANS — physical-plan review of representative queries",
         "",
-        f"Generated by `scripts/dump_plans.py` at `{SF_DIR}`. One query per",
+        f"Generated by `scripts/dump_plans.py` at `{sf_dir}`. One query per",
         "plan shape; automatic checks summarize pushdown / pruning /",
         "join-strategy / codegen properties, full formatted plan follows.",
         "",
     ]
     for name, why in PICKS:
-        df = workload.QUERIES[name](spark, SF_DIR)
+        df = workload.QUERIES[name](spark, sf_dir)
         # execute first so AQE finalizes the plan (join demotions, partition
         # coalescing, codegen annotations only exist on the final plan);
         # must be an action on THIS Dataset — df.write would spawn its own
         # QueryExecution and leave df's plan unfinalized
         df.collect()
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = formatted(df)
         lines.append(f"## {name}")
         lines.append(f"*{why}*")
         lines.append("")
@@ -92,6 +115,14 @@ def main() -> None:
     with open(out, "w") as f:
         f.write("\n".join(lines))
     print("wrote", out)
+
+
+def main() -> None:
+    spark = build_session(app_name="dump-plans")
+    if len(sys.argv) > 2:
+        dump_queries(spark, sys.argv[1], sys.argv[2:])
+    else:
+        dump_review(spark, sys.argv[1] if len(sys.argv) > 1 else SF_DIR)
 
 
 if __name__ == "__main__":

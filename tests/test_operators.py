@@ -1829,6 +1829,27 @@ def test_bm25_append_index_equals_rebuild(spark, tmp_path):
     ftext.release_cached()
 
 
+def test_bm25_index_without_dfreq_refuses_append_and_probe(spark, tmp_path):
+    """An index with no ``dfreq`` sidecar (the layout from before the
+    sidecar existed) must be rebuilt: an append would land a batch-only
+    df segment and every later probe would undercount df."""
+    import shutil
+
+    from etlbigdata_spark.functions import text as ftext
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    queries = spark.createDataFrame(
+        [(1, "fast table scan")], "query_id int, query_text string"
+    )
+    path = str(tmp_path / "no_dfreq")
+    ftext.bm25_write_index(docs.filter("doc_id % 3 != 0"), path, n_buckets=8)
+    shutil.rmtree(f"{path}/dfreq")
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ftext.bm25_append_index(docs.filter("doc_id % 3 == 0"), path)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ftext.bm25_probe_index(spark, path, queries, k=10)
+
+
 def test_positional_shingles_array_input_equals_text_input(spark):
     """Round-12 internals pin: duplicated_spans/positional_shingles over
     an already-tokenized array<string> column (the packed_sequences

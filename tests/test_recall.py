@@ -742,11 +742,34 @@ def test_ivf_append_index_no_rescan_and_probe_complete(emb, spark, tmp_path):
 
     # quantized index stays homogeneous across appends
     qpath = str(tmp_path / "ivf_inc_q")
-    fsim.ivf_write_index(half_a, qpath, n_centroids=8, quantize=True)
+    _, cents = fsim.ivf_assign(half_a, 8)
+    fsim.ivf_write_index(half_a, qpath, centroids=cents, quantize=True)
     fsim.ivf_append_index(half_b, qpath)
     qvecs = spark.read.parquet(f"{qpath}/vectors")
     assert qvecs.count() == emb.count()
     assert "emb_q" in qvecs.columns and "embedding" not in qvecs.columns
+    # ...and probes identically to an all-at-once build on the same cells
+    qfull = str(tmp_path / "ivf_full_q")
+    fsim.ivf_write_index(emb, qfull, centroids=cents, quantize=True)
+    key = lambda p: sorted(  # noqa: E731
+        tuple(r) for r in fsim.ivf_probe_index(
+            spark, p, queries, k=5, n_probe=3, round_to=6
+        ).collect()
+    )
+    assert key(qpath) == key(qfull) and len(key(qfull)) == 25
+
+
+def test_ivf_append_refuses_unknown_vec_col(emb, spark, tmp_path):
+    """An append whose ``vec_col`` matches neither the float layout nor
+    the SQ8 layout must raise, naming the index's vector column, instead
+    of landing a second file schema under ``vectors/``."""
+    path = str(tmp_path / "ivf_vec_col")
+    built = emb.filter(F.col("vec_id") % 2 == 0)
+    fsim.ivf_write_index(built, path, n_centroids=4)
+    batch = emb.filter(F.col("vec_id") % 2 == 1).withColumnRenamed("embedding", "vec")
+    with pytest.raises(ValueError, match="embedding"):
+        fsim.ivf_append_index(batch, path, vec_col="vec")
+    assert spark.read.parquet(f"{path}/vectors").count() == built.count()
 
 
 def test_ivf_index_stats_accounts_for_appends(emb, spark, tmp_path):
@@ -1684,7 +1707,7 @@ def test_probe_null_and_empty_query_sets_both_faces(emb, spark, tmp_path):
 def test_pq_codebook_sidecar_dense_grid_check(emb, spark, tmp_path):
     """Round-10 (ADVICE r9): a duplicate (s, j) sidecar row plus a
     missing cell passes the total-row-count check but leaves a None
-    codeword; _read_pq_codebooks must fail loudly on the torn grid."""
+    codeword; _read_pq_sidecar must fail loudly on the torn grid."""
     cb = fsim.pq_fit(emb, n_subspaces=8, n_codes=4, method="sample")
     path = str(tmp_path / "ivf_pq_torn")
     fsim.ivf_write_index(emb, path, n_centroids=4, pq=cb)
@@ -1697,7 +1720,7 @@ def test_pq_codebook_sidecar_dense_grid_check(emb, spark, tmp_path):
         torn, "s int, j int, vec array<double>, residual boolean"
     ).coalesce(1).write.mode("overwrite").parquet(side)
     with pytest.raises(ValueError, match="torn"):
-        fsim._read_pq_codebooks(spark, path)
+        fsim._read_pq_sidecar(spark, path)
 
 
 def test_ivf_pq_index_smallest_pruned_recall_and_append(emb, spark, tmp_path):
@@ -1730,11 +1753,21 @@ def test_ivf_pq_index_smallest_pruned_recall_and_append(emb, spark, tmp_path):
     # append path: frozen sidecar codebooks keep the layout homogeneous
     half_a = emb.filter(F.col("vec_id") % 2 == 0)
     half_b = emb.filter(F.col("vec_id") % 2 == 1)
-    fsim.ivf_write_index(half_a, apath, n_centroids=8, pq=cb)
+    _, cents = fsim.ivf_assign(half_a, 8)
+    fsim.ivf_write_index(half_a, apath, centroids=cents, pq=cb)
     fsim.ivf_append_index(half_b, apath)
     avecs = spark.read.parquet(f"{apath}/vectors")
     assert "pq_code" in avecs.columns and "embedding" not in avecs.columns
     assert avecs.count() == emb.count()  # append landed, coded
+    # ...and probes identically to an all-at-once build on the same cells
+    afull = str(tmp_path / "ivf_pq_full")
+    fsim.ivf_write_index(emb, afull, centroids=cents, pq=cb)
+    key = lambda p: sorted(  # noqa: E731
+        tuple(r) for r in fsim.ivf_probe_index(
+            spark, p, queries, k=5, n_probe=3, round_to=6
+        ).collect()
+    )
+    assert key(apath) == key(afull) and len(key(afull)) == 25
 
     vecs = spark.read.parquet(f"{ppath}/vectors")
     assert "pq_code" in vecs.columns and "embedding" not in vecs.columns
@@ -1782,7 +1815,7 @@ def test_ivf_pq_residual_encoding(emb, spark, tmp_path):
                      train_n=64, vec_col="__resid")
     path = str(tmp_path / "ivf_res")
     fsim.ivf_write_index(real, path, centroids=cents, pq=cb, pq_residual=True)
-    assert fsim._pq_sidecar_residual(spark, path)
+    assert fsim._read_pq_sidecar(spark, path)[1]
     vecs = spark.read.parquet(f"{path}/vectors")
     assert "pq_code" in vecs.columns and "embedding" not in vecs.columns
     queries = real.orderBy("vec_id").limit(4)
