@@ -1,8 +1,13 @@
-"""Engine facade: session + catalog + SQL entry point.
+"""Engine: the session, the catalog and the SQL entry point.
 
 Replaces the reference's Streamlit wizard (Extract → Transform → Load,
-``/root/reference/simple_etl.py:49``) with a library API.  All three
-stages are method groups here; data never leaves the JVM between ops.
+``simple_etl.py:49``) with a library API.  ``Engine`` holds what the
+package functions cannot: the ``SparkSession``, the ``Catalog`` of named
+temp views that ``sql`` and ``Pipeline`` joins resolve against, and
+method dispatch with validation (``near_dup_pairs``, ``dedup_near``,
+``similar_topk``).  Everything else is called directly from
+``functions``, ``operators``, ``sources`` and ``streaming`` — the Load
+stage is ``sources.writers`` — so data never leaves the JVM between ops.
 """
 
 from __future__ import annotations
@@ -83,29 +88,16 @@ class Engine:
         return self.catalog.get(name)
 
     # -- Load (A18-A20) -----------------------------------------------
-    def save_parquet(self, df: DataFrame, path: str, mode: str = "overwrite", **opts) -> None:
-        writers.write_parquet(df, path, mode=mode, **opts)
-
-    def save_csv(self, df: DataFrame, path: str, mode: str = "overwrite", **opts) -> None:
-        writers.write_csv(df, path, mode=mode, **opts)
-
-    def save_orc(self, df: DataFrame, path: str, mode: str = "overwrite", **opts) -> None:
-        writers.write_orc(df, path, mode=mode, **opts)
-
-    def save_jdbc(self, df: DataFrame, url: str, table: str, mode: str = "overwrite", **opts) -> None:
-        writers.write_jdbc(df, url, table, mode=mode, **opts)
-
-    def save_xml(self, df: DataFrame, path: str, **opts) -> None:
-        writers.write_xml(df, path, **opts)
-
     def compact_parquet(self, path: str, **kw) -> dict:
         """Rewrite a many-small-files parquet dir into right-sized files
         (streaming-sink hygiene) — see sources.writers.compact_parquet."""
         return writers.compact_parquet(self.spark, path, **kw)
 
     # -- Training-data pipeline (B23-B25) -----------------------------
-    # Thin dispatch over functions/*: one facade entry per family so a
-    # pipeline is writable against Engine alone.
+    # Method registries: one entry point per family that validates the
+    # method name and, for dedup, scopes the cached intermediates.  The
+    # single-function stages (exact dedup, BPE, PCA, quality gates...)
+    # are called from functions/* and operators/* directly.
 
     _NEAR_DUP = {
         "jaccard": fdedup.ngram_jaccard_pairs,        # exact n-gram Jaccard
@@ -120,16 +112,12 @@ class Engine:
         "video": fmm.video_near_dups,
     }
 
-    def dedup_exact(self, df: DataFrame, **kw) -> DataFrame:
-        """Drop exact duplicate texts, one winner per md5 group."""
-        return fdedup.exact_dedup(df, **kw)
-
     def near_dup_pairs(self, df: DataFrame, method: str = "minhash", **kw) -> DataFrame:
         """(id_a, id_b, ...) near-dup pairs; output columns beyond the
         pair key vary by method (jaccard stats, LSH distance, hamming).
 
-        Entry releases any intermediates cached by a PREVIOUS dedup call
-        (same convention as the declared workload queries), so a
+        Entry releases any intermediates cached by a PREVIOUS dedup or
+        text call (same convention as the declared workload queries), so a
         long-lived Engine holds at most one call's worth of cached
         blocks; a prior not-yet-materialized result stays correct and
         recomputes from lineage."""
@@ -200,98 +188,11 @@ class Engine:
             raise ValueError(f"method must be one of {sorted(self._TOPK)}")
         return self._TOPK[method](corpus, queries, k=k, **kw)
 
-    def quantize_embeddings(self, corpus: DataFrame, **kw) -> DataFrame:
-        """SQ8 scalar quantization of an embedding column (4–8× smaller
-        scans); search the result with similar_topk(method='sq8');
-        see functions/similarity.quantize_embeddings."""
-        return fsim.quantize_embeddings(corpus, **kw)
-
-    def cluster_embeddings(
-        self, corpus: DataFrame, k: int = 16, iters: int = 5, **kw
-    ) -> tuple[list, DataFrame, list]:
-        """Distributed Lloyd's k-means over an embedding column —
-        (centroids, corpus+centroid column, inertia history); see
-        functions/similarity.kmeans_fit.  Compose with quota_sample on
-        the centroid column for cluster-balanced diversity sampling."""
-        return fsim.kmeans_fit(corpus, k=k, iters=iters, **kw)
-
-    def build_ann_index(self, corpus: DataFrame, path: str, **kw) -> dict:
-        """Persist a centroid-partitioned IVF index (probe = partition
-        pruning on disk); see functions/similarity.ivf_write_index."""
-        return fsim.ivf_write_index(corpus, path, **kw)
-
-    def append_ann_index(self, new_batch: DataFrame, path: str, **kw) -> dict:
-        """Incrementally grow a persisted IVF index: assign only the new
-        batch against the frozen centroid sidecar and append — O(batch)
-        per day, no corpus rescan; see similarity.ivf_append_index."""
-        return fsim.ivf_append_index(new_batch, path, **kw)
-
     def probe_ann_index(self, path: str, queries: DataFrame, k: int = 10, **kw) -> DataFrame:
         """Top-k neighbors from a persisted IVF index — result-identical
         to similar_topk(method='ivf') for the same corpus/params, but
         the scan touches only the probed partitions."""
         return fsim.ivf_probe_index(self.spark, path, queries, k=k, **kw)
-
-    def gap_fill(self, df: DataFrame, key_cols: list[str], time_col: str, **kw) -> DataFrame:
-        """Complete each key's time grid; zero-fill / forward-fill."""
-        from .operators import aggregates
-
-        return aggregates.gap_fill(df, key_cols, time_col, **kw)
-
-    def interpolate(self, df: DataFrame, key_cols: list[str], time_col: str, columns: list[str], **kw) -> DataFrame:
-        """Linear interpolation between known neighbors on a filled grid."""
-        from .operators import aggregates
-
-        return aggregates.interpolate_linear(df, key_cols, time_col, columns, **kw)
-
-    def histogram(self, df: DataFrame, column: str, lo: float, hi: float, n_bins: int) -> DataFrame:
-        """Equi-width histogram in one aggregate pass."""
-        from .operators import sampling
-
-        return sampling.histogram(df, column, lo, hi, n_bins)
-
-    def drift_report(self, reference: DataFrame, current: DataFrame, column: str,
-                     lo: float, hi: float, **kw) -> DataFrame:
-        """PSI distribution-drift report between two snapshots — see
-        operators.quality.psi_report."""
-        from .operators import quality as dq
-
-        return dq.psi_report(reference, current, column, lo, hi, **kw)
-
-    def flag_outliers(self, df: DataFrame, column: str, by: list[str], **kw) -> DataFrame:
-        """Per-group Tukey IQR outlier flags (exact percentiles)."""
-        from .operators import quality
-
-        return quality.flag_outliers(df, column, by, **kw)
-
-    def scd2_history(self, df: DataFrame, keys: list[str], ts_col: str, attrs: list[str], **kw) -> DataFrame:
-        """CDC change stream → SCD type-2 validity intervals (see
-        operators.cleaning.scd2_history; streaming twin:
-        streaming/ops.stateful_scd2)."""
-        from .operators import cleaning
-
-        return cleaning.scd2_history(df, keys, ts_col, attrs, **kw)
-
-    def scd2_join(self, facts: DataFrame, history: DataFrame, on, fact_ts: str, **kw) -> DataFrame:
-        """Point-in-time dimension join against an SCD2 history (see
-        operators.joins.scd2_join) — the consumption side of
-        :meth:`scd2_history`."""
-        from .operators import joins
-
-        return joins.scd2_join(facts, history, on, fact_ts, **kw)
-
-    def asof_self_join(self, df: DataFrame, on, ts: str, left_pred, right_pred,
-                       payload_cols, **kw) -> DataFrame:
-        """As-of join of two filtered views of the same frame in ONE scan
-        (clickstream attribution; see operators.joins.asof_self_join)."""
-        from .operators import joins
-
-        return joins.asof_self_join(df, on, ts, left_pred, right_pred, payload_cols, **kw)
-
-    def decontaminate(self, corpus: DataFrame, benchmark: DataFrame, **kw) -> DataFrame:
-        """Drop benchmark-contaminated docs (GPT-3-style n-gram
-        decontamination, applied) — see functions.corpus.decontaminate."""
-        return fcorpus.decontaminate(corpus, benchmark, **kw)
 
     def mix_corpus(
         self,
@@ -311,175 +212,13 @@ class Engine:
             rates = fcorpus.temperature_rates(df, group_col=group_col, alpha=alpha)
         return fcorpus.mixture_sample(df, rates, group_col=group_col, **kw)
 
-    def split_corpus(self, df: DataFrame, **kw) -> DataFrame:
-        """Content-addressed train/val/test assignment —
-        corpus.hash_split (reshard-stable, RNG-free)."""
-        return fcorpus.hash_split(df, **kw)
-
-    def pack_shards(self, df: DataFrame, **kw) -> DataFrame:
-        """Token-budget training shards (md5 groups + bounded cumsum)."""
-        return fcorpus.pack_shards(df, **kw)
-
-    def audit_plan(self, df: DataFrame):
-        """Scale-relevant plan properties (pushdown, pruning, join
-        strategies, codegen, exchanges) — see plans.audit.PlanAudit."""
-        from .plans import audit as plan_audit
-
-        return plan_audit.audit(df)
-
-    def lint_plan(self, df: DataFrame, allow_hofs: bool = False) -> list[str]:
-        """Plan warnings only (cartesian/NL joins, missing pushdown,
-        unpruned scans, interpreted HOF lambdas); empty list = nothing
-        suspicious. ``allow_hofs=True`` accepts the deliberate HOF
-        trades (streaming projections, tiny bounded arrays — see
-        plans.audit.lint)."""
-        from .plans import audit as plan_audit
-
-        return plan_audit.lint(df, allow_hofs=allow_hofs)
-
-    def sessionize(
-        self, df: DataFrame, key_cols: list[str], ts_col: str, gap_seconds: int = 1800, **kw
-    ) -> DataFrame:
-        """Gap-based session_idx assignment (one shuffle; per-session
-        aggregates reuse the partitioning)."""
-        from .operators import aggregates
-
-        return aggregates.sessionize(df, key_cols, ts_col, gap_seconds, **kw)
-
-    def check_quality(self, df: DataFrame, rules: list) -> DataFrame:
-        """(rule, n_violations, passed) report — one aggregate pass; see
-        operators.quality for the rule helpers."""
-        from .operators import quality
-
-        return quality.run_checks(df, rules)
-
-    def assert_quality(self, df: DataFrame, rules: list) -> None:
-        """Gate form of :meth:`check_quality`: raises listing failures."""
-        from .operators import quality
-
-        quality.assert_checks(df, rules)
-
-    def save_zordered(self, df: DataFrame, path: str, cols: list[str], **kw) -> None:
-        """Multi-dimensional clustered parquet layout (Morton z-order) —
-        per-file min/max stays narrow on every clustered column."""
-        writers.write_zordered(df, path, cols, **kw)
-
-    def dedup_index(self, df: DataFrame, **kw) -> DataFrame:
-        """Persistable (id, sig) MinHash signature index — save with
-        :meth:`save_parquet`, dedup later batches against it with
-        :meth:`dedup_incremental` without re-reading the corpus."""
-        return fdedup.minhash_signatures(df, **kw)
-
-    def dedup_incremental(self, batch: DataFrame, index: DataFrame, **kw) -> DataFrame:
-        """(id_corpus, id_batch, jaccard_dist) candidates for a new batch
-        against a stored signature index (batch side broadcast; the
-        index never shuffles)."""
-        return fdedup.incremental_minhash_pairs(batch, index, **kw)
-
-    def rollup_sink(self, path: str, keys: list[str], **kw):
-        """foreachBatch sink maintaining a parquet continuous aggregate
-        (idempotent absolute-value upsert) — see
-        streaming.ops.rollup_merge_sink."""
-        from .streaming import ops as stops
-
-        return stops.rollup_merge_sink(path, keys, **kw)
-
-    def mine_hard_negatives(
-        self, corpus: DataFrame, queries: DataFrame, k: int = 10, **kw
-    ) -> DataFrame:
-        """Top-k cross-label neighbors per query (retriever training) —
-        see functions.similarity.hard_negatives."""
-        return fsim.hard_negatives(corpus, queries, k=k, **kw)
-
-    def prune_data(self, corpus: DataFrame, frac: float = 0.25, **kw) -> DataFrame:
-        """Cluster-aware data pruning (drop the most prototypical
-        vectors per cell) — see functions.similarity.prune_prototypes."""
-        return fsim.prune_prototypes(corpus, frac=frac, **kw)
-
-    def fit_pca(self, corpus: DataFrame, k: int = 8, **kw) -> dict:
-        """One-pass distributed PCA fit (eager) — see
-        functions.similarity.pca_fit."""
-        return fsim.pca_fit(corpus, k=k, **kw)
-
-    def project_pca(self, df: DataFrame, model: dict, **kw) -> DataFrame:
-        """Codegen projection onto fitted components — see
-        functions.similarity.pca_transform."""
-        return fsim.pca_transform(df, model, **kw)
-
-    def train_tokenizer(self, df: DataFrame, **kw) -> list:
-        """Train BPE merges: distributed word count + bounded-vocab
-        merge loop — see functions.bpe.bpe_learn.  Persist with
-        functions.bpe.merges_df + save_parquet."""
-        from .functions import bpe as fbpe
-
-        return fbpe.bpe_learn(df, **kw)
-
-    def tokenize(self, df: DataFrame, merges: list, **kw) -> DataFrame:
-        """Apply trained BPE merges (adds a subword-array column) — see
-        functions.bpe.bpe_encode."""
-        from .functions import bpe as fbpe
-
-        return fbpe.bpe_encode(df, merges, **kw)
-
-    def semantic_dedup(self, corpus: DataFrame, **kw) -> DataFrame:
-        """SemDeDup-style embedding dedup: cluster-partitioned within-cell
-        cosine pairs, keep-lowest-id survivors — see
-        functions.similarity.semantic_dedup."""
-        return fsim.semantic_dedup(corpus, **kw)
-
     def duplicated_spans(self, df: DataFrame, **kw) -> DataFrame:
         """Cross-document duplicated-span detection (exact-substring
         dedup mode) — see functions.dedup.duplicated_spans.  Entry
-        releases prior dedup caches (the near_dup_pairs convention:
+        releases prior scoped caches (the near_dup_pairs convention:
         this op persist-scopes its positional-shingle table)."""
         fdedup.release_cached()
         return fdedup.duplicated_spans(df, **kw)
-
-    def cut_spans(self, df: DataFrame, spans: DataFrame, **kw) -> DataFrame:
-        """Remove reported spans from the text (the actionable half of
-        duplicated_spans) — see functions.dedup.cut_spans."""
-        return fdedup.cut_spans(df, spans, **kw)
-
-    def merge(self, target: DataFrame, source: DataFrame, keys: list[str], **kw) -> DataFrame:
-        """SQL MERGE semantics (update/insert/keep/delete) as one
-        full-outer join — see operators.merge.merge_upsert."""
-        from .operators import merge as fmerge
-
-        return fmerge.merge_upsert(target, source, keys, **kw)
-
-    def diff(self, left: DataFrame, right: DataFrame, keys: list[str], **kw) -> DataFrame:
-        """Classify keys across two snapshots (only_left/only_right/
-        changed/same) — see operators.merge.diff_tables."""
-        from .operators import merge as fmerge
-
-        return fmerge.diff_tables(left, right, keys, **kw)
-
-    def keep_latest(self, df: DataFrame, keys: list[str], order_cols: list) -> DataFrame:
-        """CDC compaction: one deterministic winner per key."""
-        from .operators import cleaning
-
-        return cleaning.keep_latest(df, keys, order_cols)
-
-    def fuzzy_pairs(self, df: DataFrame, text_col: str, max_distance: int = 2) -> DataFrame:
-        """Levenshtein-≤k value pairs (typo dedup), length-band blocked."""
-        from .operators import joins
-
-        return joins.fuzzy_self_pairs(df, text_col, max_distance)
-
-    def top_terms(self, df: DataFrame, **kw) -> DataFrame:
-        """Corpus TF-IDF top terms per group (B25) — see
-        functions.text.tfidf_top_terms."""
-        return ftext.tfidf_top_terms(df, **kw)
-
-    def repetition_stats(self, df: DataFrame, **kw) -> DataFrame:
-        """Gopher-style within-doc repetition filters (B25) — see
-        functions.text.repetition_stats."""
-        return ftext.repetition_stats(df, **kw)
-
-    def surprisal(self, df: DataFrame, **kw) -> DataFrame:
-        """Corpus-relative unigram surprisal quality score (B25, round
-        6) — see functions.text.unigram_surprisal."""
-        return ftext.unigram_surprisal(df, **kw)
 
     def enrich_text(self, df: DataFrame, text_col: str = "text") -> DataFrame:
         """Stats + quality score + language-ID + fingerprint in one
@@ -520,21 +259,6 @@ class Engine:
         return self.spark.table(name)
 
     # -- Scale tooling (skew + co-location) ---------------------------
-    def key_skew(self, df: DataFrame, keys: list[str], top_n: int = 10) -> DataFrame:
-        return opscale.top_frequent_keys(df, keys, top_n)
-
-    def salted_agg(self, df: DataFrame, keys: list[str], aggs, salt_buckets: int = 32) -> DataFrame:
-        return opscale.salted_group_agg(df, keys, aggs, salt_buckets)
-
-    def salted_join(
-        self, large: DataFrame, small: DataFrame, keys: list[str],
-        salt_buckets: int = 16, how: str = "inner",
-    ) -> DataFrame:
-        return opscale.salted_skew_join(large, small, keys, salt_buckets, how)
-
-    def save_bucketed(self, df: DataFrame, table: str, bucket_keys: list[str], **kw) -> None:
-        opscale.write_bucketed(df, table, bucket_keys, **kw)
-
     def join_bucketed(
         self, left_table: str, right_table: str, keys: list[str], how: str = "inner"
     ) -> DataFrame:

@@ -20,17 +20,20 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import rebalance_for_expansion, tokens_col
+from .text import (  # noqa: F401  (_LIVE_CACHE, release_cached: re-exported)
+    _LIVE_CACHE,
+    _persist_scoped,
+    rebalance_for_expansion,
+    release_cached,
+    tokens_col,
+)
 
 # -- cache scoping ----------------------------------------------------
 # The pair-finding functions persist a fan-out intermediate (the shingle
-# or signature table feeds 2-3 consumers of the same plan). A long-lived
-# session calling them repeatedly must not accumulate cached blocks, so
-# every persist is registered here and released by release_cached() —
-# called at the top of each declared workload query and by bench/tests.
-# Unpersisting is always safe: a still-live DataFrame recomputes from
-# lineage.
-_LIVE_CACHE: list[DataFrame] = []
+# or signature table feeds 2-3 consumers of the same plan).  They use
+# functions/text's one registry, so release_cached() here and in text
+# frees the persists of both modules (and of corpus/multimodal, which
+# import _persist_scoped from here).
 
 # Shuffled-hash build sizing for the inverted-index self-join (round 9,
 # see _shared_counts_and_sizes): ~1.5 M narrow (id, hash) rows is a
@@ -39,20 +42,6 @@ _LIVE_CACHE: list[DataFrame] = []
 # tests exercise the scaling regimes without multi-GB fixtures.
 _SHJ_BUILD_ROWS = 1_500_000
 _SHJ_MAX_PARTS = 65_536
-
-
-def _persist_scoped(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _LIVE_CACHE.append(df)
-    return df
-
-
-def release_cached() -> None:
-    """Unpersist every intermediate cached by this module's functions."""
-    while _LIVE_CACHE:
-        _LIVE_CACHE.pop().unpersist()
-
-
 
 
 # -- exact ------------------------------------------------------------
@@ -832,7 +821,6 @@ def simhash_near_dups(
     n_blocks: int = 6,
     band_bits: int = 16,
     counter_bits: "int | str" = "auto",
-    candidate_join: str = "sort_merge",
 ) -> DataFrame:
     """B23 — near-dup pairs by SimHash Hamming distance ≤ max_hamming.
     EAGER with ``counter_bits="auto"`` (the default): plan construction
@@ -869,16 +857,15 @@ def simhash_near_dups(
     the right trade below ~10⁴ docs where its 4× smaller fan-out beats
     junk-pair cost.
 
-    ``candidate_join="shuffle_hash"`` hints the banded self-join like
-    d02's shingle join.  Measured at sf1 (round 6, alternating A/B in
-    BOTH orders): the difference is inside warm-up drift (±0.7 s) —
-    unlike d02 there are no multi-million-row sorts to eliminate (the
-    banded table is 20n rows, not hundreds of shingles per doc), so
-    sort-merge stays the default and keeps the spill-safe path.  A
-    reduced-table variant (n_blocks=5 → 10 tables) was also measured:
-    ~6%% local win that INVERTS at corpus scale because key width drops
-    32→25.6 bits and junk collisions scale n²·tables/2^width — the
-    block-count default optimizes the 100 TB point, not sf1.
+    The banded self-join is sort-merge (spill-safe).  A shuffled-hash
+    hint like d02's shingle join measured inside warm-up drift at sf1
+    (round 6, alternating A/B in BOTH orders, ±0.7 s) — unlike d02
+    there are no multi-million-row sorts to eliminate (the banded table
+    is 20n rows, not hundreds of shingles per doc).  A reduced-table
+    variant (n_blocks=5 → 10 tables) was also measured: ~6%% local win
+    that INVERTS at corpus scale because key width drops 32→25.6 bits
+    and junk collisions scale n²·tables/2^width — the block-count
+    default optimizes the 100 TB point, not sf1.
 
     Features are word ``shingle_n``-gram shingles, not unigram tokens: on
     a shared-vocabulary corpus unigram signatures cluster (every doc uses
@@ -912,7 +899,7 @@ def simhash_near_dups(
 
     return hamming_pairs_64(
         sig, max_hamming=max_hamming, scheme=scheme, n_blocks=n_blocks,
-        band_bits=band_bits, candidate_join=candidate_join,
+        band_bits=band_bits,
     )
 
 
@@ -922,7 +909,6 @@ def hamming_pairs_64(
     scheme: str = "blocks",
     n_blocks: int = 6,
     band_bits: int = 16,
-    candidate_join: str = "sort_merge",
 ) -> DataFrame:
     """EXACT Hamming-distance-≤-k pairs over any ``(id, sig)`` table of
     64-bit signatures — the candidate-generation + popcount core shared
@@ -967,10 +953,7 @@ def hamming_pairs_64(
         "id", "sig", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
     )
     a = banded.alias("a")
-    # opt-in only: a shuffled-hash build must fit execution memory (see
-    # the sized repartition in _shared_counts_and_sizes); the spill-safe
-    # sort_merge default is the scale-safe face here
-    b = (banded.hint("shuffle_hash") if candidate_join == "shuffle_hash" else banded).alias("b")
+    b = banded.alias("b")
     return (
         a.join(
             b,

@@ -25,9 +25,12 @@ _LANG_STOPWORDS: dict[str, list[str]] = {
 
 TOKEN_PATTERN = r"[A-Za-z0-9_]+"
 
-# Scoped persists (same convention as functions/dedup): registered here,
-# released by release_cached() — callers that build a new corpus-level
-# query release the previous one's intermediates first.
+# Scoped persists: the one registry for the package's corpus-level
+# intermediates (functions/dedup, corpus and multimodal persist through
+# it too), released by release_cached() — called at the top of each
+# declared workload query and by bench/tests, so a long-lived session
+# does not accumulate cached blocks.  Unpersisting is always safe: a
+# still-live DataFrame recomputes from lineage.
 _LIVE_CACHE: list[DataFrame] = []
 
 
@@ -38,7 +41,7 @@ def _persist_scoped(df: DataFrame) -> DataFrame:
 
 
 def release_cached() -> None:
-    """Unpersist every intermediate cached by this module's functions."""
+    """Unpersist every intermediate cached through :func:`_persist_scoped`."""
     while _LIVE_CACHE:
         _LIVE_CACHE.pop().unpersist()
 
@@ -366,7 +369,6 @@ def unigram_surprisal(
     id_col: str = "doc_id",
     text_col: str = "text",
     smoothing: float = 0.5,
-    broadcast_vocab: "bool | str" = "auto",
 ) -> DataFrame:
     """B25 — corpus-relative unigram surprisal quality score (round 6):
     per document, the mean ``-log2 p(token)`` where ``p`` is the
@@ -399,12 +401,11 @@ def unigram_surprisal(
     already being read.  Corpus totals ride in as a broadcast 1-row
     cross join.  The vocab-keyed join shuffles 16-byte rows — at
     production vocab sizes (~10⁷ distinct) the scored vocab table is
-    ~100 MB total, far below any per-partition bound.  With
-    ``broadcast_vocab`` (default "auto": the probe is now an EXACT
-    ``freqs.count()`` — vocab-sized, and it doubles as the persist
-    materialization) the scored vocab BROADCASTS instead, so the full
-    token stream never shuffles by token (round-6 measurement: the
-    broadcast join 2.76 → 1.95 s).
+    ~100 MB total, far below any per-partition bound.  EAGER: an exact
+    ``freqs.count()`` probe (vocab-sized, and it doubles as the persist
+    materialization) decides whether the scored vocab BROADCASTS
+    instead, so the full token stream never shuffles by token (round-6
+    measurement: the broadcast join 2.76 → 1.95 s).
     Documents with zero tokens produce no output row (no distribution
     to score them under); left-join downstream if they must be kept.
     """
@@ -416,15 +417,13 @@ def unigram_surprisal(
     freqs = _persist_scoped(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    if broadcast_vocab == "auto":
-        # EAGER probe: exact vocab count off the persisted freqs table
-        # (one vocab-sized job that also materializes the cache every
-        # later consumer reads). ~2M distinct ≈ 32 MB — comfortably
-        # under executor broadcast budgets; natural-language vocab
-        # passes at any corpus size, adversarial random-string corpora
-        # fall back to the shuffle join. Pass True/False to skip the
-        # probe when the corpus is known.
-        broadcast_vocab = freqs.count() < 2_000_000
+    # EAGER probe: exact vocab count off the persisted freqs table (one
+    # vocab-sized job that also materializes the cache every later
+    # consumer reads). ~2M distinct ≈ 32 MB — comfortably under executor
+    # broadcast budgets; natural-language vocab passes at any corpus
+    # size, adversarial random-string corpora fall back to the shuffle
+    # join.
+    broadcast_vocab = freqs.count() < 2_000_000
     stats = freqs.agg(
         F.sum("__cnt").alias("__total"), F.count(F.lit(1)).alias("__vocab")
     )

@@ -141,7 +141,12 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType | None = None
 
 # Cached parses registered by read_json_with_quarantine (the corrupt-
 # column-only restriction forces a cache); released by
-# release_quarantine_caches() — the dedup/text module convention.
+# release_quarantine_caches().  Deliberately NOT functions/text's
+# scoped-persist registry: those caches are safe to drop at any time
+# (lineage recomputes them), but a quarantine split that reads only the
+# corrupt column raises QUERY_ONLY_CORRUPT_RECORD_COLUMN once it
+# re-plans against the raw scan — so an unrelated query's
+# release_cached() must never unpersist these.
 _QUARANTINE_CACHE: list[DataFrame] = []
 
 

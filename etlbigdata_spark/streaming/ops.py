@@ -491,71 +491,6 @@ def stateful_scd2(
     )
 
 
-def stateful_running_agg_tws(
-    df: DataFrame, key_col: str, value_col: str, ts_col: str, watermark: str = "10 minutes"
-):
-    """B22 via ``transformWithStateInPandas`` — Spark 4's successor to
-    ``applyInPandasWithState`` (same per-key running sum/count as
-    :func:`stateful_running_agg`, so the two APIs are cross-checkable).
-    Differences that matter at scale: typed state handles (ValueState /
-    ListState / MapState) instead of one opaque tuple, first-class
-    timers, and TTL support on state — the API Spark is evolving for
-    arbitrary stateful pipelines.  fsum keeps the double sum
-    exactly-rounded for oracle comparison.
-
-    VERIFICATION GATE (documented, not hidden): the TWS state server
-    speaks protobuf between the JVM and the Python driver worker, and
-    this container ships NO ``google.protobuf`` — the query plan builds
-    but the first micro-batch dies in worker init (ImportError).  The
-    cross-checkable equivalence test therefore skips unless protobuf is
-    importable; the applyInPandasWithState twin (st06) carries the B22
-    oracle proof in this environment."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("running_sum", T.DoubleType()),
-            T.StructField("running_count", T.LongType()),
-        ]
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            state_schema = T.StructType(
-                [T.StructField("s", T.DoubleType()), T.StructField("c", T.LongType())]
-            )
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import math
-
-            import pandas as pd
-
-            s, c = self._agg.get() if self._agg.exists() else (0.0, 0)
-            for pdf in rows:
-                s = math.fsum([s, *pdf[value_col].astype(float).tolist()])
-                c += int(len(pdf))
-            self._agg.update((s, c))
-            yield pd.DataFrame(
-                {"key": [key[0]], "running_sum": [s], "running_count": [c]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col))
-        .transformWithStateInPandas(
-            RunningAgg(), outputStructType=out_schema, outputMode="Update", timeMode="None"
-        )
-    )
-
-
 # -- state-store backend (B22 at scale) -------------------------------
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

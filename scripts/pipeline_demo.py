@@ -1,9 +1,11 @@
 #!/usr/bin/env python
-"""End-to-end training-data pipeline against the Engine facade alone —
-the "switch from the reference" artifact: load → exact dedup → near-dup
-dedup (MinHash verified, keep the LONGEST duplicate) → text enrichment →
-quality filter → epoch-weighted mixing → chunking → token budget →
-similarity probe (exact + PQ), every stage lazy until its action.
+"""End-to-end training-data pipeline — the "switch from the reference"
+artifact: load → exact dedup → near-dup dedup (MinHash verified, keep
+the LONGEST duplicate) → text enrichment → quality filter →
+epoch-weighted mixing → chunking → token budget → similarity probe
+(exact + PQ), every stage lazy until its action.  The Engine holds the
+session, the catalog and the method dispatch (near-dup, top-k); every
+other stage calls the package functions directly.
 
 Usage: python scripts/pipeline_demo.py [sf_dir]
 Prints one JSON line of per-stage counts.
@@ -20,6 +22,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etlbigdata_spark.engine import Engine  # noqa: E402
+from etlbigdata_spark.functions import corpus as fcorpus  # noqa: E402
+from etlbigdata_spark.functions import dedup as fdedup  # noqa: E402
+from etlbigdata_spark.functions import similarity as fsim  # noqa: E402
+from etlbigdata_spark.operators import merge as fmerge  # noqa: E402
+from etlbigdata_spark.operators import quality as dq  # noqa: E402
+from etlbigdata_spark.plans import audit as plan_audit  # noqa: E402
+from etlbigdata_spark.sources import writers  # noqa: E402
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +40,7 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
     stages: dict[str, int] = {"input": docs.count()}
 
     # 1. exact dedup (md5 winner per text)
-    docs = eng.dedup_exact(docs, text_col="text", id_col="doc_id")
+    docs = fdedup.exact_dedup(docs, text_col="text", id_col="doc_id")
     stages["after_exact_dedup"] = docs.count()
 
     # 2. near-dup dedup: verified-MinHash pairs → components → keep the
@@ -52,8 +61,6 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
 
     # 4b. (round 9) epoch-weighted mixing: up-sample the smallest source
     # to 2.5 epochs, keep the rest at 1 — the training-mix recipe step
-    from etlbigdata_spark.functions import corpus as fcorpus
-
     smallest = (
         kept.groupBy("source").count().orderBy("count", "source").first()["source"]
     )
@@ -74,9 +81,7 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
     stages["similarity_rows"] = eng.similar_topk(emb, queries, k=3, round_to=6).count()
 
     # 6b. (round 9) the same probe through PQ codes (32 bytes/vector):
-    # fit → encode → LUT-ADC search, all via the facade method registry
-    from etlbigdata_spark.functions import similarity as fsim
-
+    # fit → encode → LUT-ADC search, the search via the Engine's registry
     cb = fsim.pq_fit(emb, n_subspaces=32, n_codes=64, method="kmeans", train_n=512)
     coded = fsim.pq_encode(emb, cb, assign="blas")
     stages["pq_similarity_rows"] = eng.similar_topk(
@@ -84,9 +89,7 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
     ).count()
 
     # 7. (round 4) data-quality gate on the surviving corpus
-    from etlbigdata_spark.operators import quality as dq
-
-    eng.assert_quality(
+    dq.assert_checks(
         kept,
         [dq.not_null("doc_id"), dq.unique("doc_id"), dq.in_range("quality", 0.0, 1.0)],
     )
@@ -97,13 +100,13 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
     import tempfile
 
     with tempfile.TemporaryDirectory() as td:
-        eng.save_parquet(eng.dedup_index(kept, id_col="doc_id", text_col="text"), td)
+        writers.write_parquet(fdedup.minhash_signatures(kept, id_col="doc_id", text_col="text"), td)
         index = eng.load_parquet(td)
         batch = kept.limit(20).select(
             (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
         )
-        inc = eng.dedup_incremental(batch, index, id_col="doc_id", text_col="text",
-                                    jaccard_distance_threshold=0.1)
+        inc = fdedup.incremental_minhash_pairs(batch, index, id_col="doc_id", text_col="text",
+                                               jaccard_distance_threshold=0.1)
         # every batch doc is a copy of a corpus doc → each must re-find
         # its source at distance 0
         stages["incremental_hits"] = inc.filter(F.col("jaccard_dist") == 0.0).count()
@@ -111,18 +114,18 @@ def main(sf_dir: str = DEFAULT_SF_DIR) -> dict:
 
     # 9. (round 4) CDC upsert: merge a price-corrected delta back in
     delta = kept.limit(5).withColumn("quality", F.lit(1.0))
-    merged = eng.merge(kept, delta, ["doc_id"])
+    merged = fmerge.merge_upsert(kept, delta, ["doc_id"])
     stages["after_merge"] = merged.count()
 
     # 10. (round 4) plan lint: the final pipeline plan must raise no
     # scale warnings (cartesian/NL joins, missing pushdown, wide scans).
     # allow_hofs: enrich_text's language_id sorts a 5-entry score map
     # per row — the bounded-tiny-array case the HOF rule whitelists
-    stages["plan_warnings"] = len(eng.lint_plan(merged, allow_hofs=True))
+    stages["plan_warnings"] = len(plan_audit.lint(merged, allow_hofs=True))
     assert stages["plan_warnings"] == 0
     # the HOF rule itself must still see the bounded lambdas (proves the
     # lint ran against the real plan, not a trivially empty one)
-    assert any(w.startswith("[hof]") for w in eng.lint_plan(merged))
+    assert any(w.startswith("[hof]") for w in plan_audit.lint(merged))
 
     return stages
 

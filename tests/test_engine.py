@@ -1,6 +1,7 @@
-"""Engine facade: the pipeline/scale surface must be writable against
-Engine alone — each family method delegates to the tested functions and
-returns the same results."""
+"""Engine: the methods that hold the session or the catalog, or that add
+behaviour over the package functions (method dispatch with validation,
+enrichment chain, streaming drain) — each returns the same results as
+the functions it dispatches to."""
 
 from __future__ import annotations
 
@@ -26,10 +27,6 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return workload.load(spark, sf_dir, "embeddings")
-
-
-def test_dedup_exact_matches_function(eng, docs):
-    assert eng.dedup_exact(docs).count() == fdedup.exact_dedup(docs).count()
 
 
 def test_near_dup_pairs_dispatch(eng, docs):
@@ -87,17 +84,6 @@ def test_enrich_text_adds_all_columns(eng, docs):
     assert out.count() == 50
 
 
-def test_scale_facade_delegates(eng, spark):
-    df = spark.range(100).select((F.col("id") % 3).alias("k"), F.col("id").alias("v"))
-    top = eng.key_skew(df, ["k"], top_n=1).collect()
-    assert top[0]["n_rows"] >= 33
-    agg = {tuple(r) for r in eng.salted_agg(df, ["k"], [("v", "sum", "s")], salt_buckets=4).collect()}
-    plain = {tuple(r) for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()}
-    assert agg == plain
-    dim = spark.range(3).select(F.col("id").alias("k"), F.lit("x").alias("w"))
-    assert eng.salted_join(df, dim, ["k"]).count() == 100
-
-
 def test_stream_facade_matches_batch(eng, spark, sf_dir, tmp_path):
     """Engine.stream_files → transform → stream_drain equals the same
     aggregation run in batch."""
@@ -126,7 +112,7 @@ def test_stream_facade_matches_batch(eng, spark, sf_dir, tmp_path):
 
 
 def test_pipeline_demo_runs(spark, sf_dir):
-    """The end-to-end facade pipeline (scripts/pipeline_demo.py) runs and
+    """The end-to-end pipeline (scripts/pipeline_demo.py) runs and
     its stage counts are coherent: monotone non-increasing through the
     dedup/filter stages, non-trivial output."""
     import scripts.pipeline_demo as demo
@@ -136,7 +122,7 @@ def test_pipeline_demo_runs(spark, sf_dir):
     assert stages["after_near_dedup"] >= stages["after_quality_filter"] > 0
     assert stages["total_tokens"] > 0 and stages["similarity_rows"] > 0
     # round-9 stages: up-sampling grows the mix, chunking fans out, and
-    # the PQ probe returns a full top-k through the facade registry
+    # the PQ probe returns a full top-k through the Engine's registry
     assert stages["after_epoch_mix"] > stages["after_quality_filter"]
     assert stages["n_chunks"] >= stages["after_epoch_mix"]
     assert stages["pq_similarity_rows"] == stages["similarity_rows"]
@@ -190,14 +176,13 @@ def test_sql_function_library_matches_dataframe_twins(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_cluster_embeddings_diversity_sampling(eng, emb):
-    """The cluster-balanced diversity-sampling composition the facade
-    docstring promises: kmeans assignment -> quota_sample(centroid)
-    yields exactly k deterministic picks per non-small cluster, and the
-    facade's fit matches kmeans_fit (same deterministic init)."""
+def test_cluster_embeddings_diversity_sampling(emb):
+    """Cluster-balanced diversity sampling: kmeans_fit assignment ->
+    quota_sample(centroid) yields exactly k deterministic picks per
+    non-small cluster."""
     from etlbigdata_spark.functions import corpus as fcorpus
 
-    cents, assigned, hist = eng.cluster_embeddings(emb, k=4, iters=2)
+    cents, assigned, hist = fsim.kmeans_fit(emb, k=4, iters=2)
     assert len(cents) == 4 and len(hist) == 2
     picked = fcorpus.quota_sample(assigned, "centroid", k=5, id_col="vec_id")
     sizes = {r["centroid"]: r["n"] for r in

@@ -29,7 +29,7 @@ def _sample(spark):
 def test_parquet_roundtrip(engine, tmp_path):
     df = _sample(engine.spark)
     path = str(tmp_path / "t.parquet")
-    engine.save_parquet(df, path)
+    writers.write_parquet(df, path)
     back = engine.load_parquet(path, name="rt_parquet")
     assert back.schema == df.schema
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
@@ -50,7 +50,7 @@ def test_csv_roundtrip_rfc4180(engine, tmp_path):
     simple_etl.py:384 joins with ',' unquoted)."""
     df = _sample(engine.spark)
     path = str(tmp_path / "t.csv")
-    engine.save_csv(df, path)
+    writers.write_csv(df, path)
     back = readers.read_csv(engine.spark, path, schema=df.schema)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
 
@@ -58,7 +58,7 @@ def test_csv_roundtrip_rfc4180(engine, tmp_path):
 def test_csv_all_strings_fallback(engine, tmp_path):
     df = _sample(engine.spark)
     path = str(tmp_path / "s.csv")
-    engine.save_csv(df, path)
+    writers.write_csv(df, path)
     back = readers.read_csv(engine.spark, path, all_strings=True)
     assert all(t == "string" for _, t in back.dtypes)  # ref's dirty-data mode (simple_etl.py:168-169)
 

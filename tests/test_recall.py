@@ -164,6 +164,22 @@ def test_release_cached_drops_all_blocks(docs, spark):
     assert not leaked, f"RDD ids {leaked} still cached after release_cached()"
 
 
+def test_release_cached_is_one_registry_across_text_and_dedup(docs):
+    """functions.text and functions.dedup share one scoped-persist
+    registry: a dedup query's entry release (fdedup.release_cached())
+    also frees what a text query persisted, such as t14's vocab table."""
+    from pyspark import StorageLevel
+
+    from etlbigdata_spark.functions import text as ftext
+
+    fdedup.release_cached()
+    ftext.unigram_surprisal(docs).count()
+    frames = list(ftext._LIVE_CACHE)
+    assert frames, "unigram_surprisal expected to persist its vocab table"
+    fdedup.release_cached()
+    assert [f.storageLevel for f in frames] == [StorageLevel.NONE] * len(frames)
+
+
 def test_connected_components_on_known_graph(spark):
     """Min-label propagation must resolve a chain (1-2-3), an isolated
     pair (5-6), and leave unpaired docs out of the label table."""

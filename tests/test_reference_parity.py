@@ -16,6 +16,10 @@ import datetime as dt
 import pytest
 
 from etlbigdata_spark.engine import Engine
+from etlbigdata_spark.functions import bpe as fbpe
+from etlbigdata_spark.functions import dedup as fdedup
+from etlbigdata_spark.functions import similarity as fsim
+from etlbigdata_spark.functions import text as ftext
 from etlbigdata_spark.plans.pipeline import Pipeline
 
 
@@ -185,10 +189,11 @@ def test_reference_user_full_journey_round5(engine, tmp_path):
 
 
 def test_llm_curation_journey_round6(engine, tmp_path):
-    """Round-6 surface end-to-end through the Engine facade, as a
-    corpus-curation user: containment dedup drops a doc that verbatim-
-    contains another, unigram surprisal flags the gibberish doc, and a
-    persisted IVF index reproduces the in-memory ANN probe."""
+    """Round-6 surface end-to-end through the Engine's dispatch and the
+    package functions, as a corpus-curation user: containment dedup
+    drops a doc that verbatim-contains another, unigram surprisal flags
+    the gibberish doc, and a persisted IVF index reproduces the
+    in-memory ANN probe."""
     from pyspark.sql import functions as F
 
     base = " ".join(f"tok{i} word{i} item{i}" for i in range(30))
@@ -205,7 +210,7 @@ def test_llm_curation_journey_round6(engine, tmp_path):
     kept = engine.dedup_near(docs, method="containment", n=5, threshold=0.8)
     assert {r.doc_id for r in kept.collect()} == {1, 3, 4}  # min-id winner
 
-    surp = engine.surprisal(docs)
+    surp = ftext.unigram_surprisal(docs)
     rows = {r.doc_id: r.mean_surprisal for r in surp.collect()}
     assert max(rows, key=rows.get) == 4  # gibberish = most surprising
     assert rows[3] == min(rows.values())  # repetitive doc = least
@@ -215,7 +220,7 @@ def test_llm_curation_journey_round6(engine, tmp_path):
         "vec_id long, embedding array<float>",
     )
     idx_path = str(tmp_path / "journey_ivf")
-    engine.build_ann_index(emb, idx_path, n_centroids=4)
+    fsim.ivf_write_index(emb, idx_path, n_centroids=4)
     probed = engine.probe_ann_index(idx_path, emb.limit(3), k=3, n_probe=2, round_to=6)
     inmem = engine.similar_topk(
         emb, emb.limit(3), k=3, method="ivf", n_centroids=4, n_probe=2, round_to=6
@@ -226,11 +231,12 @@ def test_llm_curation_journey_round6(engine, tmp_path):
 
 
 def test_llm_curation_journey_round6_late(engine, tmp_path):
-    """Late-round-6 surface as one curation flow through the Engine
-    facade: find cross-doc duplicated spans, cut every occurrence but
-    the lowest-doc one, semantically dedup the embedding side, reduce
-    dimensions with PCA, and train/apply a BPE tokenizer on the cleaned
-    corpus — the end-to-end shape of a training-data prep pipeline."""
+    """Late-round-6 surface as one curation flow through the Engine's
+    span finder and the package functions: find cross-doc duplicated
+    spans, cut every occurrence but the lowest-doc one, semantically
+    dedup the embedding side, reduce dimensions with PCA, and
+    train/apply a BPE tokenizer on the cleaned corpus — the end-to-end
+    shape of a training-data prep pipeline."""
     from pyspark.sql import functions as F
 
     boiler = " ".join(f"license term{i} clause{i}" for i in range(6))  # 18 tokens
@@ -246,7 +252,7 @@ def test_llm_curation_journey_round6_late(engine, tmp_path):
     assert {r.doc_id for r in spans.collect()} == {1, 2}
     # keep the boilerplate once (lowest doc), cut it elsewhere
     keep = spans.groupBy().agg(F.min("doc_id").alias("k"))
-    cleaned = engine.cut_spans(
+    cleaned = fdedup.cut_spans(
         docs, spans.join(keep, spans.doc_id == keep.k, "left_anti")
     )
     out = {r.doc_id: r.text for r in cleaned.collect()}
@@ -262,14 +268,14 @@ def test_llm_curation_journey_round6_late(engine, tmp_path):
         ],
         "vec_id long, embedding array<float>",
     )
-    survivors = engine.semantic_dedup(emb, n_centroids=2, threshold=0.99)
+    survivors = fsim.semantic_dedup(emb, n_centroids=2, threshold=0.99)
     assert {r.vec_id for r in survivors.collect()} == {1, 3}
 
-    model = engine.fit_pca(emb, k=2)
-    proj = engine.project_pca(emb, model)
+    model = fsim.pca_fit(emb, k=2)
+    proj = fsim.pca_transform(emb, model)
     assert len(proj.first()["pca"]) == 2
 
-    merges = engine.train_tokenizer(cleaned, num_merges=20, min_freq=2)
-    toked = engine.tokenize(cleaned, merges)
+    merges = fbpe.bpe_learn(cleaned, num_merges=20, min_freq=2)
+    toked = fbpe.bpe_encode(cleaned, merges)
     n = toked.select(F.sum(F.size("bpe_tokens"))).first()[0]
     assert merges and n > 0

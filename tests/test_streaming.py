@@ -394,37 +394,6 @@ def test_kafka_option_map_golden(spark):
     )
 
 
-def test_transform_with_state_gated(spark, tmp_path):
-    """B22 — transformWithStateInPandas equivalence vs the batch GROUP BY
-    (the same contract st06 proves for applyInPandasWithState), on a
-    single-file source so one micro-batch emits each key's final state
-    exactly once.  The TWS state server requires google.protobuf, which
-    this container does not ship — the test skips there and runs for
-    real where it exists (stateful_running_agg_tws's docstring states
-    the gate)."""
-    pytest.importorskip("google.protobuf")
-
-    d = tmp_path / "tws_src"
-    d.mkdir()
-    _write_batch(
-        d / "all.parquet",
-        [
-            (1, _ts(10, 0), 1, 1.0),
-            (2, _ts(10, 5), 1, 2.0),
-            (3, _ts(11, 0), 2, 3.0),
-            (4, _ts(11, 5), 2, 5.0),
-        ],
-    )
-    stream = ops.read_file_stream(spark, str(d), EVENT_SCHEMA)
-    res = ops.stateful_running_agg_tws(stream, "user_id", "value", "ts")
-    _replay(ops.write_stream_memory(res, "tws_golden", "update"), tmp_path, "tws")
-    got = {
-        (r["key"], round(r["running_sum"], 4), r["running_count"])
-        for r in spark.table("tws_golden").collect()
-    }
-    assert got == {(1, 3.0, 2), (2, 8.0, 2)}
-
-
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
     """B19/B21 — exactly-once across RESTARTS: run an availableNow drain
     with a checkpoint, then add a new source file and rerun with the
