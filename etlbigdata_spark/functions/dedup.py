@@ -124,37 +124,48 @@ def exploded_shingle_hashes(
 ) -> DataFrame:
     """(id, shingle-HASH) rows — :func:`exploded_shingles` for consumers
     that only ever compare shingles for equality (round 13: every pair
-    finder hashed the exploded strings immediately anyway).  Each
-    token's bytes hash once (xxhash64 per element), each position
-    hashes its n consecutive 64-bit token hashes — 8n fixed bytes, no
-    per-position string build — and array_distinct dedups 8-byte longs
-    instead of ~30-byte strings.  Collision class unchanged: two
-    distinct shingles collide only via a 64-bit hash collision, the
-    ~|shingles|²/2⁶⁴ budget the module already accepts (the
-    string-exact oracles would catch one if it fired).  element_at
-    stays in bounds by the sequence's upper limit (ANSI-safe)."""
+    finder hashed the exploded strings immediately anyway), hashed by
+    :func:`_shingle_hashes`; array_distinct dedups 8-byte longs instead
+    of ~30-byte strings.  The string-exact oracles would catch a 64-bit
+    collision if one fired."""
     df = rebalance_for_expansion(df)
     toked = df.select(
         F.col(id_col).alias("id"), tokens_col(F.col(text_col)).alias("__toks")
     )
+    hashed, grams = _shingle_hashes(toked, "id", n, distinct=True)
+    return hashed.select("id", F.explode(grams).alias(out_col))
+
+
+def _shingle_hashes(
+    toked: DataFrame, key: str, n: int, distinct: bool
+) -> tuple[DataFrame, Column]:
+    """``toked`` (key, __toks) with each token's bytes hashed once
+    (``__th``, xxhash64 per element) and its token count (``__sz``),
+    plus the array of its word n-gram hashes, one per start position
+    (array_distinct'ed when ``distinct``): each position hashes its n
+    consecutive 64-bit token hashes.  That is 8n fixed bytes per
+    position and no per-position string build (round 13: the old shape
+    joined ~n tokens into a string for EVERY position, re-hashing each
+    token's bytes n times).
+
+    Consumers only compare shingles for equality, and the collision
+    class is unchanged: tokens are whitespace-free, so the old
+    space-join was injective, and two distinct shingles collide only
+    via a 64-bit hash collision, the ~|shingles|²/2⁶⁴ budget the module
+    already accepts.  element_at stays in bounds by the sequence's
+    upper limit, so the expression is ANSI-safe."""
     hashed = toked.select(
-        "id",
+        key,
         F.size("__toks").alias("__sz"),
         F.transform(F.col("__toks"), lambda t: F.xxhash64(t)).alias("__th"),
     )
-    grams = F.when(
-        F.col("__sz") < n, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.col("__sz") - F.lit(n - 1)),
-                lambda i: F.xxhash64(
-                    *[F.element_at("__th", i + F.lit(j)) for j in range(n)]
-                ),
-            )
-        )
+    grams = F.transform(
+        F.sequence(F.lit(1), F.col("__sz") - F.lit(n - 1)),
+        lambda i: F.xxhash64(*[F.element_at("__th", i + F.lit(j)) for j in range(n)]),
     )
-    return hashed.select("id", F.explode(grams).alias(out_col))
+    if distinct:
+        grams = F.array_distinct(grams)
+    return hashed, F.when(F.col("__sz") < n, F.array().cast("array<bigint>")).otherwise(grams)
 
 
 def ngram_jaccard_pairs(
@@ -1176,9 +1187,9 @@ def positional_shingles(
 ) -> DataFrame:
     """(doc_id, pos, h) — ALL positional word n-grams (NOT distinct,
     unlike :func:`exploded_shingles`): ``pos`` is the 1-based start
-    token offset, ``h`` the xxhash64 of the shingle text.  The position
-    is what :func:`duplicated_spans` needs to merge hits back into
-    contiguous spans; the 8-byte hash is what keeps the wide stages
+    token offset, ``h`` its 64-bit hash (:func:`_shingle_hashes`).  The
+    position is what :func:`duplicated_spans` needs to merge hits back
+    into contiguous spans; the 8-byte hash is what keeps the wide stages
     narrow (same discipline as d02's inverted index — a 64-bit
     collision would need ~2³² distinct shingles per corpus to matter).
 
@@ -1200,30 +1211,7 @@ def positional_shingles(
     if not isinstance(df.select(src).schema[0].dataType, ArrayType):
         src = tokens_col(src)
     toked = df.select(F.col(id_col).alias("doc_id"), src.alias("__toks"))
-    # round 13: hash each TOKEN's bytes once, then hash the n
-    # consecutive 64-bit token hashes per position — the old shape
-    # built a string per position (slice + array_join allocates ~n
-    # tokens of bytes for EVERY position, re-hashing each token's
-    # bytes n times); this hashes 8n fixed bytes per position with no
-    # allocation.  Equality is what the consumers need, and the
-    # collision class is unchanged (two positions collide only via a
-    # 64-bit hash collision, the same ~2⁻⁶⁴ budget the module already
-    # accepts; tokens are whitespace-free so the old space-join was
-    # injective, and the hash-tuple form is injective modulo the same
-    # hashes).  element_at stays in bounds by the sequence's upper
-    # limit, so the expression is ANSI-safe.
-    th = F.transform(F.col("__toks"), lambda t: F.xxhash64(t))
-    hashed = toked.select("doc_id", F.size("__toks").alias("__sz"), th.alias("__th"))
-    grams = F.when(
-        F.col("__sz") < n, F.array().cast("array<bigint>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.col("__sz") - F.lit(n - 1)),
-            lambda i: F.xxhash64(
-                *[F.element_at("__th", i + F.lit(j)) for j in range(n)]
-            ),
-        )
-    )
+    hashed, grams = _shingle_hashes(toked, "doc_id", n, distinct=False)
     return hashed.select(
         "doc_id", F.posexplode(grams).alias("__p0", "h")
     ).select("doc_id", (F.col("__p0") + 1).alias("pos"), "h")

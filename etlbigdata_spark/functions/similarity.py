@@ -1,17 +1,24 @@
 """Similarity search over embedding columns (SURVEY §2 B24).
 
-Two paths, per the north star:
+Exact, SQ8 and PQ brute force, the IVF index and LSH all answer "the
+top-k most cosine-similar corpus vectors per query":
 
-* brute-force cosine top-k — the exact baseline; the query set ships to
-  every task, the corpus is scanned once with NO shuffle of the
-  vectors, each Arrow batch is scored as one float64 BLAS matmul and
-  cut to a lossless per-batch candidate set before emission (see
-  ``_matmul_scores``); per-query top-k via window.  An expression-only
-  twin (``zip_with`` + ``aggregate`` in codegen, ``vectorized=False``)
-  is kept and tested result-equal.
-* LSH-bucketed ANN — the scale path: random-projection buckets make the
-  join candidate-only.  An IVF sketch (centroid assignment + probe) is
-  included as the third tier.
+* Every Arrow-batch scorer is :func:`_blas_topk`: the small query set
+  ships to each task, each batch of corpus vectors is scored as one
+  float64 BLAS matmul (or PQ lookup-table gathers) and cut to a
+  lossless per-batch candidate set, so the corpus vectors never shuffle.
+  It serves :func:`cosine_topk`, :func:`cosine_topk_quantized`,
+  :func:`pq_topk` and the vectorized :func:`ivf_probe_index`.
+  Expression twins (``zip_with`` + ``aggregate`` in codegen) are kept
+  as the references tests hold it to.
+* The IVF index assigns vectors to centroid cells written as
+  partitions, so a probe reads only its ``n_probe`` cells, stored as
+  floats, SQ8 or (residual) PQ codes.
+* LSH random-projection buckets make the join candidate-only.
+
+Every top-k ends in :func:`_rank_topk`: a pair with no score (a NULL
+or zero-norm vector on either side) is dropped, and the rest rank by
+rounded cosine desc, then neighbor_id asc.
 """
 
 from __future__ import annotations
@@ -33,12 +40,38 @@ def _norm(a: Column) -> Column:
 def cosine_sim(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<numeric> columns, JVM-side.
     A zero-norm side yields NULL (``try_divide``) rather than an ANSI
-    divide-by-zero task failure — callers rank/filter NULL away
-    (round-10; the blas kernels apply the same exclude-unscoreable
-    rule to their NaN)."""
+    divide-by-zero task failure — :func:`_rank_topk` drops it, as it
+    drops the BLAS kernel's NaN."""
     a = a.cast("array<double>")
     b = b.cast("array<double>")
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, round_to: int | None, *keep: str,
+    threshold: float | None = None,
+) -> DataFrame:
+    """The one tail of every top-k here, over a ``(query_id,
+    neighbor_id, *keep, cosine)`` frame: drop pairs with no score (NULL
+    from :func:`cosine_sim`, NaN from :func:`_blas_topk`), round, then
+    keep each query's k best by cosine desc, neighbor_id asc — or, with
+    a ``threshold``, every pair with ``cosine >= threshold``, unranked.
+    Ranking on the rounded value keeps ties, and so the neighbor_id
+    tie-break, the same across faces and engines.
+
+    NaN becomes NULL, which passes no threshold and sorts after every
+    score, so the NULL filter can sit above the window; a filter below
+    it is pushed under the projection and evaluates the cosine again."""
+    cos = F.nanvl(F.col("cosine"), F.lit(None).cast("double"))
+    if round_to is not None:
+        cos = F.round(cos, round_to)
+    scored = scored.select("query_id", "neighbor_id", *keep, cos.alias("cosine"))
+    if threshold is not None:
+        return scored.filter(F.col("cosine") >= threshold)
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        (F.col("rank") <= k) & F.col("cosine").isNotNull()
+    )
 
 
 def cosine_topk(
@@ -61,113 +94,71 @@ def cosine_topk(
 
     Scoring has two implementations producing the same row multiset:
 
-    * ``vectorized=True`` (default): the query matrix ships to each task
-      and every Arrow batch is scored as ONE float64 BLAS matmul
-      (``(B×d) @ (d×Q)``) inside ``mapInPandas`` — measured ~4× faster
-      than the expression path at sf1 (20 k × 128-dim corpus).  The
-      queries were already driver-collected under the broadcast join, so
-      this moves no new data through the driver.
+    * ``vectorized=True`` (default): :func:`_blas_topk` scores every
+      Arrow batch as ONE float64 BLAS matmul (``(B×d) @ (d×Q)``) and
+      cuts it to a lossless per-batch candidate set — measured ~4×
+      faster than the expression path at sf1 (20 k × 128-dim corpus).
+      The queries were already driver-collected under the broadcast
+      join, so this moves no new data through the driver.
     * ``vectorized=False``: broadcast-cross-join with the cosine as JVM
       higher-order expressions (``zip_with`` + ``aggregate``) — fully
       codegen, no Python workers; kept as the cross-check twin (tested
       equal) and for clusters where Python workers are unwelcome.
 
-    Rounding/ranking happen JVM-side in BOTH paths (ranking on the
-    rounded value keeps ties, and thus order via the neighbor_id
-    tiebreak, reproducible across engines/runs); the paths differ only
-    in float summation order, which the oracle-grade rounding absorbs.
+    Both end in :func:`_rank_topk`: a NULL or zero-norm vector scores
+    no pair, and rounding happens JVM-side before the rank, so the
+    paths differ only in float summation order, which the oracle-grade
+    rounding absorbs.
     """
     query_id_col = query_id_col or id_col
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     if vectorized:
-        scored = _matmul_scores(c, q, k=k, round_to=round_to, include_self=include_self)
-    else:
-        joined = c.crossJoin(F.broadcast(q))
-        scored = joined.select(
-            "query_id", "neighbor_id",
-            cosine_sim(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
-        )
+        return _blas_topk(corpus, q, k, id_col, vec_col, round_to, exclude_self=not include_self)
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
+    scored = c.crossJoin(F.broadcast(q)).select(
+        "query_id", "neighbor_id",
+        cosine_sim(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
+    )
     if not include_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.col("cosine")
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k, round_to)
 
 
-def _matmul_scores(
-    c: DataFrame, q: DataFrame, k: int, round_to: int | None, include_self: bool
+def _lsh_pairs(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
+    bucket_len: float, num_hash_tables: int, max_l2: float,
 ) -> DataFrame:
-    """(neighbor_id, query_id, cosine) candidate rows — scored
-    batch-at-a-time with one numpy/BLAS matmul per Arrow batch, then cut
-    to a per-batch per-query candidate set before anything is emitted.
+    """(query_id, neighbor_id, l2) for every non-self pair whose
+    L2-normalized vectors share a bucket in one of the random-projection
+    tables (seed 42) and lie within ``max_l2`` — the candidate
+    generator of both LSH faces."""
+    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
+    from pyspark.ml.functions import array_to_vector
 
-    The cut is LOSSLESS for the downstream global top-k: a row is kept
-    iff its score ≥ (the k-th largest score for that query within the
-    batch) − slack.  Any dropped row is beaten by ≥ k same-batch rows by
-    more than the slack, so it cannot enter the global top-k even after
-    JVM-side rounding reorders ties (slack = one full rounding unit
-    10^-round_to covers the worst-case disagreement between this
-    worker's float rounding and F.round's BigDecimal HALF_UP, which is
-    ≤ 1 ULP, orders of magnitude smaller).  Emitted rows per batch are
-    therefore ~(k + tie band) × Q instead of B × Q — the per-partition
-    partial top-k that makes exact search viable at corpus scale."""
-    from pyspark.sql import types as T
+    def prep(df: DataFrame, ident: str) -> DataFrame:
+        v = df.select(
+            F.col(id_col).alias(ident),
+            array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw"),
+        )
+        return Normalizer(inputCol="raw", outputCol="vec", p=2.0).transform(v).drop("raw")
 
-    qrows = q.collect()  # small by contract — the alternative path broadcasts it
-    import numpy as np
-
-    qids_list = [r["query_id"] for r in qrows]
-    qids = np.array(qids_list)
-    qm = np.array([list(r["__qvec"]) for r in qrows], dtype=np.float64)  # Q×d
-    qnorm = np.linalg.norm(qm, axis=1)  # Q
-
-    nid_type = c.schema["neighbor_id"].dataType
-    qid_type = q.schema["query_id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("neighbor_id", nid_type),
-            T.StructField("query_id", qid_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    c, q = prep(corpus, "neighbor_id"), prep(queries, "query_id")
+    lsh = BucketedRandomProjectionLSH(
+        inputCol="vec", outputCol="hashes", bucketLength=bucket_len,
+        numHashTables=num_hash_tables, seed=42,
     )
-    n_q = len(qids_list)
-    slack = 10.0 ** (-round_to) if round_to is not None else 0.0
-    # self-pairs are filtered AFTER this cut (JVM-side); reserve one extra
-    # rank so a self-pair inside the top-k cannot displace a real winner
-    kth = k + (0 if include_self else 1)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.array(pdf["__cvec"].tolist(), dtype=np.float64)  # B×d
-            cnorm = np.linalg.norm(cm, axis=1)  # B
-            sims = (cm @ qm.T) / np.outer(cnorm, qnorm)  # B×Q
-            b = len(pdf)
-            if b > kth:
-                # k-th largest per query (column), then keep-with-slack
-                cut = np.sort(sims, axis=0)[b - kth, :]  # Q
-                keep = sims >= (cut - slack)  # B×Q bool
-            else:
-                keep = np.ones_like(sims, dtype=bool)
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy()[rows],
-                    "query_id": qids[cols],
-                    "cosine": sims[rows, cols],
-                }
-            )
-
-    return c.mapInPandas(run, schema=out_schema)
+    return (
+        lsh.fit(c)
+        .approxSimilarityJoin(c, q, max_l2, distCol="l2")
+        .select(
+            F.col("datasetB.query_id").alias("query_id"),
+            F.col("datasetA.neighbor_id").alias("neighbor_id"),
+            "l2",
+        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
 
 
 def lsh_topk(
@@ -184,34 +175,9 @@ def lsh_topk(
     vectors; candidates only where buckets collide, then exact re-rank.
     Recall tuned by ``num_hash_tables``/``bucket_len`` (tested by
     recall@k against :func:`cosine_topk`, not hash equality)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    def prep(df: DataFrame, ident: str) -> DataFrame:
-        v = df.select(
-            F.col(id_col).alias(ident),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw"),
-        )
-        return Normalizer(inputCol="raw", outputCol="vec", p=2.0).transform(v).drop("raw")
-
-    c, q = prep(corpus, "neighbor_id"), prep(queries, "query_id")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="vec", outputCol="hashes", bucketLength=bucket_len,
-        numHashTables=num_hash_tables, seed=42,
-    )
-    model = lsh.fit(c)
-    pairs = model.approxSimilarityJoin(c, q, max_l2, distCol="l2")
-    scored = (
-        pairs.filter(F.col("datasetA.neighbor_id") != F.col("datasetB.query_id"))
-        .select(
-            F.col("datasetB.query_id").alias("query_id"),
-            F.col("datasetA.neighbor_id").alias("neighbor_id"),
-            # on unit vectors: cos = 1 - l2²/2
-            (1 - F.col("l2") * F.col("l2") / 2).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    pairs = _lsh_pairs(corpus, queries, id_col, vec_col, bucket_len, num_hash_tables, max_l2)
+    # on unit vectors: cos = 1 - l2²/2
+    return _rank_topk(pairs.withColumn("cosine", 1 - F.col("l2") * F.col("l2") / 2), k, None)
 
 
 def lsh_verified_topk(
@@ -245,42 +211,16 @@ def lsh_verified_topk(
     with tight buckets, which trades that guarantee for a
     candidate-only join.
     """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-    from pyspark.ml.functions import array_to_vector
-
-    def prep(df: DataFrame, ident: str) -> DataFrame:
-        v = df.select(
-            F.col(id_col).alias(ident),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw"),
-        )
-        return Normalizer(inputCol="raw", outputCol="vec", p=2.0).transform(v).drop("raw")
-
-    c, q = prep(corpus, "neighbor_id"), prep(queries, "query_id")
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="vec", outputCol="hashes", bucketLength=bucket_len,
-        numHashTables=num_hash_tables, seed=42,
-    )
-    model = lsh.fit(c)
     # max distance on unit vectors is 2.0 — candidates are bucket-collisions only
-    cand = (
-        model.approxSimilarityJoin(c, q, 2.0, distCol="l2")
-        .select(
-            F.col("datasetB.query_id").alias("query_id"),
-            F.col("datasetA.neighbor_id").alias("neighbor_id"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .distinct()
-    )
+    cand = _lsh_pairs(
+        corpus, queries, id_col, vec_col, bucket_len, num_hash_tables, 2.0
+    ).drop("l2").distinct()
     # exact re-rank from the RAW arrays — bit-identical to cosine_topk
     qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     scored = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    cos = cosine_sim(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = scored.withColumn("cosine", cosine_sim(F.col("__qvec"), F.col("__cvec")))
+    return _rank_topk(scored, k, round_to)
 
 
 def ivf_assign(
@@ -491,20 +431,9 @@ def _probe_score_topk(
     joined = c.join(F.broadcast(q), "centroid")
     if exclude_self:
         joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = cosine_sim(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = joined.select("query_id", "neighbor_id", "centroid", cos.alias("cosine"))
-    # a zero-norm vector (either side) has NO defined cosine: its NaN
-    # would rank FIRST under Spark's desc ordering (NaN > everything)
-    # and pass any >= threshold — exclude unscoreable pairs instead
-    # (round-10; the blas face applies the identical rule kernel-side)
-    scored = scored.filter(F.col("cosine").isNotNull() & ~F.isnan("cosine"))
-    if threshold is not None:
-        return scored.filter(F.col("cosine") >= threshold)
-    scored = scored.drop("centroid")
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = joined.withColumn("cosine", cosine_sim(F.col("__qvec"), F.col("__cvec")))
+    keep = ("centroid",) if threshold is not None else ()
+    return _rank_topk(scored, k, round_to, *keep, threshold=threshold)
 
 
 def ivf_write_index(
@@ -809,7 +738,7 @@ def ivf_probe_index(
         # the blas face folds a residual layout's centroid terms into its
         # ADC LUTs (dot(q,x̂) = q·c + Σ_s LUT, ‖x̂‖² via a per-(cell, code)
         # cross table) so the kernel stays gather-shaped
-        return _probe_score_topk_blas(
+        return _blas_topk(
             assigned, q, k, id_col, corpus_vec, round_to, threshold,
             exclude_self, pq_books=layout.books, qrows=qrows,
             pq_residual_cents=dict(layout.cents) if layout.residual else None,
@@ -819,66 +748,80 @@ def ivf_probe_index(
     )
 
 
-def _probe_score_topk_blas(
-    assigned: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str,
-    round_to: int, threshold: float | None = None, exclude_self: bool = True,
+def _blas_topk(
+    corpus: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str,
+    round_to: int | None, threshold: float | None = None, exclude_self: bool = True,
     pq_books: list | None = None, qrows: list | None = None,
     pq_residual_cents: dict | None = None,
 ) -> DataFrame:
-    """BLAS face of :func:`_probe_score_topk` (round 10): the probe
-    pairs (query x probed cell) collect driver-side — bounded by
-    contract at |queries| x n_probe rows, the same collect the probed
-    partition filter already paid — and each Arrow batch of corpus
-    vectors is scored as one ``B x d @ d x Q`` float64 matmul with a
-    per-row cell mask (a pair scores ONLY if the query probed that
-    row's cell — identical candidate semantics to the join face).  The
-    per-batch candidate cut reuses the _matmul_scores slack rule
-    (lossless for the global top-k under JVM rounding); rounding,
-    self-exclusion, the threshold filter and the rank all run JVM-side,
-    exactly like the expression face, so the two faces agree row-for-row
-    (tested).  NULL/zero vectors: the kernel drops NULL rows (the
-    expression face ranks their NULL cosine last — same top-k) and a
-    zero-norm vector scores NaN on both faces."""
+    """The one Arrow-batch cosine scorer (the per-partition local top-k
+    that the window in :func:`_rank_topk` merges globally).
+
+    The query rows ``q`` (query_id, __qvec[, centroid]) collect to the
+    driver — small by contract, one vector per query_id (a repeated id
+    keeps its first vector); a caller that already collected them
+    passes ``qrows``.  Each Arrow batch of ``corpus`` vectors is scored
+    as one ``B x d @ d x Q`` float64 matmul.  ``pq_books`` scores PQ
+    codes through lookup tables instead, and ``pq_residual_cents`` adds
+    the centroid terms of a residual IVF-PQ layout.
+
+    Candidates: with a ``centroid`` column on ``q`` (an IVF probe) a
+    pair scores only if the query probed that row's cell, as in the join
+    face :func:`_probe_score_topk`; without one every row is a candidate
+    for every query.  A NULL vector on either side scores nothing, and
+    a zero-norm one scores NaN, which neither the cut nor the emission
+    counts.
+
+    The per-batch cut keeps a row iff its score is at least the k-th
+    largest for that query within the batch minus a slack of one
+    rounding unit 10^-round_to (no slack without ``round_to``: the rank
+    then orders the same doubles).  That is LOSSLESS for the global top-k:
+    a dropped row is beaten by k same-batch rows by more than the
+    slack, so JVM-side rounding (whose disagreement with this worker's
+    float rounding is at most 1 ULP) cannot lift it into the top-k.
+    Emitted rows per batch are therefore ~(k + tie band) x Q instead of
+    B x Q.  Self-exclusion, rounding, the threshold filter and the rank
+    all run JVM-side in :func:`_rank_topk`, exactly as on the
+    expression faces, so the faces agree row for row (tested)."""
     import numpy as np
     from pyspark.sql import types as T
 
-    if qrows is None:  # caller may pass its own collect (ivf_probe_index does)
-        qrows = q.select("query_id", "__qvec", "centroid").collect()
+    cells = "centroid" in q.columns
+    if qrows is None:
+        qrows = q.collect()
     by_qid: dict = {}
     for r in qrows:
         if r["__qvec"] is None:  # NULL-vector query scores nothing on any face
             continue
         e = by_qid.setdefault(r["query_id"], {"vec": list(r["__qvec"]), "cells": set()})
-        e["cells"].add(r["centroid"])
-    nid_type = assigned.schema[id_col].dataType
-    qid_type = q.schema["query_id"].dataType
+        if cells:
+            e["cells"].add(r["centroid"])
     out_schema = T.StructType(
         [
-            T.StructField("query_id", qid_type),
-            T.StructField("neighbor_id", nid_type),
-            T.StructField("centroid", T.IntegerType()),
+            T.StructField("query_id", q.schema["query_id"].dataType),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            *([T.StructField("centroid", T.IntegerType())] if cells else []),
             T.StructField("cosine", T.DoubleType()),
         ]
     )
+    keep = ("centroid",) if threshold is not None else ()
     if not by_qid:  # empty/all-NULL query set: 0×d matmul would crash
-        empty = assigned.sparkSession.createDataFrame([], out_schema)
-        if threshold is not None:
-            return empty  # (query_id, neighbor_id, centroid, cosine)
-        return empty.select("query_id", "neighbor_id", "cosine").withColumn(
-            "rank", F.lit(1).cast("int")
-        )
+        empty = corpus.sparkSession.createDataFrame([], out_schema)
+        return _rank_topk(empty, k, round_to, *keep, threshold=threshold)
     qids_list = list(by_qid)
     qm = np.array([by_qid[i]["vec"] for i in qids_list], dtype=np.float64)
     qnorm = np.linalg.norm(qm, axis=1)
-    cells_sorted = sorted({c for e in by_qid.values() for c in e["cells"]})
-    cell_pos = {c: i for i, c in enumerate(cells_sorted)}
-    # one sentinel all-False row at index -1: a corpus row in a cell no
-    # query probed masks to no-candidates instead of a KeyError, so the
-    # kernel is safe even when a caller skips the probed-cell pre-filter
-    allow = np.zeros((len(cells_sorted) + 1, len(qids_list)), dtype=bool)
-    for qi, qid in enumerate(qids_list):
-        for c in by_qid[qid]["cells"]:
-            allow[cell_pos[c], qi] = True
+    allow = None
+    if cells:
+        cells_sorted = sorted({c for e in by_qid.values() for c in e["cells"]})
+        cell_pos = {c: i for i, c in enumerate(cells_sorted)}
+        # one sentinel all-False row at index -1: a corpus row in a cell no
+        # query probed masks to no-candidates instead of a KeyError, so the
+        # kernel is safe even when a caller skips the probed-cell pre-filter
+        allow = np.zeros((len(cells_sorted) + 1, len(qids_list)), dtype=bool)
+        for qi, qid in enumerate(qids_list):
+            for c in by_qid[qid]["cells"]:
+                allow[cell_pos[c], qi] = True
     qids = np.array(qids_list)
     # PQ scores via the real ADC LUT route (round 10): per subspace s,
     # dot_lut[s] = books[s] @ q_sub[s].T (k x Q) and a codeword-norm²
@@ -918,10 +861,13 @@ def _probe_score_topk_blas(
                 axis=1,
             )  # (cells+1)×m×k
             s_idx = np.arange(m_sub)[None, :]
-    slack = 10.0 ** (-round_to)
+    slack = 10.0 ** (-round_to) if round_to is not None else 0.0
+    # self-pairs are filtered AFTER this cut (JVM-side); reserve one extra
+    # rank so a self-pair inside the top-k cannot displace a real winner
     kth = k + (1 if exclude_self else 0)
-    src = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v"), "centroid"
+    src = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v"),
+        *(["centroid"] if cells else []),
     )
 
     def run(batches):
@@ -931,9 +877,10 @@ def _probe_score_topk_blas(
             pdf = pdf[pdf["__v"].notna()]
             if not len(pdf):
                 continue
-            cellrows = np.array(
-                [cell_pos.get(c, -1) for c in pdf["centroid"].to_numpy()]
-            )
+            if cells:
+                cellrows = np.array(
+                    [cell_pos.get(c, -1) for c in pdf["centroid"].to_numpy()]
+                )
             if dot_luts is not None:
                 codes = np.array(pdf["__v"].tolist(), dtype=np.int64)
                 dot = dot_luts[0][codes[:, 0], :].copy()  # B×Q
@@ -956,44 +903,37 @@ def _probe_score_topk_blas(
                 cm = np.array(pdf["__v"].tolist(), dtype=np.float64)
                 cnorm = np.linalg.norm(cm, axis=1)
                 sims = (cm @ qm.T) / np.outer(cnorm, qnorm)  # B×Q
-            amask = allow[cellrows, :]  # B×Q; -1 hits the sentinel row
             # zero-norm rows/queries score NaN: exclude them from BOTH
             # the cut and the emission (np.sort ranks NaN largest, so
             # an unguarded cut would be NaN and drop every real
-            # neighbor in the batch; the expression face filters the
-            # same rows JVM-side — see _probe_score_topk)
-            valid = amask & ~np.isnan(sims)
+            # neighbor in the batch)
+            valid = ~np.isnan(sims)
+            if cells:
+                valid &= allow[cellrows, :]  # -1 hits the sentinel row
             if threshold is not None:
-                keep = valid & (sims >= (threshold - slack))
+                keep_rows = valid & (sims >= (threshold - slack))
             else:
                 b = len(pdf)
                 if b > kth:
                     masked = np.where(valid, sims, -np.inf)
                     cut = np.sort(masked, axis=0)[b - kth, :]
-                    keep = valid & (sims >= (cut - slack))
+                    keep_rows = valid & (sims >= (cut - slack))
                 else:
-                    keep = valid
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[cols],
-                    "neighbor_id": pdf["neighbor_id"].to_numpy()[rows],
-                    "centroid": pdf["centroid"].to_numpy()[rows],
-                    "cosine": sims[rows, cols],
-                }
-            )
+                    keep_rows = valid
+            rows, cols = np.nonzero(keep_rows)
+            out = {
+                "query_id": qids[cols],
+                "neighbor_id": pdf["neighbor_id"].to_numpy()[rows],
+            }
+            if cells:
+                out["centroid"] = pdf["centroid"].to_numpy()[rows]
+            out["cosine"] = sims[rows, cols]
+            yield pd.DataFrame(out)
 
     scored = src.mapInPandas(run, out_schema)
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.round(F.col("cosine"), round_to)
-    if threshold is not None:
-        return scored.select(
-            "query_id", "neighbor_id", "centroid", cos.alias("cosine")
-        ).filter(F.col("cosine") >= threshold)
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored, k, round_to, *keep, threshold=threshold)
 
 
 def _assign_nearest(
@@ -1124,7 +1064,8 @@ def quantize_embeddings(
     ≤ s/254).  The scale rides WITH the vector, so quantization is
     map-side only — no corpus pass to fit a codebook, no shuffle, and
     re-sharding cannot change any vector's encoding.  Zero vectors get
-    scale 1.0 (all-zero codes).  Arrow-batched numpy, one batch = one
+    scale 1.0 (all-zero codes); a NULL vector gets NULL codes and a
+    NULL scale.  Arrow-batched numpy, one batch = one
     vectorized round.
 
     ``keep_vec=False`` (default) drops the float column — the point of
@@ -1148,11 +1089,16 @@ def quantize_embeddings(
 
     def _quant(v):  # pd.Series -> pd.DataFrame; hints stringified by
         # `from __future__ import annotations`, so none (same as b18)
-        X = np.array(v.tolist(), dtype=np.float64)  # B×d
-        s = np.abs(X).max(axis=1)  # B
-        s[s == 0.0] = 1.0
-        q = np.rint(X * (127.0 / s)[:, None]).astype(np.int8)
-        return pd.DataFrame({"q": list(q), "s": s.astype(np.float32)})
+        mask = v.notna().to_numpy()  # a NULL vector encodes to NULLs
+        q = pd.Series([None] * len(v), dtype=object)
+        s = np.full(len(v), np.nan, dtype=np.float32)
+        if mask.any():
+            X = np.array(v[mask].tolist(), dtype=np.float64)  # B×d
+            sx = np.abs(X).max(axis=1)  # B
+            sx[sx == 0.0] = 1.0
+            q[np.flatnonzero(mask)] = list(np.rint(X * (127.0 / sx)[:, None]).astype(np.int8))
+            s[mask] = sx
+        return pd.DataFrame({"q": q, "s": s})
 
     quant = pandas_udf(_quant, returnType=out_t)
     out = df.withColumn("__qs", quant(F.col(vec_col))).withColumn(
@@ -1171,8 +1117,8 @@ def cosine_topk_quantized(
     round_to: int | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k over an SQ8-quantized corpus
-    (:func:`quantize_embeddings`) — same single-scan, no-vector-shuffle,
-    per-batch-cut plan as :func:`cosine_topk`, scored directly on the
+    (:func:`quantize_embeddings`) — the same :func:`_blas_topk` kernel
+    and plan as :func:`cosine_topk`, scored directly on the
     int8 CODES: cosine is scale-invariant, so the per-vector scales
     cancel exactly and ``cos(x̂, ŷ) = (qₓ·q_y)/(‖qₓ‖‖q_y‖)`` — the
     reconstruction never happens and the scale column is never read
@@ -1188,32 +1134,17 @@ def cosine_topk_quantized(
     """
     import numpy as np
 
-    c = corpus_q.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(q_col).cast("array<double>").alias("__cvec"),
+    # NULL query vectors match nothing; drop them before the encoder
+    q = queries.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
-    qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    qm = np.array([list(r[vec_col]) for r in qrows], dtype=np.float64)
-    s = np.abs(qm).max(axis=1)
-    s[s == 0.0] = 1.0
-    qq = np.rint(qm * (127.0 / s)[:, None])  # quantized codes, float64-exact
-    qid_t = queries.schema[id_col].dataType.simpleString()
-    q = c.sparkSession.createDataFrame(
-        [(r[id_col], [float(x) for x in qq[i]]) for i, r in enumerate(qrows)],
-        f"query_id {qid_t}, __qvec array<double>",
-    )
-    scored = _matmul_scores(c, q, k=k, round_to=round_to, include_self=False)
-    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.col("cosine")
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    qrows = []
+    for r in q.collect():
+        v = np.array(r["__qvec"], dtype=np.float64)
+        # quantize_embeddings' encoder: a zero vector keeps scale 1.0
+        codes = np.rint(v * (127.0 / (np.abs(v).max() or 1.0)))  # float64-exact
+        qrows.append({"query_id": r["query_id"], "__qvec": codes})
+    return _blas_topk(corpus_q, q, k, id_col, q_col, round_to, qrows=qrows)
 
 
 def ivf_append_index(
@@ -1833,14 +1764,8 @@ def hard_negatives(
         & F.col("neighbor_label").isNotNull()
         & (F.col("neighbor_label") != F.col("__qlab"))
     )
-    cos = cosine_sim(F.col("__qvec"), F.col("__cvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = joined.select("query_id", "neighbor_id", "neighbor_label", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = joined.withColumn("cosine", cosine_sim(F.col("__qvec"), F.col("__cvec")))
+    return _rank_topk(scored, k, round_to, "neighbor_label")
 
 
 # -- product quantization (PQ) ANN -------------------------------------
@@ -2306,103 +2231,41 @@ def pq_topk(
     """PQ top-k search with asymmetric distance computation: float
     queries against the coded corpus, scored as cosine(q, x̂).
 
-    ``adc="blas"`` — the production path: per subspace a k×Q lookup
-    table ``LUT_s[j] = q_s·c_{s,j}`` is built ONCE per task from the
-    (small by contract) query set, and each Arrow batch scores as m
-    integer-indexed gathers + adds — no d-dim arithmetic per pair, the
-    whole point of PQ; ‖x̂‖² comes from the same gather over per-codeword
-    norms (subspace coordinates are disjoint, no cross terms).  The
+    ``adc="blas"`` — the production path, :func:`_blas_topk` with the
+    books: per subspace a k×Q lookup table ``LUT_s[j] = q_s·c_{s,j}``
+    is built ONCE from the (small by contract) query set, and each
+    Arrow batch scores as m integer-indexed gathers + adds — no d-dim
+    arithmetic per pair, the whole point of PQ; ‖x̂‖² comes from the
+    same gather over per-codeword norms (subspace coordinates are
+    disjoint, no cross terms), and the batch is cut to its lossless
+    per-batch candidates like every other kernel face.  The
     corpus scan reads ONLY (id, m-byte code): at 100 TB the scan is
     ~m/(4d) of the float index.  ``adc="expression"`` — the JVM twin
     scoring :func:`pq_reconstruct_col` with the same rounded-cosine
     discipline as every oracle face here (s09's SQL runs the identical
-    algorithm).  Both rank JVM-side: round → desc, neighbor-id
-    tie-break; self-pairs excluded.  Scores are PQ estimates; recall vs
-    the exact float path is pinned in tests/test_recall.py.  Zero-norm
-    edge (stated for the record — real embeddings never hit it): the
-    blas face coerces a zero denominator to score 0.0, where the
-    expression face's division would propagate a non-finite value."""
-    m, kk, dsub = _pq_shape(codebooks)
+    algorithm).  Both rank JVM-side in :func:`_rank_topk`: round →
+    desc, neighbor-id tie-break; self-pairs excluded; a zero-norm query
+    or reconstruction scores no pair on either face.  Scores are PQ
+    estimates; recall vs the exact float path is pinned in
+    tests/test_recall.py."""
+    _pq_shape(codebooks)
+    if adc not in ("blas", "expression"):
+        raise ValueError(f"unknown adc {adc!r}")
     # NULL codes (pq_encode's output for NULL embeddings) and NULL query
-    # vectors match nothing — dropped HERE, or both scorers crash on
-    # them (np.array over None / element_at over a null array); same
-    # skip-the-null discipline as the argmax assignment faces
+    # vectors match nothing — dropped at the scan, before either scorer
     corpus_codes = corpus_codes.filter(F.col(code_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    if adc == "expression":
-        recon = pq_reconstruct_col(code_col, codebooks)
-        c = corpus_codes.select(
-            F.col(id_col).alias("neighbor_id"), recon.alias("__cvec")
-        )
-        scored = c.crossJoin(F.broadcast(q)).select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
-        )
-    elif adc == "blas":
-        import numpy as np
-
-        from pyspark.sql import types as T
-
-        C = [np.ascontiguousarray(np.array(b, dtype=np.float64)) for b in codebooks]
-        cn2 = np.stack([np.einsum("kd,kd->k", c, c) for c in C])  # m×k
-        qrows = q.collect()  # small by contract (cosine_topk discipline)
-        qids = [r["query_id"] for r in qrows]
-        Q = np.array([list(r["__qvec"]) for r in qrows], dtype=np.float64)
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0.0] = 1.0
-        lut = np.stack(
-            [Q[:, s * dsub : (s + 1) * dsub] @ C[s].T for s in range(m)]
-        )  # m×Q×k
-        nid_t = corpus_codes.schema[id_col].dataType
-        qid_t = queries.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("neighbor_id", nid_t),
-                T.StructField("query_id", qid_t),
-                T.StructField("cosine", T.DoubleType()),
-            ]
-        )
-
-        def _score(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):  # same guard as _matmul_scores
-                    continue
-                codes = np.array(pdf[code_col].tolist(), dtype=np.int64)  # B×m
-                B = len(codes)
-                num = np.zeros((B, len(qids)))
-                n2 = np.zeros(B)
-                for s in range(m):
-                    num += lut[s][:, codes[:, s]].T  # B×Q gather
-                    n2 += cn2[s][codes[:, s]]
-                denom = np.sqrt(n2)[:, None] * qn[None, :]
-                denom[denom == 0.0] = 1.0
-                cos = num / denom
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": np.repeat(pdf[id_col].to_numpy(), len(qids)),
-                        "query_id": qids * B,
-                        "cosine": cos.reshape(-1),
-                    }
-                )
-
-        scored = corpus_codes.select(id_col, code_col).mapInPandas(
-            _score, schema=out_schema
-        )
-    else:
-        raise ValueError(f"unknown adc {adc!r}")
-    scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.col("cosine")
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    if adc == "blas":
+        return _blas_topk(corpus_codes, q, k, id_col, code_col, round_to, pq_books=codebooks)
+    recon = pq_reconstruct_col(code_col, codebooks)
+    c = corpus_codes.select(F.col(id_col).alias("neighbor_id"), recon.alias("__cvec"))
+    scored = c.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        cosine_sim(F.col("__qvec"), F.col("__cvec")).alias("cosine"),
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_topk(scored.filter(F.col("neighbor_id") != F.col("query_id")), k, round_to)
 
 
 def rrf_fuse(

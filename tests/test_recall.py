@@ -1715,8 +1715,8 @@ def test_probe_null_and_empty_query_sets_both_faces(emb, spark, tmp_path):
     probed = {r["centroid"] for r in q.select("centroid").distinct().collect()}
     assigned_cut = assigned_all.filter(F.col("centroid").isin(sorted(probed)))
     key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
-    full = key(fsim._probe_score_topk_blas(assigned_all, q, 5, "vec_id", "embedding", 6))
-    cut = key(fsim._probe_score_topk_blas(assigned_cut, q, 5, "vec_id", "embedding", 6))
+    full = key(fsim._blas_topk(assigned_all, q, 5, "vec_id", "embedding", 6))
+    cut = key(fsim._blas_topk(assigned_cut, q, 5, "vec_id", "embedding", 6))
     assert full == cut and len(full) > 0
 
 
@@ -1940,6 +1940,60 @@ def test_pq_topk_survives_null_codes_and_null_queries(emb, spark):
         want = key(fsim.pq_topk(codes_clean, q_clean, cb, k=3, round_to=6, adc=adc))
         got = key(fsim.pq_topk(codes_dirty, q_dirty, cb, k=3, round_to=6, adc=adc))
         assert got == want, adc
+
+
+def test_brute_force_faces_drop_unscoreable_pairs(spark):
+    """Every brute-force top-k face on vectors that have no cosine: six
+    zero-norm corpus rows in ONE partition (more than k, so a per-batch
+    cut that sorts NaN as largest would drop the whole batch), a NULL
+    corpus vector, a NULL query and a zero-norm query.  Both faces of
+    cosine_topk, cosine_topk_quantized, and both adc faces of pq_topk
+    run, agree face to face, rank no pair without a score, and keep
+    every real neighbour (checked against a Python brute force)."""
+    import math
+    import random
+
+    rng = random.Random(7)
+    d, k = 8, 3
+    real = [(i, [rng.uniform(-1.0, 1.0) for _ in range(d)]) for i in range(12)]
+    rows = real + [(100 + i, [0.0] * d) for i in range(6)] + [(200, None)]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(rows, schema).coalesce(1)
+    queries = spark.createDataFrame(real[:3] + [(300, None), (301, [0.0] * d)], schema)
+
+    def key(df):
+        out = sorted(tuple(r) for r in df.collect())
+        assert all(c is not None and not math.isnan(c) for _q, _n, c, _r in out)
+        assert {q for q, *_ in out} <= {0, 1, 2} and {n for _q, n, *_ in out} < set(range(12))
+        return out
+
+    def norm(v):
+        return math.sqrt(sum(x * x for x in v))
+
+    want = set()
+    for qi, qv in real[:3]:
+        cos = sorted(
+            (-round(sum(a * b for a, b in zip(qv, v)) / (norm(qv) * norm(v)), 6), i)
+            for i, v in real if i != qi
+        )
+        want |= {(qi, i, rank) for rank, (_c, i) in enumerate(cos[:k], 1)}
+    faces = [
+        key(fsim.cosine_topk(corpus, queries, k=k, round_to=6, vectorized=v))
+        for v in (True, False)
+    ]
+    assert faces[0] == faces[1] and {(q, n, r) for q, n, _c, r in faces[0]} == want
+
+    sq8 = key(fsim.cosine_topk_quantized(fsim.quantize_embeddings(corpus), queries, k=k, round_to=6))
+    assert len(sq8) == 3 * k
+
+    # a zero codeword per subspace: the zero vectors reconstruct to zero
+    books = [[[0.0] * 4] + [v[s * 4 : s * 4 + 4] for _i, v in real[:3]] for s in range(2)]
+    codes = fsim.pq_encode(corpus, books, assign="blas")
+    faces = [
+        key(fsim.pq_topk(codes, queries, books, k=k, round_to=6, adc=adc))
+        for adc in ("expression", "blas")
+    ]
+    assert faces[0] == faces[1] and len(faces[0]) == 3 * k
 
 
 def test_dedup_by_components_keep_best_policy(spark):
