@@ -41,19 +41,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from etlbigdata_spark.plans.audit import scan_rows
 from etlbigdata_spark.sources import writers
 from etlbigdata_spark.workload import load
-
-
-def scan_output_rows(df):
-    df.collect()
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        m = leaf.metrics()
-        if "Scan" in leaf.nodeName() and m.contains("numOutputRows"):
-            return m.apply("numOutputRows").value()
-    raise AssertionError("no scan leaf with numOutputRows")
 
 
 def main() -> None:
@@ -103,7 +93,8 @@ def main() -> None:
             q = spark.read.parquet(f"{base}/{arm}").filter(
                 F.col("l_orderkey") == probe
             )
-            out[f"{arm}_scan_rows"] = int(scan_output_rows(q))
+            q.collect()
+            out[f"{arm}_scan_rows"] = scan_rows(q)
             times = []
             for _ in range(3):
                 t0 = time.perf_counter()

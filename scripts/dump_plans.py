@@ -21,7 +21,6 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1; an ``sf_dir``
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -61,13 +60,6 @@ PICKS = [
 ]
 
 
-def checks(plan: str) -> list[str]:
-    """Library-backed (plans/audit.py): PLANS.md and the audit API can
-    never disagree about what was extracted; warnings are appended."""
-    a = plan_audit._audit_text(plan)
-    return a.lines() + [f"- WARNING: {w}" for w in a.warnings]
-
-
 def formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
@@ -76,11 +68,12 @@ def dump_queries(spark, tag: str, names: list[str]) -> None:
     out_dir = os.environ.get("PLAN_OUT_DIR", "plans/r13")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        plan = formatted(workload.QUERIES[name](spark, SF_DIR))
+        df = workload.QUERIES[name](spark, SF_DIR)
+        plan = formatted(df)
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        n_ex = plan.count("Exchange")
+        n_ex = sum("Exchange" in n.name for n in plan_audit.walk(df))
         print(f"{name}: {len(plan.splitlines())} lines, {n_ex} Exchange -> {path}")
 
 
@@ -104,7 +97,10 @@ def dump_review(spark, sf_dir: str) -> None:
         lines.append(f"## {name}")
         lines.append(f"*{why}*")
         lines.append("")
-        lines.extend(checks(plan))
+        # library-backed (plans/audit.py): PLANS.md and the audit API can
+        # never disagree about what was extracted; warnings are appended
+        a = plan_audit.audit(df)
+        lines.extend(a.lines() + [f"- WARNING: {w}" for w in a.warnings])
         lines.append("")
         lines.append("```")
         lines.append(plan.rstrip())

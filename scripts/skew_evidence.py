@@ -49,13 +49,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from etlbigdata_spark import workload  # noqa: E402
 from etlbigdata_spark.functions import dedup as fdedup  # noqa: E402
 from etlbigdata_spark.operators import scale  # noqa: E402
+from etlbigdata_spark.plans.audit import walk  # noqa: E402
 from etlbigdata_spark.session import build_session  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sfscale/sf1z"
-
-
-def executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 SKEW_CONF = {
@@ -77,8 +74,7 @@ def main() -> None:
     for name in ("q12_shipmode_priority", "q18_large_orders", "q21_sole_failing_supplier"):
         df = workload.QUERIES[name](spark, SF_DIR)
         df.collect()
-        plan = executed_plan(df)
-        skew_hits[name] = plan.count("skew=true")
+        skew_hits[name] = sum("skew=true" in n.name for n in walk(df))
     out["aqe_skew_splits"] = skew_hits
 
     # same-session on/off A/B for the firing query (runtime SQL conf,

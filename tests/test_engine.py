@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from etlbigdata_spark.engine import Engine
 from etlbigdata_spark.functions import dedup as fdedup
 from etlbigdata_spark.functions import similarity as fsim
+from etlbigdata_spark.plans.audit import walk
 from etlbigdata_spark import workload
 
 
@@ -172,8 +173,7 @@ def test_sql_function_library_matches_dataframe_twins(spark, sf_dir):
     assert a == b
 
     # expression-backed: the plan carries no BatchEvalPython/ArrowEval
-    plan = via_sql._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    assert not any("EvalPython" in n.name for n in walk(via_sql))
 
 
 def test_cluster_embeddings_diversity_sampling(emb):

@@ -11,6 +11,7 @@ from etlbigdata_spark.functions.multimodal import (
     attach_media_meta,
     extract_media_features,
 )
+from etlbigdata_spark.plans.audit import scan_rows, walk
 from etlbigdata_spark.sources import readers, writers
 
 
@@ -40,9 +41,9 @@ def test_parquet_partitioned_write_prunes(engine, tmp_path):
     path = str(tmp_path / "part.parquet")
     writers.write_parquet(df, path, partition_by=["part"])
     back = readers.read_parquet(engine.spark, path).filter(F.col("part") == 2)
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    filters = [n.meta.get("PartitionFilters", "") for n in walk(back)]
     assert back.count() == 25
-    assert "PartitionFilters: [isnotnull(part" in plan  # partition pruning reached the scan
+    assert any(f.startswith("[isnotnull(part") for f in filters)  # partition pruning reached the scan
 
 
 def test_csv_roundtrip_rfc4180(engine, tmp_path):
@@ -401,20 +402,6 @@ def _parquet_bloom_offsets(spark, file_path):
         rdr.close()
 
 
-def _scan_output_rows(df):
-    """Rows EMITTED by the file scan (post row-group/page skipping,
-    pre-Filter) — runs the query, then reads the scan node's
-    numOutputRows SQL metric off the executed plan."""
-    df.collect()
-    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        m = leaf.metrics()
-        if "Scan" in leaf.nodeName() and m.contains("numOutputRows"):
-            return m.apply("numOutputRows").value()
-    raise AssertionError("no scan leaf with numOutputRows found")
-
-
 def test_parquet_bloom_filter_written_and_skips_row_groups(spark, tmp_path):
     """A18 bloom filters — the POINT-LOOKUP complement to cluster_by/
     z-order: on a high-cardinality unsorted key where min/max stats
@@ -455,14 +442,13 @@ def test_parquet_bloom_filter_written_and_skips_row_groups(spark, tmp_path):
 
     # absent odd key, strictly inside [0, 2n) so stats can never skip
     probe = n + 1
-    scanned_control = _scan_output_rows(
-        spark.read.parquet(control).filter(F.col("k") == probe)
-    )
-    scanned_bloom = _scan_output_rows(
-        spark.read.parquet(bloomed).filter(F.col("k") == probe)
-    )
-    assert scanned_control == n, "control: stats can't skip, full scan expected"
-    assert scanned_bloom == 0, "bloom: every row group skipped for the absent key"
+    # rows EMITTED by the file scan (after row-group/page skipping,
+    # before the Filter): the scan's numOutputRows once the query ran
+    control_q = spark.read.parquet(control).filter(F.col("k") == probe)
+    bloom_q = spark.read.parquet(bloomed).filter(F.col("k") == probe)
+    assert control_q.collect() == bloom_q.collect() == []
+    assert scan_rows(control_q) == n, "control: stats can't skip, full scan expected"
+    assert scan_rows(bloom_q) == 0, "bloom: every row group skipped for the absent key"
     # present key still found (no false negatives by construction)
     assert spark.read.parquet(bloomed).filter(F.col("k") == 4).count() == 1
 
@@ -477,8 +463,7 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
     q = back.filter(back.n_nationkey == 3).select("n_name")
     q.collect()
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "n_nationkey" in plan.split("PushedFilters: [", 1)[1]
+    assert any("n_nationkey" in n.meta.get("PushedFilters", "") for n in walk(q))
 
 
 def test_text_reader_lines_and_whole_files(spark, tmp_path):

@@ -20,6 +20,7 @@ from etlbigdata_spark.functions import bpe as fbpe
 from etlbigdata_spark.functions import dedup as fdedup
 from etlbigdata_spark.functions import similarity as fsim
 from etlbigdata_spark.functions import text as ftext
+from etlbigdata_spark.plans.audit import walk
 from etlbigdata_spark.plans.pipeline import Pipeline
 
 
@@ -89,8 +90,11 @@ def test_pipeline_is_one_fused_plan(engine, sales):
         ]
     )
     out = pipe.apply(sales)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan" in plan  # single plan from filter back to the source
+    names = [n.name for n in walk(out)]
+    # single plan from filter back to the source: one scan, nothing
+    # cached or shuffled between the ops
+    assert sum("Scan" in n for n in names) == 1, names
+    assert not any(n == "InMemoryTableScan" or "Exchange" in n for n in names), names
 
 
 def test_union_via_pipeline(engine, sales):

@@ -1,8 +1,9 @@
 """Repository hygiene: every ``scripts/<name>.py`` that the package, the
 tests or the run docs name must exist, so a deleted or renamed script
-cannot leave a docstring or a recipe pointing at nothing; and every
+cannot leave a docstring or a recipe pointing at nothing; every
 ``tests/slow_manifest.txt`` node id must name a test its file still
-defines.  No Spark session."""
+defines; and no test or script reads a plan around ``plans.audit.walk``.
+No Spark session."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 _SCRIPT_REF = re.compile(r"scripts/(\w+)\.py")
+_PLAN_STRING_READ = re.compile(r"executedPlan\(\)\.toString\(\)|collectLeaves\(\)")
 
 
 def _scanned_files() -> list[Path]:
@@ -61,3 +63,17 @@ def test_slow_manifest_names_defined_tests():
         if not names or any(n.split("[")[0] not in defined[path] for n in names):
             stale.append(nodeid)
     assert not stale, "\n".join(stale)
+
+
+def test_plans_are_read_only_through_the_walker():
+    """``plans.audit.walk`` is the one reader of an executed plan: it
+    unwraps AQE wrappers, query stages and cached subplans, which a grep
+    of the plan string or a scan of the tree's leaves does not, so no
+    test or script may grow a second reader."""
+    hits = [
+        str(p.relative_to(ROOT))
+        for d in ("tests", "scripts")
+        for p in sorted((ROOT / d).rglob("*.py"))
+        if _PLAN_STRING_READ.search(p.read_text(encoding="utf-8"))
+    ]
+    assert not hits, hits

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etlbigdata_spark.operators import scale
+from etlbigdata_spark.plans.audit import walk
 
 
 @pytest.fixture(scope="module")
@@ -98,9 +99,9 @@ def test_bucketed_join_is_exchange_free(spark):
         scale.write_bucketed(left, "t_bkt_left", ["k"], n_buckets=8, sort_keys=["k"])
         scale.write_bucketed(right, "t_bkt_right", ["k"], n_buckets=8, sort_keys=["k"])
         joined = scale.bucketed_join(spark, "t_bkt_left", "t_bkt_right", ["k"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        assert "Bucketed: true" in plan
+        plan = list(walk(joined))
+        assert not any("Exchange" in n.name for n in plan), "bucketed join still shuffles"
+        assert any(n.meta.get("Bucketed") == "true" for n in plan)
         assert joined.count() == 1000
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -132,8 +133,8 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         # collect, not count: the AQE-final plan is only visible on the
         # QueryExecution the action actually ran (count spawns its own)
         assert len(j.collect()) == 202000
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, f"AQE did not split the hot partition:\n{plan[:2000]}"
+        plan = [n.name for n in walk(j)]
+        assert any("skew=true" in n for n in plan), f"AQE did not split the hot partition:\n{plan}"
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -157,8 +158,8 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     dim = spark.read.parquet(dim_path).filter(F.col("tag") == "keep")
     j = fact.join(dim, "p").agg(F.sum("v").alias("s"))
     rows = j.collect()
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), f"DPP did not fire:\n{plan[:2000]}"
+    filters = [n.meta.get("PartitionFilters", "") for n in walk(j)]
+    assert any("dynamicpruning" in f for f in filters), f"DPP did not fire:\n{filters}"
     # correctness of the pruned result
     assert rows[0]["s"] == sum(i * 2 for i in range(50000) if i % 20 < 2)
 
@@ -186,8 +187,8 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, tmp_path):
         small = spark.read.parquet(small_p).filter(F.col("t") == "x")
         j = big.join(small, "id").agg(F.count(F.lit(1)).alias("n"))
         rows = j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan, f"bloom filter not injected:\n{plan[:2000]}"
+        plan = [n.text for n in walk(j)]
+        assert any("bloom_filter_agg" in t for t in plan), f"bloom filter not injected:\n{plan}"
         assert rows[0]["n"] == 2000  # ids 0,100,...,199900 all < 200000
     finally:
         for k, v in prev.items():

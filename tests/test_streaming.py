@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etlbigdata_spark.plans.audit import walk
 from etlbigdata_spark.streaming import ops
 
 EVENT_SCHEMA = T.StructType(
@@ -1339,11 +1340,11 @@ def test_foreach_batch_ann_probe_partition_pruned_and_matches_st13(
     chunk1.coalesce(1).write.mode("append").parquet(stage)
 
     collected: list = []
-    plans: list[str] = []
+    scan_filters: list[str] = []
 
     def sink(res, epoch_id):
         collected.extend(res.collect())
-        plans.append(res._jdf.queryExecution().executedPlan().toString())
+        scan_filters.append(" ".join(n.meta.get("PartitionFilters", "") for n in walk(res)))
 
     # exclude_self=False mirrors the registered st14 face (round-9
     # advice: the st13 oracle never excludes self-pairs, and the default
@@ -1373,9 +1374,9 @@ def test_foreach_batch_ann_probe_partition_pruned_and_matches_st13(
     assert got == want and len(got) > 0
 
     # (b) every batch's index scan carries a centroid partition filter
-    assert len(plans) >= 2
-    for plan in plans:
-        assert re.search(r"PartitionFilters: \[[^\]]*centroid[^\]]*\]", plan), plan
+    assert len(scan_filters) >= 2
+    for filters in scan_filters:
+        assert "centroid" in filters, scan_filters
 
     # (c) a small batch reads EXACTLY its queries' probed cells: 3 query
     # vectors at n_probe=1 → the isin list is those ≤3 cells, not all 8
@@ -1390,9 +1391,9 @@ def test_foreach_batch_ann_probe_partition_pruned_and_matches_st13(
         spark, idx, mini, n_probe=1, round_to=6, threshold=0.99
     )
     probe.collect()
-    mplan = probe._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*centroid#\d+ IN \(([^)]*)\)", mplan)
-    assert m, mplan
+    filters = " ".join(n.meta.get("PartitionFilters", "") for n in walk(probe))
+    m = re.search(r"centroid#\d+ IN \(([^)]*)\)", filters)
+    assert m, filters
     seen_cells = {int(x) for x in m.group(1).split(",")}
     assert seen_cells == expect_cells and len(seen_cells) <= 3 < 8
 
