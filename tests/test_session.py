@@ -2,17 +2,25 @@
 session that re-runs the same query shapes reuses its compiled
 generated classes (``spark.sql.codegen.cache.maxEntries`` and
 ``spark.sql.codegen.useIdInClassName`` in ``session.build_session``),
-and every Parquet file the engine writes takes the session's zstd codec
-(``spark.sql.parquet.compression.codec``)."""
+every Parquet file the engine writes takes the session's zstd codec
+(``spark.sql.parquet.compression.codec``), and a fresh driver JVM starts
+from the class-data-sharing archive the previous one trained."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
 from etlbigdata_spark import workload
 from etlbigdata_spark.benchutil import codegen_stats
+from etlbigdata_spark.session import _complete, build_session
+
+_REPO = Path(__file__).resolve().parent.parent
 
 # The wizard's 19 click steps and eight curation steps.  One cycle
 # compiles far more generated classes than Spark's default cache of 100
@@ -39,6 +47,91 @@ _CODEC = "spark.sql.parquet.compression.codec"
 def test_session_carries_codegen_and_codec_defaults(spark):
     assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
     assert spark.conf.get(_CODEC) == "zstd"
+
+
+def test_build_session_reads_cpu_count_per_call(spark, monkeypatch):
+    """``SPARK_GRAFT_CPUS`` set after the package is imported sizes the
+    next session's shuffle partitions, as it sizes its ``local[N]``."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    try:
+        assert build_session().conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+# One fresh Python process and driver JVM; each argv item is a
+# ``key=value`` Spark conf.
+_FRESH_SESSION = """
+import sys
+from etlbigdata_spark.session import build_session
+conf = dict(a.split("=", 1) for a in sys.argv[1:])
+spark = build_session(master="local[1]", shuffle_partitions=1,
+                      extra_conf={"spark.driver.memory": "1g", **conf})
+print("rows", spark.range(5).count())
+"""
+
+
+def _fresh_session(cache: Path, cwd: Path, *conf: str) -> list[str]:
+    """Stdout lines of one fresh session.  The JVM shares the pipe, so
+    this returns only after the JVM has exited and dumped any archive."""
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), PYTHONPATH=str(_REPO))
+    proc = subprocess.run([sys.executable, "-c", _FRESH_SESSION, *conf], cwd=cwd, env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stdout.splitlines()
+
+
+def test_class_archive_trains_serves_and_survives_damage(tmp_path):
+    cache, cwd = tmp_path / "cache", tmp_path / "cwd"
+    cds = cache / "etlbigdata_spark" / "cds"
+    good = tmp_path / "good.jsa"
+    cwd.mkdir()
+    try:
+        # the first fresh JVM finds no archive, trains one, and prints
+        # nothing of its own after the program's last line
+        assert _fresh_session(cache, cwd)[-1] == "rows 5"
+        (dump,) = cds.glob("*.part")
+        assert _complete(dump)
+
+        # the next promotes the dump and maps Spark's classes from it
+        log = tmp_path / "classes.log"
+        assert _fresh_session(
+            cache, cwd, f"spark.driver.extraJavaOptions=-Xlog:class+load=info:file={log}"
+        )[-1] == "rows 5"
+        assert not list(cds.glob("*.part"))
+        (archive,) = cds.glob("*.jsa")
+        assert "org.apache.spark.SparkContext source: shared objects file (top)" in log.read_text()
+        shutil.copyfile(archive, good)
+        archive.unlink()
+
+        def zero_header(p):
+            shutil.copyfile(good, p)
+            with open(p, "r+b") as f:
+                f.write(bytes(4096))
+
+        def random_bytes(p):
+            p.write_bytes(os.urandom(1 << 20))
+
+        def truncated(p):
+            with open(good, "rb") as src, open(p, "wb") as dst:
+                dst.write(src.read(50_000_000))
+
+        # the same truncation under a name that records its size passes
+        # every check before the launch, and the JVM dies mapping it
+        crashing = archive.with_name(archive.name.split("-")[0] + "-50000000.jsa")
+        for damage, path in ((zero_header, archive), (random_bytes, archive),
+                             (truncated, archive), (truncated, crashing)):
+            for p in cds.glob("*.part"):
+                p.unlink()
+            damage(path)
+            assert _fresh_session(cache, cwd)[-1] == "rows 5", damage.__name__
+            assert not path.exists(), damage.__name__
+        assert list(cds.glob("hs_err_pid*.log"))
+        assert not list(cwd.iterdir())
+    finally:  # a few 100+ MB archives
+        shutil.rmtree(cache, ignore_errors=True)
+        good.unlink(missing_ok=True)
 
 
 @pytest.mark.slow
