@@ -28,12 +28,12 @@ Defaults are chosen for the 100 TB design point and scale down fine to
   about half as long.  It lives under
   ``${XDG_CACHE_HOME:-~/.cache}/etlbigdata_spark/cds/``, keyed on the
   ``java`` binary and the Spark jars, so it outlives any checkout.  The
-  first fresh JVM that finds none trains it: JDK 17 dumps the classes
-  the run loaded when that JVM exits, which takes about 10 s and
-  138-172 MB of disk.  The next launch promotes the dump only if it is
-  complete.  A missing, damaged or mismatched archive means a normal
-  start, and a launch that still fails with the archive deletes it and
-  launches once more without it.
+  first fresh JVM that finds none trains it: that JVM starts a few
+  seconds slower, and JDK 17 dumps the classes the run loaded when it
+  exits, which takes about 10 s and 140-225 MB of disk.  The next
+  launch promotes the dump only if it is complete.  A missing, damaged
+  or mismatched archive means a normal start, and a launch that still
+  fails with the archive deletes it and launches once more without it.
 """
 
 from __future__ import annotations
