@@ -392,8 +392,12 @@ def pack_shards(
     Documents are first routed to one of ``n_groups`` content-addressed
     groups (md5 of the id — reshard-stable, no RNG, map-side; the same
     mechanism as :func:`hash_split`), then packed SEQUENTIALLY within
-    each group in ``id_col`` order: shard index = floor(tokens-before-me
-    / budget). A shard may exceed the budget by at most one document
+    each group in ``id_col`` order, then ``token_col`` order among rows
+    that share an id: shard index = floor(tokens-before-me / budget).
+    Rows that tie on both are interchangeable here, so every
+    derivation from the same rows assigns the same multiset of
+    (id, tokens, group, shard). A shard may exceed the budget by at
+    most one document
     (standard greedy sequential packing); each group's packing is ONE
     window shuffle bounded by the group, so parallelism = n_groups and
     no global sort exists. Size ``n_groups`` to the cluster: at 100 TB
@@ -410,7 +414,7 @@ def pack_shards(
     ).cast("int")
     w = (
         Window.partitionBy("__grp")
-        .orderBy(F.col(id_col).asc())
+        .orderBy(F.col(id_col).asc(), F.col(token_col).asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     out = (
@@ -499,8 +503,9 @@ def packed_sequences(
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize :func:`pack_shards` output as TRAINING SEQUENCES: one
     row per (group, shard) holding the pack's documents concatenated in
-    ``id_col`` order as a canonical token stream, plus the per-document
-    offset map inside each pack.
+    ``id_col`` order (token count breaks ties on a duplicate id) as a
+    canonical token stream, plus the per-document offset map inside
+    each pack.
 
     Returns ``(seqs, docs)``:
 
@@ -559,7 +564,7 @@ def packed_sequences(
     pid = (F.col("group").cast("long") * _PACK_STRIDE + F.col("shard")).alias("pack_id")
     w = (
         Window.partitionBy("group", "shard")
-        .orderBy(F.col(id_col).asc())
+        .orderBy(F.col(id_col).asc(), F.col("__ntok").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     docs = (
@@ -575,12 +580,18 @@ def packed_sequences(
     )
     # flatten token ARRAYS (not join text fragments): zero-token docs
     # vanish instead of leaving a double space, so packed_text is
-    # strictly the canonical token stream
+    # strictly the canonical token stream.  Documents sort by (id, token
+    # count) first, as the offsets window above does, so a duplicate id
+    # cannot put one document's tokens under another's offsets.
     arr = F.flatten(
         F.transform(
             F.array_sort(
                 F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("__ctoks").alias("t"))
+                    F.struct(
+                        F.col(id_col).alias("i"),
+                        F.col("__ntok").alias("n"),
+                        F.col("__ctoks").alias("t"),
+                    )
                 )
             ),
             lambda s: s["t"],

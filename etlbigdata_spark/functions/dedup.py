@@ -35,15 +35,6 @@ from .text import (  # noqa: F401  (_LIVE_CACHE, release_cached: re-exported)
 # frees the persists of both modules (and of corpus/multimodal, which
 # import _persist_scoped from here).
 
-# Shuffled-hash build sizing for the inverted-index self-join (round 9,
-# see _shared_counts_and_sizes): ~1.5 M narrow (id, hash) rows is a
-# ~90 MB hash relation — comfortably inside a fair task share of
-# execution memory at any realistic executor size.  Module-level so
-# tests exercise the scaling regimes without multi-GB fixtures.
-_SHJ_BUILD_ROWS = 1_500_000
-_SHJ_MAX_PARTS = 65_536
-
-
 # -- exact ------------------------------------------------------------
 def exact_dedup(df: DataFrame, text_col: str = "text", keep: str = "min", id_col: str = "doc_id") -> DataFrame:
     """B23/A8 — keep one doc per exact content hash. Shuffles md5(text)
@@ -194,15 +185,11 @@ def ngram_jaccard_pairs(
     with the frequency cutoff still counted corpus-wide (see
     :func:`_shared_counts_and_sizes`).
 
-    NOTE: with ``max_doc_freq`` set, construction EAGERLY runs one
-    Spark job (round 9) — a count on the persisted shingle table sizes
-    the self-join so hash builds stay bounded as the corpus grows; the
-    cache it materializes is the one every consumer of the plan needs
-    anyway.  With ``max_doc_freq=None`` construction stays lazy and the
-    join stays spill-safe sort-merge (no per-key bound exists to
-    justify the hash hint).  (A round-12 restructure that pre-
-    partitioned the cache by shingle was measured and REVERTED — the
-    negative result is recorded in ``_shared_counts_and_sizes``.)
+    Construction runs no Spark job, guarded or not: the self-join's
+    strategy is left to the planner and to AQE's measured shuffle bytes
+    (see :func:`_shared_counts_and_sizes`).  (A round-12 restructure
+    that pre-partitioned the cache by shingle was measured and
+    REVERTED; the negative result is recorded there.)
     """
     shared = _shared_counts_and_sizes(df, id_col, text_col, n, max_doc_freq, restrict_ids)
     return (
@@ -240,34 +227,25 @@ def _shared_counts_and_sizes(
     # hashes are built straight from per-token hashes (no per-position
     # string materialization) — see exploded_shingle_hashes.
     sh = exploded_shingle_hashes(df, id_col, text_col, n)
-    # shuffle_hash hint on the self-join: sort-merge would SORT both
-    # multi-million-row sides by shingle hash only to feed a pair-count
-    # aggregate that doesn't need order — the sorts dominated the query.
-    # Measured round 5 at sf1 (4× alternating same-session runs):
-    # 21.3-30.0 s SMJ vs 10.4-12.8 s SHJ (~2.1×). ``max_doc_freq`` has
-    # already capped the hot keys a partition can accumulate; this is a
-    # per-query hint, NOT the rejected global preferSortMergeJoin=false
-    # (BASELINE.md).
-    #
-    # Round 9: the hint alone is NOT scale-safe — a shuffled-hash build
-    # must fit execution memory, and with the session's FIXED shuffle
-    # partition count the per-partition build grows linearly with the
-    # corpus (first real failure at sf30/75 M shingle rows on 32
-    # partitions: "Can't acquire ... bytes to build hash relation").
-    # So the join's width now scales with the data: one count() on the
-    # already-persisted shingle table (materializes the cache every
-    # consumer needs anyway — the same eager-probe discipline as the
-    # simhash auto-probe, stated here) sizes an explicit
-    # repartition-by-shingle keeping builds at ~BUILD_ROWS rows per
-    # task; if the cap is ever insufficient the hint is DROPPED and
-    # Catalyst's sort-merge join spills gracefully instead of dying.
-    # Repartition width bounds the AVERAGE build; only the doc-freq
-    # guard bounds a single KEY (all rows of one hot shingle land in one
-    # partition no matter the width).  So the hint is forced only when
-    # BOTH bounds hold — unguarded callers (max_doc_freq=None) get the
-    # spill-safe sort-merge default instead of a possible build OOM,
-    # and skip the sizing count entirely: their branch outcome does not
-    # depend on it, so their construction stays LAZY (round-9 review).
+    # The self-join's strategy is decided at runtime from measured bytes,
+    # not at construction.  Sort-merge would SORT both multi-million-row
+    # sides by shingle hash only to feed a pair-count aggregate that does
+    # not need order (round 5 at sf1: 21.3-30.0 s SMJ vs 10.4-12.8 s SHJ).
+    # A shuffled-hash build must fit execution memory, though, and per
+    # partition it grows with the corpus (round 9: "Can't acquire ...
+    # bytes to build hash relation" at sf30, 75 M shingle rows on 32
+    # partitions); without ``max_doc_freq`` one hot shingle alone can
+    # outgrow any partition.  When the join's sides are shuffled, AQE
+    # covers both: it broadcasts a side that measures small, turns the
+    # join into a shuffled-hash join when every post-shuffle partition is
+    # under the session's maxShuffledHashJoinLocalMapThreshold, and
+    # leaves the spill-safe sort-merge join otherwise.  When the doc-freq
+    # guard's anti-join is itself sort-merge (a hot set too big to
+    # broadcast), the cache is already partitioned and sorted by shingle,
+    # and the self-join merges it with no shuffle, sort or hash build.
+    # A small corpus may be broadcast before any of that: until the cache
+    # is materialized, the planner sizes it from the scanned bytes, which
+    # leave out the explode's fan-out.
     #
     # Round 12 NEGATIVE RESULT, kept as a warning: repartitioning the
     # stream by shingle BEFORE the guard+persist (so the self-join
@@ -279,8 +257,8 @@ def _shared_counts_and_sizes(
     # broadcast, and the two sizes joins lost their broadcast
     # conversion — two extra full shuffles (~120 MB each at sf1) of
     # the candidate-pair table, dwarfing the two ~32 MB shingle
-    # exchanges the rewrite removed.  The round-9 shape below is the
-    # measured optimum; see OPTIMIZATION_r12.md.
+    # exchanges the rewrite removed.  The cache below stays
+    # unpartitioned; see OPTIMIZATION_r12.md.
     if max_doc_freq is not None:
         sh = df_freq_cutoff(sh, max_doc_freq)
     if restrict_ids is not None:
@@ -289,26 +267,9 @@ def _shared_counts_and_sizes(
     # persist it so the tokenizer runs once, not four times
     sh = _persist_scoped(sh)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
-    if max_doc_freq is None:
-        a, b = sh.alias("a"), sh.alias("b")  # SMJ: sorts, but spills
-    else:
-        n_rows = sh.count()
-        try:
-            session_parts = int(
-                sh.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except ValueError:  # e.g. "auto" under managed AQE shuffles
-            session_parts = 200
-        need = -(-n_rows // _SHJ_BUILD_ROWS)  # ceil
-        if need > _SHJ_MAX_PARTS:
-            a, b = sh.alias("a"), sh.alias("b")  # SMJ: sorts, but spills
-        elif need > session_parts:
-            sh = sh.repartition(int(need), "shingle")
-            a, b = sh.alias("a"), sh.hint("shuffle_hash").alias("b")
-        else:
-            a, b = sh.alias("a"), sh.hint("shuffle_hash").alias("b")
     shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
+        sh.alias("a")
+        .join(sh.alias("b"), (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
@@ -343,9 +304,8 @@ def ngram_containment_pairs(
     Default ``n=5``: longer windows than Jaccard's 3 so "shared"
     means verbatim runs of ≥5 tokens, not vocabulary overlap.  Same
     plan/scale properties as :func:`ngram_jaccard_pairs` (shared core:
-    :func:`_shared_counts_and_sizes`), including ``max_doc_freq`` AND
-    the construction-time sizing job + sort-merge-when-unguarded
-    behavior documented there.
+    :func:`_shared_counts_and_sizes`), including ``max_doc_freq`` and
+    the runtime choice of the self-join's strategy.
     """
     shared = _shared_counts_and_sizes(df, id_col, text_col, n, max_doc_freq)
     return (

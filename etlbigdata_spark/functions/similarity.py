@@ -60,14 +60,18 @@ def _rank_topk(
     tie-break, the same across faces and engines.
 
     NaN becomes NULL, which passes no threshold and sorts after every
-    score, so the NULL filter can sit above the window; a filter below
-    it is pushed under the projection and evaluates the cosine again."""
+    score, so the NULL filter can sit above the window.  A filter on a
+    projected cosine is pushed under the projection and evaluates the
+    cosine a second time, so the threshold face computes it in a
+    generator (one-element explode), which no filter crosses."""
     cos = F.nanvl(F.col("cosine"), F.lit(None).cast("double"))
     if round_to is not None:
         cos = F.round(cos, round_to)
-    scored = scored.select("query_id", "neighbor_id", *keep, cos.alias("cosine"))
     if threshold is not None:
-        return scored.filter(F.col("cosine") >= threshold)
+        return scored.select(
+            "query_id", "neighbor_id", *keep, F.explode(F.array(cos)).alias("cosine")
+        ).filter(F.col("cosine") >= threshold)
+    scored = scored.select("query_id", "neighbor_id", *keep, cos.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         (F.col("rank") <= k) & F.col("cosine").isNotNull()

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.audit import walk
+
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small: broadcast as literals into codegen.
 _LANG_STOPWORDS: dict[str, list[str]] = {
@@ -102,10 +104,16 @@ def rebalance_for_expansion(df: DataFrame) -> DataFrame:
     on d02/d04/d10/t23 at 32 cores); an unknown estimate (8 EiB
     sentinel) falls back to full parallelism, the scale-safe default.
 
-    Streaming frames pass through untouched (micro-batch sizing is the
-    trigger's job, and ``.rdd`` is undefined for them).
+    Only a frame whose physical plan holds no exchange is measured
+    against that width, and measuring it runs no job.  A frame with an
+    exchange passes through unchanged: AQE sizes its post-shuffle
+    partitions from measured bytes, and reading its partition count
+    (``.rdd``) would run the stages below the exchange as a job of
+    their own, which the action then runs again.  Streaming frames pass
+    through too (micro-batch sizing is the trigger's job, and ``.rdd``
+    is undefined for them).
     """
-    if df.isStreaming:
+    if df.isStreaming or any(n.name.endswith("Exchange") for n in walk(df)):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -398,14 +406,19 @@ def unigram_surprisal(
     corpus-width cache (alternating pairs at sf1: 2.13 → 1.88 s,
     result-identical; sf0.1 flat), and at 100 TB a corpus-scale cache
     is a non-starter while a second map pass is linear CPU on data
-    already being read.  Corpus totals ride in as a broadcast 1-row
-    cross join.  The vocab-keyed join shuffles 16-byte rows — at
+    already being read.  Corpus totals ride in as scalar subqueries
+    over ``freqs`` (Catalyst merges the two into one aggregate), not a
+    cross join: a cross join multiplies the scored vocab's size
+    estimate, and the planner would then broadcast the token stream
+    instead, whose estimate leaves out the explode's fan-out.  The
+    vocab-keyed join shuffles 16-byte rows — at
     production vocab sizes (~10⁷ distinct) the scored vocab table is
-    ~100 MB total, far below any per-partition bound.  EAGER: an exact
-    ``freqs.count()`` probe (vocab-sized, and it doubles as the persist
-    materialization) decides whether the scored vocab BROADCASTS
-    instead, so the full token stream never shuffles by token (round-6
-    measurement: the broadcast join 2.76 → 1.95 s).
+    ~100 MB total, far below any per-partition bound.  Construction
+    runs no Spark job: the scored vocab is broadcast when its size
+    estimate, or else AQE's measurement of it, is under the broadcast
+    threshold, so the full token stream never shuffles by token
+    (round-6 measurement: the broadcast join 2.76 → 1.95 s), and a
+    larger vocab keeps the shuffle join.
     Documents with zero tokens produce no output row (no distribution
     to score them under); left-join downstream if they must be kept.
     """
@@ -417,33 +430,20 @@ def unigram_surprisal(
     freqs = _persist_scoped(
         toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__cnt"))
     )
-    # EAGER probe: exact vocab count off the persisted freqs table (one
-    # vocab-sized job that also materializes the cache every later
-    # consumer reads). ~2M distinct ≈ 32 MB — comfortably under executor
-    # broadcast budgets; natural-language vocab passes at any corpus
-    # size, adversarial random-string corpora fall back to the shuffle
-    # join.
-    broadcast_vocab = freqs.count() < 2_000_000
-    stats = freqs.agg(
-        F.sum("__cnt").alias("__total"), F.count(F.lit(1)).alias("__vocab")
-    )
-    scored = (
-        freqs.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "__surp_u",
-            F.round(
-                -F.log(
-                    2.0,
-                    (F.col("__cnt") + F.lit(smoothing))
-                    / (F.col("__total") + F.lit(smoothing) * F.col("__vocab")),
-                )
-                * 1e6
-            ).cast("long"),
-        )
-        .select("tok", "__surp_u")
+    total = freqs.agg(F.sum("__cnt")).scalar()
+    vocab = freqs.agg(F.count(F.lit(1))).scalar()
+    scored = freqs.select(
+        "tok",
+        F.round(
+            -F.log(
+                2.0,
+                (F.col("__cnt") + F.lit(smoothing)) / (total + F.lit(smoothing) * vocab),
+            )
+            * 1e6
+        ).cast("long").alias("__surp_u"),
     )
     return (
-        toks.join(F.broadcast(scored) if broadcast_vocab else scored, "tok")
+        toks.join(scored, "tok")
         .groupBy("__id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),

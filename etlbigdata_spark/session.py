@@ -213,6 +213,20 @@ def build_session(
         # trade-off and AQE still upgrades anything that measures small
         # at runtime.
         "spark.sql.autoBroadcastJoinThreshold": "10m",
+        # A sort-merge join becomes a shuffled-hash join at runtime when
+        # every post-shuffle partition of its build side measures at most
+        # this many (compressed shuffle) bytes.  It replaces per-query
+        # row-count probes with the sizes AQE measures: a build stays
+        # hash-join sized, and a larger or skewed one sorts and spills
+        # instead.  Spark ignores it below advisoryPartitionSizeInBytes,
+        # so the two move together.  16 MB, not Spark's 64 MB advisory
+        # size: d02's shingle shuffles measure 12-13 bytes per (id, hash)
+        # row at sf1, so 16 MB is 1.3-1.4 M rows per hash build, the size
+        # the round-9 sizing kept builds to after 2.3 M rows per task
+        # failed at sf30; 64 MB would admit over 5 M.  The advisory size
+        # also caps AQE's coalesced partitions, at 16 MB.
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16MB",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "16MB",
         "spark.sql.parquet.filterPushdown": "true",
         # Compiled generated classes (whole-stage code on the driver,
         # projections and predicates inside tasks) live in an LRU cache

@@ -1527,6 +1527,32 @@ def test_packed_sequences_offsets_and_canonical_text(spark):
     assert offs == {1: (1, 3), 2: (4, 3), 3: (4, 5)}  # doc 2: empty range
 
 
+def test_packed_sequences_duplicate_ids_keep_text_with_offsets(spark):
+    """Documents that share an id: each offset range still covers the
+    tokens of one document with that id.  The token branch and the
+    narrow offsets branch order documents independently, so an id tie
+    left to arrival order could put one document's tokens under
+    another's offsets, in the same pack or across a shard boundary."""
+    from etlbigdata_spark.functions import corpus as fcorpus
+
+    rows = [
+        (1, "zeta zeta zeta"), (1, "alpha"),
+        (2, "beta"), (2, "omega omega"),
+        (3, "kappa kappa kappa kappa"), (3, "mu mu"), (3, "nu"),
+        (4, "x y"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    want = sorted((i, tuple(t.split())) for i, t in rows)
+    for budget in (100, 3):
+        seqs, docs = fcorpus.packed_sequences(df, budget=budget, n_groups=1, tokens_out=True)
+        toks = {r.pack_id: r.packed_toks for r in seqs.collect()}
+        got = sorted(
+            (r.doc_id, tuple(toks[r.pack_id][r.doc_start - 1:r.doc_end]))
+            for r in docs.collect()
+        )
+        assert got == want, budget
+
+
 def test_packed_span_dedup_boundary_crossing_and_keep_first_cut(spark):
     """A spliced A|B pair duplicated in two packs: the whole 12-token
     stream (including the windows spanning the A-B boundary that only

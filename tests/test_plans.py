@@ -86,6 +86,14 @@ def test_q05_dims_broadcast_and_lineitem_pruned(plans):
     assert width <= 4, f"q05 lineitem scan reads {width} columns"
 
 
+def _self_joins(plan: list[PlanNode]) -> list[PlanNode]:
+    """Each inner join keyed on the shingle hash: the inverted-index
+    self-join of d02/d08 (the doc-freq guard's join on the same key is
+    an anti join)."""
+    return [n for n in plan if n.name.endswith("Join") and "[shingle" in n.text
+            and n.jnode.joinType().toString() == "Inner"]
+
+
 def test_d02_joins_on_hashes_not_strings(plans):
     """The inverted-index self-join must shuffle 8-byte hashes; a shingle
     STRING in any Exchange hashpartitioning key is the regression."""
@@ -93,76 +101,140 @@ def test_d02_joins_on_hashes_not_strings(plans):
     for part in _exchanges(plan):
         assert "shingle_str" not in part
     assert _has(plan, "xxhash64"), "d02 no longer hashes shingles"
-    # round 5: the self-join is shuffled-HASH by hint (sort-merge sorted
-    # both multi-million-row sides for an order-insensitive pair count —
-    # measured 2.1x slower at sf1); a refactor or Spark upgrade dropping
-    # the hint must fail here, not in a bench regression
-    assert "ShuffledHashJoin" in _names(plan), "d02 self-join lost its shuffle_hash hint"
+    # round 5: sort-merge sorted both multi-million-row sides for an
+    # order-insensitive pair count (measured 2.1x slower at sf1); at the
+    # fixture's size AQE must pick a hash join, broadcast or shuffled
+    joins = _names(_self_joins(plan))
+    assert len(joins) == 1 and joins[0] in ("BroadcastHashJoin", "ShuffledHashJoin"), joins
 
 
 def test_d08_inherits_d02_plan_shape(plans):
     """Containment pairs run through the same inverted-index core as
-    d02 (shared _shared_counts_and_sizes): hashed shingles, shuffled-
-    hash self-join — a refactor that forks the plans must fail here."""
+    d02 (shared _shared_counts_and_sizes): hashed shingles, a hash
+    self-join — a refactor that forks the plans must fail here."""
     plan = plans["d08_containment_pairs"]
     for part in _exchanges(plan):
         assert "shingle_str" not in part
     assert _has(plan, "xxhash64"), "d08 no longer hashes shingles"
-    assert "ShuffledHashJoin" in _names(plan), "d08 self-join lost the shuffle_hash hint"
+    joins = _names(_self_joins(plan))
+    assert len(joins) == 1 and joins[0] in ("BroadcastHashJoin", "ShuffledHashJoin"), joins
 
 
-def test_d02_shj_build_scales_with_corpus(spark, sf_dir, monkeypatch):
+def _join_subtree(node: PlanNode) -> set[str]:
+    """The operators below a join, down to and including any cached
+    relation's scan or AQE stage (a cached plan is not entered)."""
+    names, todo = set(), [node.jnode.children().apply(i)
+                          for i in range(node.jnode.children().length())]
+    while todo:
+        c = todo.pop()
+        names.add(c.nodeName())
+        if c.nodeName() not in ("InMemoryTableScan", "TableCacheQueryStage"):
+            todo.extend(c.children().apply(i) for i in range(c.children().length()))
+    return names
+
+
+def test_d02_self_join_strategy_follows_measured_size(spark, sf_dir):
     """Round-9 regression (first hit at sf30: 'Can't acquire ... bytes
-    to build hash relation'): the self-join's shuffled-hash build must
-    stay BOUNDED as the corpus grows.  Three regimes, same results:
-    (a) small corpus — hint as before, session partition count;
-    (b) shingle rows exceed _SHJ_BUILD_ROWS — explicit repartition
-        widens the join so per-task builds stay ~constant;
-    (c) even _SHJ_MAX_PARTS insufficient — hint DROPPED, sort-merge
-        spills instead of dying."""
+    to build hash relation'): the self-join's hash build must stay
+    BOUNDED as the corpus grows.  No builder decides it; each regime is
+    a session conf, set here and restored:
+    (a) session defaults: a hash join (broadcast at this size);
+    (b) broadcast off: AQE measures the shuffled sides, and every
+        partition is under maxShuffledHashJoinLocalMapThreshold, so a
+        shuffled-hash join.  With the doc-freq guard the guard's
+        anti-join is sort-merge here, so the cache arrives partitioned
+        and sorted by shingle and the self-join merges it directly:
+        no exchange, no sort, no hash build;
+    (c) broadcast off and that threshold 0: no build fits, so the
+        spill-safe sort-merge join.
+    Guarded (max_doc_freq=50) and unguarded callers both follow these
+    rules, and every regime returns the same rows.  The corpus is a
+    plain scan, so the unguarded self-join reads shuffled sides for AQE
+    to measure (a ``limit`` would leave one partition and no exchange)."""
     from etlbigdata_spark.functions import dedup as fdedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-
-    def run():
-        fdedup.release_cached()
-        return fdedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.2, max_doc_freq=50
-        )
-
-    base = run()
-    want = sorted(tuple(r) for r in base.collect())
-    assert "ShuffledHashJoin" in _names(_final_plan(base))
-
-    monkeypatch.setattr(fdedup, "_SHJ_BUILD_ROWS", 100)
-    widened = run()
-    got_w = sorted(tuple(r) for r in widened.collect())
-    plan_w = _final_plan(widened)
-    assert got_w == want
-    assert "ShuffledHashJoin" in _names(plan_w)
-    # the explicit repartition widened the JOIN beyond the session count
-    # (upstream doc-freq/size aggregates legitimately stay at the
-    # session width, so assert any-not-all)
-    m = [x.group(1) for part in _exchanges(plan_w)
-         if (x := re.match(r"Exchange hashpartitioning\(shingle[^,]*, (\d+)\)", part))]
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert m and any(int(x) > session_parts for x in m), (m, _exchanges(plan_w))
-
-    monkeypatch.setattr(fdedup, "_SHJ_MAX_PARTS", 1)
-    smj = run()
-    got_s = sorted(tuple(r) for r in smj.collect())
-    assert got_s == want
-    assert "ShuffledHashJoin" not in _names(_final_plan(smj))  # spill-safe SMJ
-
-    # (d) review-pass fix: with NO doc-freq guard a single hot shingle
-    # concentrates unboundedly in one partition, so the hash hint must
-    # not be forced — unguarded callers get sort-merge
-    monkeypatch.undo()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    no_bhj = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    no_shj = {**no_bhj, "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"}
+    hash_join = ("BroadcastHashJoin", "ShuffledHashJoin")
+    # (regime, max_doc_freq) -> (confs, allowed strategies, merges the cache as is)
+    regimes = {
+        ("default", 50): ({}, hash_join, False),
+        ("default", None): ({}, hash_join, False),
+        ("no_bhj", 50): (no_bhj, ("SortMergeJoin",), True),
+        ("no_bhj", None): (no_bhj, ("ShuffledHashJoin",), False),
+        ("no_shj", 50): (no_shj, ("SortMergeJoin",), True),
+        ("no_shj", None): (no_shj, ("SortMergeJoin",), False),
+    }
+    want: dict = {}
+    for (regime, max_doc_freq), (confs, strategies, merges_cache) in regimes.items():
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            fdedup.release_cached()
+            pairs = fdedup.ngram_jaccard_pairs(
+                docs, "doc_id", "text", n=3, threshold=0.2, max_doc_freq=max_doc_freq
+            )
+            got = sorted(tuple(r) for r in pairs.collect())
+            plan = list(walk(pairs))
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        key = (regime, max_doc_freq)
+        joins = _self_joins(plan)
+        assert len(joins) == 1 and joins[0].name in strategies, (key, _names(joins))
+        if merges_cache:
+            below = _join_subtree(joins[0])
+            assert below & {"InMemoryTableScan", "TableCacheQueryStage"}, (key, below)
+            assert not below & {"Exchange", "Sort"}, (key, below)
+        assert got, "vacuous: no pairs at this threshold"
+        assert got == want.setdefault(max_doc_freq, got), key
     fdedup.release_cached()
-    unguarded = fdedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
-                                           threshold=0.2, max_doc_freq=None)
-    unguarded.collect()
-    assert "ShuffledHashJoin" not in _names(_final_plan(unguarded))
+
+
+def test_curation_builders_run_no_job(spark, sf_dir):
+    """Building a curation query plans it and runs nothing (ROADMAP item
+    2): join and partition-width decisions are left to the planner and
+    to AQE, which measures the bytes the action shuffles.  No builder
+    may count, collect or read ``.rdd`` of a shuffled frame first."""
+    sc = spark.sparkContext
+    # the first read of a Parquet table infers its schema with a job;
+    # load() keeps the table for the session, so that job is not a build's
+    workload.load(spark, sf_dir, "documents")
+    for name in (
+        "t20_c4_clean", "t21_chunking", "d02_jaccard_pairs", "d03_minhash",
+        "d10_duplicated_spans", "t23_packed_span_dedup", "s10_bm25_topk",
+        "t14_surprisal", "d08_containment_pairs",
+    ):
+        group = f"build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            workload.QUERIES[name](spark, sf_dir)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+def test_threshold_probe_scores_each_pair_once(spark, sf_dir, tmp_path):
+    """The pair-emission face of the IVF probe (st13/st14's per-batch
+    shape) computes the interpreted HOF cosine once per probed pair: a
+    filter on a projected cosine is pushed under the projection and
+    evaluates it again.  The pair cosine is the ``zip_with`` over the
+    corpus vector ``__cvec`` (the query-to-centroid assignment has its
+    own)."""
+    from etlbigdata_spark.functions import similarity as fsim
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "ivf")
+    fsim.ivf_write_index(emb, path, n_centroids=8)
+    queries = emb.orderBy("vec_id").limit(4)
+    pairs = fsim.ivf_probe_index(
+        spark, path, queries, n_probe=2, round_to=6, threshold=0.5, exclude_self=False
+    )
+    assert pairs.collect(), "vacuous: no pair passed the threshold"
+    scored = [n.text.count("zip_with(") for n in walk(pairs) if "__cvec" in n.text]
+    assert sum(scored) == 1, scored
 
 
 def test_d09_within_cell_equi_join_only(plans):
