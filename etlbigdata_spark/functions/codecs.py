@@ -1,15 +1,18 @@
-"""Real media codec for B26: PPM (P6) decode / featurize / resize.
+"""Real media codecs for B26: PPM (P6) and 24bpp BMP images,
+concatenated-P6 "video" and 16-bit PCM WAV audio, plus the 64-bit
+perceptual hashes (image aHash, audio energy-delta fingerprint) the
+media dedup path pairs on.
 
-The container ships no PIL/ffmpeg, but PPM P6 is an uncompressed format
-fully decodable with numpy + stdlib:
+The container ships no PIL/ffmpeg, but these formats are uncompressed
+and fully decodable with numpy + stdlib, e.g. PPM P6 is
 
     ``P6\\n<width> <height>\\n<maxval>\\n`` + width*height*3 raw RGB bytes
 
-so this module gives :mod:`.multimodal` one REAL codec path (used when
-``strict=True`` and no user codec is supplied).  "Video" is supported as
-a stream of concatenated P6 images (MJPEG-style), which exercises real
-frame splitting without ffmpeg.  Reference has no multimodal surface —
-this is north-star (SURVEY §2 B26) only.
+so they are the default codecs of every :mod:`.multimodal` operator;
+anything else raises ValueError.  "Video" is a stream of concatenated
+P6 images (MJPEG-style), which exercises real frame splitting without
+ffmpeg.  Reference has no multimodal surface — this is north-star
+(SURVEY §2 B26) only.
 
 Everything here runs inside Arrow-batched ``mapInPandas`` workers: pure
 per-blob CPU, no Spark imports, no driver state.
@@ -31,12 +34,12 @@ def _next_token(blob: bytes, pos: int) -> tuple[bytes, int]:
         if c in (b"#",):
             while pos < n and blob[pos : pos + 1] != b"\n":
                 pos += 1
-        elif c in (b" ", b"\t", b"\r", b"\n"):
+        elif c in _WS:
             pos += 1
         else:
             break
     start = pos
-    while pos < n and blob[pos : pos + 1] not in (b" ", b"\t", b"\r", b"\n"):
+    while pos < n and blob[pos : pos + 1] not in _WS:
         pos += 1
     if start == pos:
         raise ValueError("truncated PPM header")
@@ -88,7 +91,7 @@ def split_ppm_stream(blob: bytes) -> list[bytes]:
     pos, n = 0, len(blob or b"")
     while pos < n:
         # tolerate inter-frame whitespace
-        while pos < n and blob[pos : pos + 1] in (b" ", b"\t", b"\r", b"\n"):
+        while pos < n and blob[pos : pos + 1] in _WS:
             pos += 1
         if pos >= n:
             break
@@ -99,20 +102,6 @@ def split_ppm_stream(blob: bytes) -> list[bytes]:
     if not frames:
         raise ValueError("no P6 frames in stream")
     return frames
-
-
-def ppm_features(key: str, blob: bytes) -> dict:
-    """Real decode → FEATURE_SCHEMA row: true width/height plus an 8-dim
-    feature (per-channel mean, per-channel std, aspect ratio, mean
-    luminance).  Deterministic, codec-grounded — not a byte hash."""
-    img = decode_ppm(blob)
-    h, w = img.shape[:2]
-    f = img.astype(np.float64)
-    means = f.mean(axis=(0, 1))
-    stds = f.std(axis=(0, 1))
-    lum = float(0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2])
-    feature = [float(x) for x in means] + [float(x) for x in stds] + [w / h, lum]
-    return {"key": key, "width": w, "height": h, "n_frames": 1, "feature": feature}
 
 
 def ppm_frames(blob: bytes, n_frames: int) -> list[bytes]:
@@ -185,9 +174,10 @@ def decode_image(blob: bytes) -> np.ndarray:
 
 
 def image_features(key: str, blob: bytes) -> dict:
-    """Format-sniffing strict featurizer: real decode (PPM or BMP) →
-    FEATURE_SCHEMA row (same 8-dim pixel-statistic feature as
-    ``ppm_features``)."""
+    """Format-sniffing image featurizer: real decode (PPM or BMP) →
+    FEATURE_SCHEMA row: true width/height plus an 8-dim feature
+    (per-channel mean, per-channel std, aspect ratio, mean luminance).
+    Deterministic, codec-grounded — not a byte hash."""
     img = decode_image(blob)
     h, w = img.shape[:2]
     f = img.astype(np.float64)
@@ -198,14 +188,20 @@ def image_features(key: str, blob: bytes) -> dict:
     return {"key": key, "width": w, "height": h, "n_frames": 1, "feature": feature}
 
 
-def image_resize(blob: bytes, width: int, height: int) -> bytes:
-    """Format-sniffing strict resize: decode (PPM or BMP) →
-    nearest-neighbor resample → re-encode in the ORIGINAL format."""
-    img = decode_image(blob)
+def _nearest_grid(img: np.ndarray, width: int, height: int) -> np.ndarray:
+    """Nearest-neighbour resample of an (H, W, C) array to
+    (height, width, C): each output cell takes the source pixel under
+    its centre."""
     src_h, src_w = img.shape[:2]
     rows = np.minimum((np.arange(height) + 0.5) * src_h / height, src_h - 1).astype(np.int64)
     cols = np.minimum((np.arange(width) + 0.5) * src_w / width, src_w - 1).astype(np.int64)
-    out = img[rows[:, None], cols[None, :]]
+    return img[rows[:, None], cols[None, :]]
+
+
+def image_resize(blob: bytes, width: int, height: int) -> bytes:
+    """Format-sniffing resize: decode (PPM or BMP) →
+    nearest-neighbor resample → re-encode in the ORIGINAL format."""
+    out = _nearest_grid(decode_image(blob), width, height)
     return encode_bmp(out) if blob[:2] == b"BM" else encode_ppm(out)
 
 
@@ -218,11 +214,7 @@ def image_ahash(blob: bytes) -> int:
     nearest-neighbor grid (same resample rule as ``image_resize``),
     Rec.601 luminance, bits packed row-major MSB-first into a SIGNED
     64-bit int (Spark LongType-compatible)."""
-    img = decode_image(blob).astype(np.float64)
-    src_h, src_w = img.shape[:2]
-    rows = np.minimum((np.arange(8) + 0.5) * src_h / 8, src_h - 1).astype(np.int64)
-    cols = np.minimum((np.arange(8) + 0.5) * src_w / 8, src_w - 1).astype(np.int64)
-    small = img[rows[:, None], cols[None, :]]  # 8×8×3
+    small = _nearest_grid(decode_image(blob), 8, 8).astype(np.float64)
     lum = 0.299 * small[..., 0] + 0.587 * small[..., 1] + 0.114 * small[..., 2]
     bits = (lum > lum.mean()).flatten()
     return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
@@ -267,7 +259,7 @@ def encode_wav(rate: int, samples: np.ndarray) -> bytes:
 
 
 def audio_features(key: str, blob: bytes) -> dict:
-    """Strict audio featurizer over the real WAV codec, emitting the
+    """Audio featurizer over the real WAV codec, emitting the
     shared FEATURE_SCHEMA row with the documented field mapping:
     ``width`` = sample rate, ``height`` = channels, ``n_frames`` =
     sample frames; ``feature`` = [duration_sec, rms, peak,
@@ -291,7 +283,7 @@ def audio_features(key: str, blob: bytes) -> dict:
 def media_features(key: str, blob: bytes) -> dict:
     """Magic-byte dispatcher over ALL built-in real codecs: PPM/BMP →
     :func:`image_features`, RIFF/WAVE → :func:`audio_features`;
-    ValueError otherwise (the strict contract)."""
+    ValueError otherwise."""
     if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
         return audio_features(key, blob)
     return image_features(key, blob)

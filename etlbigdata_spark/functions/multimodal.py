@@ -2,19 +2,19 @@
 
 Design: media is an opaque ``binary`` column + a typed metadata struct,
 ingested via ``binaryFile`` (sources/readers.read_binary_files) or built
-from any bytes column.  Decode / feature-extraction runs as Arrow-batched
-``mapInPandas`` — the Spark-side plumbing (schema, batch shape, partition
-sizing) is real, and so is ONE codec: uncompressed PPM (P6), decoded
-with numpy + stdlib in :mod:`.codecs` (``strict=True`` routes to it and
-raises ValueError on non-PPM bytes).  Compressed formats (JPEG/MP4/...)
-still need a user ``decode_fn`` because those libraries are not in this
-container; without ``strict`` the default remains a clearly-labeled
-deterministic fake so plumbing tests never depend on the payload format.
+from any bytes column.  Every per-blob operator (featurize, frame
+sampling, resize, perceptual hashing) runs through ONE Arrow-batched
+pandas mapper, :func:`_map_blobs`, over the real codecs in
+:mod:`.codecs`: PPM (P6) and 24bpp BMP images, concatenated-P6 "video"
+and 16-bit PCM WAV audio, sniffed by magic bytes.  Bytes those codecs
+cannot read raise ValueError.  Compressed formats (JPEG/MP4/...) plug
+in through each operator's ``*_fn`` parameter, because their libraries
+are not in this container.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -22,15 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_TYPE = T.StructType(
-    [
-        T.StructField("uri", T.StringType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("checksum", T.StringType()),
-    ]
-)
-
+from . import codecs
+from .dedup import _persist_scoped, hamming_pairs_64
 
 def attach_media_meta(
     df: DataFrame, bytes_col: str, uri_col: str | None = None, media_type: str = "application/octet-stream"
@@ -49,9 +42,37 @@ def attach_media_meta(
     )
 
 
+_KEY = T.StructField("key", T.StringType())
+
+
+def _map_blobs(
+    df: DataFrame,
+    key_col: str,
+    bytes_col: str,
+    schema: T.StructType,
+    rows: Callable[[str, bytes], Iterable],
+) -> DataFrame:
+    """The one media mapper: ``(key as string, blob)`` rows through
+    Arrow-batched pandas workers; ``rows(key, blob)`` returns the
+    output rows for one blob (tuples, or dicts keyed by field name) in
+    ``schema`` order, so one blob may yield one row or fan out to many.
+    The blob never leaves the map side; the number of rows a Python
+    worker holds at once is bounded by
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``."""
+    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
+    columns = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [r for k, b in zip(pdf["key"], pdf["blob"]) for r in rows(k, b)]
+            yield pd.DataFrame(out, columns=columns)
+
+    return src.mapInPandas(run, schema=schema)
+
+
 FEATURE_SCHEMA = T.StructType(
     [
-        T.StructField("key", T.StringType()),
+        _KEY,
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
         T.StructField("n_frames", T.IntegerType()),
@@ -60,74 +81,27 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(key: str, blob: bytes) -> dict:
-    """Deterministic stand-in for a real image/audio decoder (STUB — the
-    container ships no PIL/ffmpeg). Derives stable pseudo-features from
-    the bytes so tests can assert the plumbing end-to-end."""
-    n = len(blob or b"")
-    head = sum(blob[:16]) if blob else 0
-    return {
-        "key": key,
-        "width": (head % 64) + 1,
-        "height": (n % 64) + 1,
-        "n_frames": 1,
-        "feature": [float((head + i) % 7) for i in range(8)],
-    }
-
-
 def extract_media_features(
     df: DataFrame,
     key_col: str,
     bytes_col: str,
-    decode_fn: Callable[[str, bytes], dict] | None = None,
-    strict: bool = False,
-    batch_partitions: int | None = None,
+    decode_fn: Callable[[str, bytes], dict] = codecs.media_features,
 ) -> DataFrame:
-    """B26 — decode/featurize media via ``mapInPandas`` (Arrow batches of
-    rows in, feature rows out).  ``strict=True`` with no ``decode_fn``
-    uses the REAL built-in codecs (PPM P6 and 24bpp BMP, sniffed by
-    magic bytes) — true dimensions + pixel-stat features, ValueError on
-    other bytes; swap ``decode_fn`` for a JPEG/PNG codec where those
-    libs exist.  Default (non-strict) is the
-    deterministic fake, for format-agnostic plumbing tests."""
-    if decode_fn is not None:
-        fn = decode_fn
-    elif strict:
-        from . import codecs
-
-        fn = codecs.media_features  # PPM/BMP images + PCM WAV audio
-    else:
-        fn = _fake_decode
-    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
-    if batch_partitions:
-        # media blobs are large: bound rows-per-partition so an Arrow batch
-        # of blobs fits executor memory
-        src = src.repartition(batch_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [fn(k, b) for k, b in zip(pdf["key"], pdf["blob"])]
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
-
-    return src.mapInPandas(run, schema=FEATURE_SCHEMA)
+    """B26 — decode/featurize media, one FEATURE_SCHEMA row per blob.
+    The default ``codecs.media_features`` sniffs PPM/BMP images (true
+    dimensions + 8 pixel statistics) and PCM WAV audio (rate, channels,
+    sample frames + 5 level statistics), ValueError on other bytes;
+    swap ``decode_fn`` for a JPEG/PNG codec where those libs exist."""
+    return _map_blobs(df, key_col, bytes_col, FEATURE_SCHEMA, lambda k, b: [decode_fn(k, b)])
 
 
 FRAME_SCHEMA = T.StructType(
     [
-        T.StructField("key", T.StringType()),
+        _KEY,
         T.StructField("frame_idx", T.IntegerType()),
         T.StructField("frame", T.BinaryType()),
     ]
 )
-
-
-def _fake_frame_extract(blob: bytes, n_frames: int) -> list[bytes]:
-    """Deterministic stand-in for a video frame extractor (STUB — no
-    ffmpeg in this container): slices the blob into n contiguous chunks
-    so tests can assert the fan-out and byte plumbing exactly."""
-    blob = blob or b""
-    step = max(len(blob) // max(n_frames, 1), 1)
-    return [blob[i * step : (i + 1) * step] for i in range(n_frames)]
 
 
 def sample_frames(
@@ -135,47 +109,18 @@ def sample_frames(
     key_col: str,
     bytes_col: str,
     n_frames: int = 4,
-    extract_fn: Callable[[bytes, int], list[bytes]] | None = None,
-    strict: bool = False,
-    batch_partitions: int | None = None,
+    extract_fn: Callable[[bytes, int], list[bytes]] = codecs.ppm_frames,
 ) -> DataFrame:
-    """B26 — video frame sampling as a one-to-many ``mapInPandas``: each
-    media row fans out to ``n_frames`` (key, frame_idx, frame:binary)
-    rows.  The fan-out, Arrow batch shape and binary round-trip are the
-    real Spark plumbing; ``strict=True`` with no ``extract_fn`` uses the
-    REAL concatenated-PPM stream splitter (evenly-spaced frame sampling,
-    ValueError on non-PPM bytes) — swap ``extract_fn`` for an
-    ffmpeg-backed callable for compressed video."""
-    if extract_fn is not None:
-        fn = extract_fn
-    elif strict:
-        from . import codecs
-
-        fn = codecs.ppm_frames
-    else:
-        fn = _fake_frame_extract
-    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
-    if batch_partitions:
-        src = src.repartition(batch_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for k, b in zip(pdf["key"], pdf["blob"]):
-                out.extend((k, i, fr) for i, fr in enumerate(fn(b, n_frames)))
-            yield pd.DataFrame(out, columns=["key", "frame_idx", "frame"])
-
-    return src.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def _fake_resize(blob: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for decode→resize→encode (STUB — no PIL):
-    emits a stable byte string of length width*height derived from the
-    input by cyclic repetition, so output size and determinism are
-    checkable without a codec."""
-    blob = blob or b"\x00"
-    need = width * height
-    return (blob * (need // len(blob) + 1))[:need]
+    """B26 — video frame sampling, one-to-many: each media row fans out
+    to (key, frame_idx, frame:binary) rows, one per frame ``extract_fn``
+    returns.  The default ``codecs.ppm_frames`` splits a
+    concatenated-PPM stream and takes ``n_frames`` evenly spaced frames
+    (all of them if fewer exist), ValueError on non-PPM bytes; swap
+    ``extract_fn`` for an ffmpeg-backed callable for compressed video."""
+    return _map_blobs(
+        df, key_col, bytes_col, FRAME_SCHEMA,
+        lambda k, b: [(k, i, fr) for i, fr in enumerate(extract_fn(b, n_frames))],
+    )
 
 
 def resize_media(
@@ -184,39 +129,49 @@ def resize_media(
     bytes_col: str,
     width: int,
     height: int,
-    resize_fn: Callable[[bytes, int, int], bytes] | None = None,
-    strict: bool = False,
-    batch_partitions: int | None = None,
+    resize_fn: Callable[[bytes, int, int], bytes] = codecs.image_resize,
 ) -> DataFrame:
-    """B26 — binary→binary media transform (decode→resize→re-encode) via
-    ``mapInPandas``, output re-wrapped with the typed metadata struct so
-    downstream ops see (key, media:binary, media_meta).  ``strict=True``
-    with no ``resize_fn`` uses the REAL built-in codecs (PPM P6 / 24bpp BMP,
-    decode → nearest-neighbor resample → re-encode in the original
-    format, ValueError on other bytes)."""
-    if resize_fn is not None:
-        fn = resize_fn
-    elif strict:
-        from . import codecs
+    """B26 — binary→binary media transform (decode→resize→re-encode),
+    output re-wrapped with the typed metadata struct so downstream ops
+    see (key, media:binary, media_meta).  The default
+    ``codecs.image_resize`` decodes PPM/BMP, resamples nearest-neighbour
+    and re-encodes in the original format, ValueError on other bytes."""
+    schema = T.StructType([_KEY, T.StructField("media", T.BinaryType())])
+    resized = _map_blobs(
+        df, key_col, bytes_col, schema, lambda k, b: [(k, resize_fn(b, width, height))]
+    )
+    return attach_media_meta(resized, "media", media_type="application/x-resized")
 
-        fn = codecs.image_resize
-    else:
-        fn = _fake_resize
-    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
-    if batch_partitions:
-        src = src.repartition(batch_partitions)
-    out_schema = T.StructType(
-        [T.StructField("key", T.StringType()), T.StructField("media", T.BinaryType())]
+
+def _hash_blobs(
+    df: DataFrame, key_col: str, bytes_col: str, out_col: str, hash_fn: Callable[[bytes], int]
+) -> DataFrame:
+    """(key, ``out_col``: 64-bit hash) per blob — only 8-byte hashes
+    leave the scan."""
+    schema = T.StructType([_KEY, T.StructField(out_col, T.LongType())])
+    return _map_blobs(df, key_col, bytes_col, schema, lambda k, b: [(k, hash_fn(b))])
+
+
+def _hamming_pairs(hashed: DataFrame, max_hamming: int, scheme: str) -> DataFrame:
+    """The EXACT Hamming-≤-k pair core shared with the text SimHash
+    (``dedup.hamming_pairs_64``) over (id, sig) rows."""
+    return hamming_pairs_64(
+        hashed, max_hamming=max_hamming, scheme=scheme, n_blocks=max(6, max_hamming + 1)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"key": pdf["key"], "media": [fn(b, width, height) for b in pdf["blob"]]}
-            )
 
-    resized = src.mapInPandas(run, schema=out_schema)
-    return attach_media_meta(resized, "media", media_type="application/x-resized")
+def _media_near_dups(
+    df: DataFrame,
+    key_col: str,
+    bytes_col: str,
+    max_hamming: int,
+    scheme: str,
+    hash_fn: Callable[[bytes], int],
+) -> DataFrame:
+    """(id_a, id_b, hamming) for blobs whose ``hash_fn`` hashes differ
+    in at most ``max_hamming`` bits — the image and audio pair body."""
+    hashed = _hash_blobs(df, key_col, bytes_col, "sig", hash_fn)
+    return _hamming_pairs(hashed.select(F.col("key").alias("id"), "sig"), max_hamming, scheme)
 
 
 def add_image_ahash(
@@ -224,27 +179,13 @@ def add_image_ahash(
     key_col: str,
     bytes_col: str,
     out_col: str = "ahash",
-    hash_fn: Callable[[bytes], int] | None = None,
+    hash_fn: Callable[[bytes], int] = codecs.image_ahash,
 ) -> DataFrame:
     """Perceptual 64-bit average hash per image (``codecs.image_ahash``:
-    real PPM/BMP decode → 8×8 luminance grid → bit = cell > mean) as an
-    Arrow-batched ``mapInPandas`` — map-side only, the blob never
-    shuffles; only (key, 8-byte hash) rows leave the scan.  Swap
-    ``hash_fn`` for a JPEG/PNG-capable encoder where those libs exist
-    (same extension contract as ``decode_fn`` on the other operators)."""
-    from . import codecs
-
-    fn = hash_fn or codecs.image_ahash
-    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
-    out_schema = T.StructType(
-        [T.StructField("key", T.StringType()), T.StructField(out_col, T.LongType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"key": pdf["key"], out_col: [fn(b) for b in pdf["blob"]]})
-
-    return src.mapInPandas(run, schema=out_schema)
+    real PPM/BMP decode → 8×8 luminance grid → bit = cell > mean),
+    map-side only — the blob never shuffles.  Swap ``hash_fn`` for a
+    JPEG/PNG-capable hasher where those libs exist."""
+    return _hash_blobs(df, key_col, bytes_col, out_col, hash_fn)
 
 
 def image_near_dups(
@@ -253,25 +194,17 @@ def image_near_dups(
     bytes_col: str,
     max_hamming: int = 5,
     scheme: str = "blocks",
-    hash_fn: Callable[[bytes], int] | None = None,
+    hash_fn: Callable[[bytes], int] = codecs.image_ahash,
 ) -> DataFrame:
     """Near-duplicate IMAGE pairs — the multimodal face of the dedup
-    family: perceptual aHash per image (:func:`add_image_ahash`), then
-    the EXACT Hamming-≤-k pair core shared with the text SimHash
+    family: a perceptual hash per image (``hash_fn``, aHash by default),
+    then the EXACT Hamming-≤-k pair core shared with the text SimHash
     (``dedup.hamming_pairs_64``; same block-permutation recall
     guarantee, same scale shape: candidates only on band collisions,
     popcount before the pair shuffle).  At 100 TB the blobs are read
     once map-side and everything downstream moves 8-byte hashes.
     Returns (id_a, id_b, hamming), each pair once."""
-    from .dedup import hamming_pairs_64
-
-    hashed = add_image_ahash(df, key_col, bytes_col, out_col="sig").select(
-        F.col("key").alias("id"), "sig"
-    )
-    return hamming_pairs_64(
-        hashed, max_hamming=max_hamming, scheme=scheme,
-        n_blocks=max(6, max_hamming + 1),
-    )
+    return _media_near_dups(df, key_col, bytes_col, max_hamming, scheme, hash_fn)
 
 
 def add_audio_fphash(
@@ -279,27 +212,13 @@ def add_audio_fphash(
     key_col: str,
     bytes_col: str,
     out_col: str = "fphash",
-    hash_fn: Callable[[bytes], int] | None = None,
+    hash_fn: Callable[[bytes], int] = codecs.audio_fphash,
 ) -> DataFrame:
     """Perceptual 64-bit audio fingerprint per blob
-    (``codecs.audio_fphash``: real WAV decode → 65-frame energy deltas)
-    as an Arrow-batched ``mapInPandas`` — map-side only, the blob never
-    shuffles; only (key, 8-byte hash) rows leave the scan.  Swap
-    ``hash_fn`` for an MP3/OGG-capable decoder where those libs exist
-    (same extension contract as the image path)."""
-    from . import codecs
-
-    fn = hash_fn or codecs.audio_fphash
-    src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
-    out_schema = T.StructType(
-        [T.StructField("key", T.StringType()), T.StructField(out_col, T.LongType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"key": pdf["key"], out_col: [fn(b) for b in pdf["blob"]]})
-
-    return src.mapInPandas(run, schema=out_schema)
+    (``codecs.audio_fphash``: real WAV decode → 65-frame energy deltas),
+    map-side only — the blob never shuffles.  Swap ``hash_fn`` for an
+    MP3/OGG-capable decoder where those libs exist."""
+    return _hash_blobs(df, key_col, bytes_col, out_col, hash_fn)
 
 
 def audio_near_dups(
@@ -308,21 +227,12 @@ def audio_near_dups(
     bytes_col: str,
     max_hamming: int = 5,
     scheme: str = "blocks",
-    hash_fn: Callable[[bytes], int] | None = None,
+    hash_fn: Callable[[bytes], int] = codecs.audio_fphash,
 ) -> DataFrame:
     """Near-duplicate AUDIO pairs — same shape as :func:`image_near_dups`
-    with the energy-delta fingerprint: hash map-side, then the EXACT
-    Hamming-≤-k pair core shared with text SimHash and image aHash
-    (``dedup.hamming_pairs_64``).  Returns (id_a, id_b, hamming)."""
-    from .dedup import hamming_pairs_64
-
-    hashed = add_audio_fphash(df, key_col, bytes_col, out_col="sig", hash_fn=hash_fn).select(
-        F.col("key").alias("id"), "sig"
-    )
-    return hamming_pairs_64(
-        hashed, max_hamming=max_hamming, scheme=scheme,
-        n_blocks=max(6, max_hamming + 1),
-    )
+    with the energy-delta fingerprint as the default ``hash_fn``.
+    Returns (id_a, id_b, hamming)."""
+    return _media_near_dups(df, key_col, bytes_col, max_hamming, scheme, hash_fn)
 
 
 def video_near_dups(
@@ -332,14 +242,14 @@ def video_near_dups(
     n_frames: int = 3,
     max_hamming: int = 0,
     scheme: str = "blocks",
-    extract_fn: Callable[[bytes, int], list[bytes]] | None = None,
+    extract_fn: Callable[[bytes, int], list[bytes]] = codecs.ppm_frames,
 ) -> DataFrame:
     """Near-duplicate VIDEO pairs — the third modality of the dedup
     triad (image mm02 / audio mm03 / video mm04): evenly-spaced frames
-    come out of the REAL concatenated-P6 stream splitter
-    (:func:`sample_frames` ``strict`` path; swap ``extract_fn`` for an
-    ffmpeg-backed callable on compressed containers), each frame gets
-    the perceptual aHash map-side, and the shared Hamming pair core
+    come out of ``extract_fn`` (the concatenated-P6 stream splitter by
+    default; swap in an ffmpeg-backed callable for compressed
+    containers), each frame gets the perceptual aHash in the same
+    map-side pass, and the shared Hamming pair core
     (``dedup.hamming_pairs_64``) runs ONCE PER FRAME POSITION — a video
     pair survives iff EVERY sampled position matches within
     ``max_hamming``, the standard frame-fingerprint sequence rule.
@@ -357,41 +267,21 @@ def video_near_dups(
     """
     if n_frames < 1:
         raise ValueError(f"n_frames must be >= 1, got {n_frames}")
-    from . import codecs
-    from .dedup import _persist_scoped, hamming_pairs_64
-
-    frames = sample_frames(
-        df, key_col, bytes_col, n_frames,
-        extract_fn=extract_fn, strict=extract_fn is None,
+    schema = T.StructType(
+        [_KEY, T.StructField("frame_idx", T.IntegerType()), T.StructField("sig", T.LongType())]
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("sig", T.LongType()),
-        ]
+    hashed = _persist_scoped(
+        _map_blobs(
+            df, key_col, bytes_col, schema,
+            lambda k, b: [
+                (k, i, codecs.image_ahash(fr)) for i, fr in enumerate(extract_fn(b, n_frames))
+            ],
+        )
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "key": pdf["key"],
-                    "frame_idx": pdf["frame_idx"],
-                    "sig": [codecs.image_ahash(b) for b in pdf["frame"]],
-                }
-            )
-
-    hashed = _persist_scoped(frames.mapInPandas(run, schema=out_schema))
     per_pos = None
     for i in range(n_frames):
-        sub = hashed.filter(F.col("frame_idx") == i).select(
-            F.col("key").alias("id"), "sig"
-        )
-        p = hamming_pairs_64(
-            sub, max_hamming=max_hamming, scheme=scheme,
-            n_blocks=max(6, max_hamming + 1),
-        ).select("id_a", "id_b", "hamming")
+        sub = hashed.filter(F.col("frame_idx") == i).select(F.col("key").alias("id"), "sig")
+        p = _hamming_pairs(sub, max_hamming, scheme).select("id_a", "id_b", "hamming")
         per_pos = p if per_pos is None else per_pos.unionByName(p)
     return (
         per_pos.groupBy("id_a", "id_b")

@@ -18,6 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+# lowercased whitespace words, spelled as text.tokens_col spells them:
+# array_remove is a codegen expression, where a filter lambda would be
+# evaluated interpreted, one closure call per word
+_WORDS = r"array_remove(split(lower(s), '\\s+'), '')"
+
 # token pattern mirrors text.TOKEN_PATTERN; normalization mirrors
 # text.normalize_text_col; fingerprints mirror text.fingerprint_col /
 # rolling_fingerprint_col (same modulus)
@@ -26,10 +31,7 @@ _DEFINITIONS: dict[str, str] = {
         "(s STRING) RETURNS INT RETURN "
         "size(regexp_extract_all(s, '[A-Za-z0-9_]+', 0))"
     ),
-    "etl_word_count": (
-        "(s STRING) RETURNS INT RETURN "
-        r"size(filter(split(lower(s), '\\s+'), x -> x != ''))"
-    ),
+    "etl_word_count": f"(s STRING) RETURNS INT RETURN size({_WORDS})",
     "etl_normalize_text": (
         "(s STRING) RETURNS STRING RETURN "
         r"trim(regexp_replace(regexp_replace(lower(s),"
@@ -49,10 +51,10 @@ _DEFINITIONS: dict[str, str] = {
     ),
     "etl_word_shingles": (
         "(s STRING, n INT) RETURNS ARRAY<STRING> RETURN "
-        r"CASE WHEN size(filter(split(lower(s), '\\s+'), x -> x != '')) < n "
+        f"CASE WHEN size({_WORDS}) < n "
         "THEN CAST(array() AS ARRAY<STRING>) ELSE array_distinct(transform("
-        r"sequence(1, size(filter(split(lower(s), '\\s+'), x -> x != '')) - (n - 1)), "
-        r"i -> array_join(slice(filter(split(lower(s), '\\s+'), x -> x != ''), i, n), ' '))) END"
+        f"sequence(1, size({_WORDS}) - (n - 1)), "
+        f"i -> array_join(slice({_WORDS}, i, n), ' '))) END"
     ),
 }
 

@@ -13,6 +13,13 @@ declared queries, in one of two modes.
   ``$PLAN_OUT_DIR/<query>_<tag>.txt`` — before/after evidence for a
   plan change.
 
+A PLANS.md regeneration is comparable only with one made on the same
+host with the same ``SPARK_GRAFT_CPUS``: AQE's broadcast build side,
+whole-stage codegen stage ids and every ``hashpartitioning(..., N)``
+width follow the core count and the run, so a diff against the
+committed file on another host shows those lines moving even when no
+plan changed.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1; an ``sf_dir``
      argument overrides it)
      PLAN_OUT_DIR       (default plans/r13)

@@ -175,6 +175,17 @@ def test_sql_function_library_matches_dataframe_twins(spark, sf_dir):
     # expression-backed: the plan carries no BatchEvalPython/ArrowEval
     assert not any("EvalPython" in n.name for n in walk(via_sql))
 
+    # etl_word_count tokenizes like tokens_col, with no interpreted
+    # lambda; etl_word_shingles' transform shows the check sees one
+    lam = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.LAMBDA_FUNCTION()
+
+    def lambdas(expr):
+        plan = spark.sql(f"SELECT {expr} AS v FROM docs_sqlfn")
+        return sum(n.jnode.containsPattern(lam) for n in walk(plan))
+
+    assert lambdas("etl_word_count(text)") == 0
+    assert lambdas("etl_word_shingles(text, 3)") > 0
+
 
 def test_cluster_embeddings_diversity_sampling(emb):
     """Cluster-balanced diversity sampling: kmeans_fit assignment ->

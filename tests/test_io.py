@@ -232,20 +232,28 @@ def test_binary_files_and_media_meta(engine, tmp_path):
 
 
 def test_media_feature_plumbing(engine, tmp_path):
-    """B26 — mapInPandas featurizer: schema/batch plumbing real, codec stubbed."""
+    """B26 — Arrow-batched featurizer: one FEATURE_SCHEMA row per blob,
+    PPM and BMP images sniffed and decoded in the same batch."""
+    import numpy as np
+
+    from etlbigdata_spark.functions import codecs
+
+    img = np.full((3, 5, 3), 9, dtype=np.uint8)
     df = engine.spark.createDataFrame(
-        [("k1", bytearray(b"abc")), ("k2", bytearray(b""))], "key string, blob binary"
+        [("k1", bytearray(codecs.encode_ppm(img))), ("k2", bytearray(codecs.encode_bmp(img)))],
+        "key string, blob binary",
     )
-    out = extract_media_features(df, "key", "blob", batch_partitions=2)
+    out = extract_media_features(df, "key", "blob")
     rows = {r["key"]: r for r in out.collect()}
     assert set(rows) == {"k1", "k2"}
     assert len(rows["k1"]["feature"]) == 8
     assert rows["k1"]["n_frames"] == 1
+    assert rows["k1"]["feature"] == rows["k2"]["feature"]
 
 
 def test_ppm_strict_decode_is_real(engine):
-    """B26 round-4: strict=True routes to the REAL numpy PPM codec — true
-    dimensions and pixel-statistic features, no stub in the loop."""
+    """B26 round-4: the default featurizer is the REAL numpy PPM codec —
+    true dimensions and pixel-statistic features, no stub in the loop."""
     import numpy as np
 
     from etlbigdata_spark.functions import codecs
@@ -256,7 +264,7 @@ def test_ppm_strict_decode_is_real(engine):
     df = engine.spark.createDataFrame(
         [("p1", bytearray(codecs.encode_ppm(img)))], "key string, blob binary"
     )
-    rows = extract_media_features(df, "key", "blob", strict=True).collect()
+    rows = extract_media_features(df, "key", "blob").collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["width"], r["height"]) == (8, 6)
@@ -266,25 +274,38 @@ def test_ppm_strict_decode_is_real(engine):
 
 
 def test_ppm_strict_rejects_non_ppm(engine):
-    """strict mode must FAIL on undecodable bytes, not fake features."""
+    """The default codecs must FAIL on undecodable bytes, not fake
+    features, frames or resized media."""
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.base import PySparkException
 
+    from etlbigdata_spark.functions.multimodal import resize_media, sample_frames
+
     df = engine.spark.createDataFrame([("k", bytearray(b"not an image"))], "key string, blob binary")
-    with pytest.raises((PySparkException, Py4JJavaError)):
-        extract_media_features(df, "key", "blob", strict=True).collect()
+    for out in (
+        extract_media_features(df, "key", "blob"),
+        sample_frames(df, "key", "blob", n_frames=2),
+        resize_media(df, "key", "blob", width=2, height=2),
+    ):
+        with pytest.raises((PySparkException, Py4JJavaError), match="ValueError"):
+            out.collect()
 
 
 def test_frame_sampling_fans_out(engine):
-    """B26 — one media row → n_frames (key, frame_idx, frame) rows; the
-    fake extractor slices the blob so the byte plumbing is checkable."""
+    """B26 — one media row → n_frames (key, frame_idx, frame) rows; a
+    test-local extractor plugged in through ``extract_fn`` slices the
+    blob so the byte plumbing is checkable."""
     from etlbigdata_spark.functions.multimodal import sample_frames
+
+    def slice_frames(blob: bytes, n_frames: int) -> list[bytes]:
+        step = max(len(blob) // n_frames, 1)
+        return [blob[i * step : (i + 1) * step] for i in range(n_frames)]
 
     df = engine.spark.createDataFrame(
         [("v1", bytearray(b"0123456789ab")), ("v2", bytearray(b"xy"))],
         "key string, blob binary",
     )
-    out = sample_frames(df, "key", "blob", n_frames=4, batch_partitions=2).collect()
+    out = sample_frames(df, "key", "blob", n_frames=4, extract_fn=slice_frames).collect()
     by_key: dict = {}
     for r in out:
         by_key.setdefault(r["key"], []).append(r)
@@ -294,7 +315,7 @@ def test_frame_sampling_fans_out(engine):
 
 
 def test_ppm_stream_frame_sampling_is_real(engine):
-    """B26 round-4: strict frame sampling splits a REAL concatenated-P6
+    """B26 round-4: default frame sampling splits a REAL concatenated-P6
     stream and returns standalone decodable frames, evenly spaced."""
     import numpy as np
 
@@ -305,7 +326,7 @@ def test_ppm_stream_frame_sampling_is_real(engine):
     stream = b"".join(codecs.encode_ppm(f) for f in frames)
     df = engine.spark.createDataFrame([("vid", bytearray(stream))], "key string, blob binary")
     out = sorted(
-        sample_frames(df, "key", "blob", n_frames=3, strict=True).collect(),
+        sample_frames(df, "key", "blob", n_frames=3).collect(),
         key=lambda r: r["frame_idx"],
     )
     assert len(out) == 3
@@ -316,20 +337,31 @@ def test_ppm_stream_frame_sampling_is_real(engine):
 
 def test_resize_media_rewraps_meta(engine):
     """B26 — binary→binary transform re-wrapped with the metadata
-    struct: output size is width*height, checksum/meta recomputed."""
+    struct: output is a width×height PPM, checksum/meta recomputed."""
+    import hashlib
+
+    import numpy as np
+
+    from etlbigdata_spark.functions import codecs
     from etlbigdata_spark.functions.multimodal import resize_media
 
-    df = engine.spark.createDataFrame([("i1", bytearray(b"abc"))], "key string, blob binary")
+    img = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
+    df = engine.spark.createDataFrame(
+        [("i1", bytearray(codecs.encode_ppm(img)))], "key string, blob binary"
+    )
     out = resize_media(df, "key", "blob", width=4, height=3).collect()
     assert len(out) == 1
     r = out[0]
-    assert len(bytes(r["media"])) == 12
-    assert r["media_meta"]["n_bytes"] == 12
+    media = bytes(r["media"])
+    assert codecs.decode_ppm(media).shape == (3, 4, 3)
+    assert len(media) == len(b"P6\n4 3\n255\n") + 4 * 3 * 3
+    assert r["media_meta"]["n_bytes"] == len(media)
+    assert r["media_meta"]["checksum"] == hashlib.md5(media).hexdigest()
     assert r["media_meta"]["media_type"] == "application/x-resized"
 
 
 def test_ppm_strict_resize_is_real(engine):
-    """B26 round-4: strict resize = decode → nearest-neighbor resample →
+    """B26 round-4: default resize = decode → nearest-neighbor resample →
     re-encode through the REAL PPM codec; output decodes to the target
     dims with pixels drawn from the source."""
     import numpy as np
@@ -344,7 +376,7 @@ def test_ppm_strict_resize_is_real(engine):
     df = engine.spark.createDataFrame(
         [("i1", bytearray(codecs.encode_ppm(img)))], "key string, blob binary"
     )
-    out = resize_media(df, "key", "blob", width=4, height=2, strict=True).collect()
+    out = resize_media(df, "key", "blob", width=4, height=2).collect()
     resized = codecs.decode_ppm(bytes(out[0]["media"]))
     assert resized.shape == (2, 4, 3)
     assert (resized[:, :2] == [255, 0, 0]).all() and (resized[:, 2:] == [0, 0, 255]).all()
@@ -484,7 +516,7 @@ def test_text_reader_lines_and_whole_files(spark, tmp_path):
 
 def test_ppm_binaryfile_pipeline_end_to_end(engine, tmp_path):
     """B26 round-4 integration: disk PPM files → binaryFile source →
-    typed media meta → REAL strict decode — the full multimodal
+    typed media meta → REAL default decode — the full multimodal
     ingestion path with no stub anywhere in the loop."""
     import numpy as np
 
@@ -501,7 +533,7 @@ def test_ppm_binaryfile_pipeline_end_to_end(engine, tmp_path):
     meta = attach_media_meta(df, "content", uri_col="path", media_type="image/x-portable-pixmap")
     assert meta.filter(F.col("media_meta.media_type") == "image/x-portable-pixmap").count() == 3
 
-    feats = extract_media_features(meta, "path", "content", strict=True)
+    feats = extract_media_features(meta, "path", "content")
     got = {r["key"].rsplit("/", 1)[-1]: (r["height"], r["width"]) for r in feats.collect()}
     assert got == {f"{n}.ppm": hw for n, hw in dims.items()}
 
@@ -564,7 +596,7 @@ def test_zordered_write_narrows_both_dimensions(spark, sf_dir, tmp_path):
 
 
 def test_bmp_strict_decode_and_resize_are_real(engine):
-    """B26 round-4: the strict path sniffs magic bytes and decodes 24bpp
+    """B26 round-4: the default codecs sniff magic bytes and decode 24bpp
     BMP for real — true dimensions, pixel-stat features, and a resize
     that re-encodes in the ORIGINAL format with correct new dims."""
     import numpy as np
@@ -577,11 +609,11 @@ def test_bmp_strict_decode_and_resize_are_real(engine):
     df = engine.spark.createDataFrame(
         [("b1", bytearray(codecs.encode_bmp(img)))], "key string, blob binary"
     )
-    r = extract_media_features(df, "key", "blob", strict=True).collect()[0]
+    r = extract_media_features(df, "key", "blob").collect()[0]
     assert (r["width"], r["height"]) == (10, 4)
     assert abs(r["feature"][2] - 77.0) < 1e-6 and abs(r["feature"][0]) < 1e-6
 
-    out = resize_media(df, "key", "blob", width=5, height=2, strict=True).collect()[0]
+    out = resize_media(df, "key", "blob", width=5, height=2).collect()[0]
     back = codecs.decode_bmp(bytes(out["media"]))
     assert back.shape == (2, 5, 3) and back[0, 0, 2] == 77
 
@@ -842,8 +874,26 @@ def test_image_ahash_and_near_dups_real_codec(engine):
     assert all(r["hamming"] <= 5 for r in pairs)
 
 
+def test_image_near_dups_uses_hash_fn(engine):
+    """A caller's ``hash_fn`` reaches the image pair finder, directly and
+    through ``Engine.near_dup_pairs``: a constant hash pairs every blob,
+    and these blobs are not images, so the built-in aHash would raise."""
+    from etlbigdata_spark.functions.multimodal import image_near_dups
+
+    df = engine.spark.createDataFrame(
+        [(k, bytearray(k.encode())) for k in ("a", "b", "c")], "key string, blob binary"
+    )
+    want = {("a", "b"), ("a", "c"), ("b", "c")}
+    pairs = image_near_dups(df, "key", "blob", max_hamming=0, hash_fn=lambda b: 7)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == want
+    via_engine = engine.near_dup_pairs(
+        df, method="image", key_col="key", bytes_col="blob", hash_fn=lambda b: 7
+    )
+    assert {(r["id_a"], r["id_b"]) for r in via_engine.collect()} == want
+
+
 def test_wav_strict_audio_features_real_codec(engine):
-    """Strict audio path: a synthesized stereo 16-bit PCM sine decodes
+    """Default audio path: a synthesized stereo 16-bit PCM sine decodes
     through the stdlib wave codec to exact rate/channels/frames and the
     level statistics an audio-curation gate filters on."""
     import numpy as np
@@ -861,7 +911,7 @@ def test_wav_strict_audio_features_real_codec(engine):
     assert np.array_equal(samples[:, 0], mono)  # exact roundtrip
 
     df = engine.spark.createDataFrame([("a1", bytearray(blob))], "key string, blob binary")
-    rows = extract_media_features(df, "key", "blob", strict=True).collect()
+    rows = extract_media_features(df, "key", "blob").collect()
     r = rows[0]
     assert (r["width"], r["height"], r["n_frames"]) == (rate, 2, len(mono))
     dur, rms, peak, zcr, dc = r["feature"]
@@ -871,7 +921,7 @@ def test_wav_strict_audio_features_real_codec(engine):
     assert abs(zcr - 2 * 440 / rate) < 0.02  # 2 crossings per cycle
     assert abs(dc) < 1e-3
 
-    # strict contract: non-media bytes still rejected
+    # non-media bytes are rejected
     with pytest.raises(Exception):
         codecs.media_features("x", b"not media at all")
 

@@ -549,3 +549,42 @@ def test_interval_overlap_join_matches_bruteforce(spark, left, right, width):
         if lk == rk and llo <= rhi and rlo <= lhi
     )
     assert got == want
+
+
+@given(
+    texts=st.lists(
+        st.none() | st.text(alphabet="aZ9_-. \t\n\r\x0b\x0c\xa0\u2003", max_size=12),
+        min_size=1,
+        max_size=8,
+    ),
+)
+@settings(**_SETTINGS)
+def test_word_count_regexp_count_equals_tokens_col(spark, texts):
+    """``regexp_count(t, '\\S+')`` == ``size(tokens_col(t))`` — maximal
+    non-whitespace runs are the '\\s+' split with empties removed — on
+    whitespace-heavy text: tabs, \\x0b, NBSP and em space (neither is
+    '\\s' in Java regex, so both spellings keep them inside a word),
+    leading/trailing runs, empty strings and NULL (NULL in both).
+    ``text._corpus_stats`` and ``corpus.packed_sequences``' offsets
+    branch count words this way and rely on it.  ``token_count_col``
+    is the spelling that differs: it counts ``[A-Za-z0-9_]+`` runs, so
+    "a-b" is one word and two tokens."""
+    from etlbigdata_spark.functions import text as ftext
+
+    rows = [*texts, "a-b"]
+    got = (
+        spark.createDataFrame(list(enumerate(rows)), "i int, t string")
+        .select(
+            "i",
+            F.regexp_count("t", F.lit(r"\S+")).alias("runs"),
+            F.size(ftext.tokens_col("t")).alias("words"),
+            ftext.token_count_col("t").alias("tokens"),
+        )
+        .collect()
+    )
+    for r in got:
+        t = rows[r.i]
+        # Python's split() also splits on NBSP and em space; Java's \s does not
+        want = None if t is None else len(t.replace("\xa0", "a").replace("\u2003", "a").split())
+        assert (r.runs, r.words) == (want, want), t
+    assert next(r.tokens for r in got if rows[r.i] == "a-b") == 2
