@@ -452,12 +452,15 @@ def _banded_signatures(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame
     )
 
 
-def _sig_agreement(sig_a, sig_b) -> Column:
-    """Fraction-agreeing-positions numerator: count of equal slots."""
-    return F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
+def _agreeing_slots(sig_a: str, sig_b: str, num_hashes: int) -> Column:
+    """How many of the ``num_hashes`` signature slots of two array
+    columns are equal — the numerator of the estimated Jaccard
+    similarity.  Literal-indexed comparisons instead of
+    ``zip_with`` + ``aggregate``: the same value, kept in whole-stage
+    codegen (the repo's HOF lint rule), built as one ``F.expr`` parse
+    instead of ~100 Column calls (round 12 planning-cost pass)."""
+    return F.expr(
+        " + ".join(f"CAST({sig_a}[{i}] = {sig_b}[{i}] AS INT)" for i in range(num_hashes))
     )
 
 
@@ -506,7 +509,7 @@ def incremental_minhash_pairs(
         )
         .dropDuplicates(["id_corpus", "id_batch"])
     )
-    agree = _sig_agreement(F.col("sig_corpus"), F.col("sig_batch"))
+    agree = _agreeing_slots("sig_corpus", "sig_batch", num_hashes)
     return (
         cand.withColumn("jaccard_dist", 1 - agree / F.lit(num_hashes))
         .filter(F.col("jaccard_dist") <= jaccard_distance_threshold)
@@ -627,15 +630,7 @@ def minhash_candidates(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    # literal-indexed comparisons instead of zip_with+aggregate: same
-    # value, stays in whole-stage codegen (the repo's HOF lint rule);
-    # one F.expr parse instead of ~100 Column calls (round 12
-    # planning-cost pass, identical expression/results)
-    agree = F.expr(
-        " + ".join(
-            f"CAST(sig_a[{i}] = sig_b[{i}] AS INT)" for i in range(num_hashes)
-        )
-    )
+    agree = _agreeing_slots("sig_a", "sig_b", num_hashes)
     return (
         cand.withColumn("jaccard_dist", 1 - agree / F.lit(num_hashes))
         .filter(F.col("jaccard_dist") <= jaccard_distance_threshold)

@@ -7,9 +7,9 @@ sampling, resize, perceptual hashing) runs through ONE Arrow-batched
 pandas mapper, :func:`_map_blobs`, over the real codecs in
 :mod:`.codecs`: PPM (P6) and 24bpp BMP images, concatenated-P6 "video"
 and 16-bit PCM WAV audio, sniffed by magic bytes.  Bytes those codecs
-cannot read raise ValueError.  Compressed formats (JPEG/MP4/...) plug
-in through each operator's ``*_fn`` parameter, because their libraries
-are not in this container.
+cannot read raise ValueError; a NULL blob yields no row.  Compressed
+formats (JPEG/MP4/...) plug in through each operator's ``*_fn``
+parameter, because their libraries are not in this container.
 """
 
 from __future__ import annotations
@@ -56,15 +56,19 @@ def _map_blobs(
     Arrow-batched pandas workers; ``rows(key, blob)`` returns the
     output rows for one blob (tuples, or dicts keyed by field name) in
     ``schema`` order, so one blob may yield one row or fan out to many.
-    The blob never leaves the map side; the number of rows a Python
-    worker holds at once is bounded by
+    A NULL blob (a failed fetch, an outer join) yields no row and never
+    reaches ``rows`` — the convention the similarity kernels follow for
+    NULL vectors.  The blob never leaves the map side; the number of
+    rows a Python worker holds at once is bounded by
     ``spark.sql.execution.arrow.maxRecordsPerBatch``."""
     src = df.select(F.col(key_col).cast("string").alias("key"), F.col(bytes_col).alias("blob"))
     columns = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = [r for k, b in zip(pdf["key"], pdf["blob"]) for r in rows(k, b)]
+            out = [
+                r for k, b in zip(pdf["key"], pdf["blob"]) if b is not None for r in rows(k, b)
+            ]
             yield pd.DataFrame(out, columns=columns)
 
     return src.mapInPandas(run, schema=schema)
@@ -87,7 +91,8 @@ def extract_media_features(
     bytes_col: str,
     decode_fn: Callable[[str, bytes], dict] = codecs.media_features,
 ) -> DataFrame:
-    """B26 — decode/featurize media, one FEATURE_SCHEMA row per blob.
+    """B26 — decode/featurize media, one FEATURE_SCHEMA row per
+    non-NULL blob.
     The default ``codecs.media_features`` sniffs PPM/BMP images (true
     dimensions + 8 pixel statistics) and PCM WAV audio (rate, channels,
     sample frames + 5 level statistics), ValueError on other bytes;

@@ -8,13 +8,21 @@ top-k most cosine-similar corpus vectors per query":
   float64 BLAS matmul (or PQ lookup-table gathers) and cut to a
   lossless per-batch candidate set, so the corpus vectors never shuffle.
   It serves :func:`cosine_topk`, :func:`cosine_topk_quantized`,
-  :func:`pq_topk` and the vectorized :func:`ivf_probe_index`.
-  Expression twins (``zip_with`` + ``aggregate`` in codegen) are kept
-  as the references tests hold it to.
+  :func:`pq_topk`, :func:`ivf_topk` and :func:`ivf_probe_index`.
 * The IVF index assigns vectors to centroid cells written as
   partitions, so a probe reads only its ``n_probe`` cells, stored as
-  floats, SQ8 or (residual) PQ codes.
+  floats, SQ8 or (residual) PQ codes.  Its cells, probes and pair
+  scores have one implementation each, all in numpy: the cell rule of
+  :func:`_assign_cosine_argmax_blas`, the driver-side probe ranking of
+  :func:`_query_probes` and the :func:`_blas_topk` scorer.
 * LSH random-projection buckets make the join candidate-only.
+
+Three JVM expression faces (``zip_with`` + ``aggregate``) remain, each
+because something replays or checks it: ``cosine_topk(vectorized=False)``
+and ``pq_topk(adc="expression")`` with :func:`pq_reconstruct_col` are
+the references the tests hold the kernel to, and the rounded
+:func:`_assign_cosine_argmax` is the cell rule the d09, s07 and st12
+SQL oracles replay.
 
 Every top-k ends in :func:`_rank_topk`: a pair with no score (a NULL
 or zero-norm vector on either side) is dropped, and the rest rank by
@@ -27,6 +35,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -60,18 +69,13 @@ def _rank_topk(
     tie-break, the same across faces and engines.
 
     NaN becomes NULL, which passes no threshold and sorts after every
-    score, so the NULL filter can sit above the window.  A filter on a
-    projected cosine is pushed under the projection and evaluates the
-    cosine a second time, so the threshold face computes it in a
-    generator (one-element explode), which no filter crosses."""
+    score, so the NULL filter can sit above the window."""
     cos = F.nanvl(F.col("cosine"), F.lit(None).cast("double"))
     if round_to is not None:
         cos = F.round(cos, round_to)
-    if threshold is not None:
-        return scored.select(
-            "query_id", "neighbor_id", *keep, F.explode(F.array(cos)).alias("cosine")
-        ).filter(F.col("cosine") >= threshold)
     scored = scored.select("query_id", "neighbor_id", *keep, cos.alias("cosine"))
+    if threshold is not None:
+        return scored.filter(F.col("cosine") >= threshold)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         (F.col("rank") <= k) & F.col("cosine").isNotNull()
@@ -119,7 +123,10 @@ def cosine_topk(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
     if vectorized:
-        return _blas_topk(corpus, q, k, id_col, vec_col, round_to, exclude_self=not include_self)
+        return _blas_topk(
+            corpus, _collect_queries(q), k, id_col, vec_col, round_to,
+            exclude_self=not include_self,
+        )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "neighbor_id",
@@ -232,66 +239,17 @@ def ivf_assign(
     n_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> tuple[DataFrame, list]:
-    """B24 IVF building block — sample centroids deterministically, assign
-    every vector to its nearest centroid (broadcast argmin, JVM-side).
+    """B24 IVF building block — sample ``n_centroids`` centroids
+    deterministically (smallest ``xxhash64(id)``) and assign every
+    vector to its cell with :func:`_assign_cosine_argmax_blas`, map-side.
     Partitioning the corpus by ``centroid`` turns later queries into
     probes of a few partitions instead of full scans."""
     cents = [
         (i, [float(x) for x in r[vec_col]])
         for i, r in enumerate(corpus.select(vec_col).orderBy(F.xxhash64(id_col)).limit(n_centroids).collect())
     ]
-    return _assign_to_cents(corpus, cents, vec_col), cents
-
-
-def _assign_to_cents(df: DataFrame, cents: list, vec_col: str, method: str = "auto") -> DataFrame:
-    """Cosine argmax assignment against a FIXED centroid list (the IVF
-    metric — distinct from kmeans' Euclidean :func:`_assign_nearest`):
-    shared by the initial build and every incremental append so one
-    index only ever carries one assignment rule.  The assigned
-    ``centroid`` is the CALLER-SUPPLIED cell id from ``cents`` (the
-    argmax position is mapped through an id lookup array), so
-    non-contiguous or out-of-order cell ids land in partitions that
-    match the sidecar — the round-7 position-vs-id mismatch is closed
-    here, at the single assignment site.
-
-    ``method``: the expression face evaluates an interpreted HOF dot
-    per centroid PER ROW — fine at the test sizes, but at web-scale
-    centroid counts it is the documented interpreted-HOF trap (round-9
-    lesson; measured ~20x at 256 cents x 50k rows).  ``"blas"``
-    delegates to :func:`_assign_cosine_argmax_blas` (one float64
-    matmul per Arrow batch; identical argmax-first-tie rule, NULL
-    vectors assign NULL on both faces — tested equal).  ``"auto"``
-    switches to blas at >= 32 centroids, so every small fixture keeps
-    the expression plan it pinned."""
-    if method == "auto":
-        method = "blas" if len(cents) >= 32 else "expression"
-    if method == "blas":
-        # the library already has this exact kernel (round-8 SemDeDup
-        # twin: same C/(|C|+1e-12) normalization, same first-max
-        # tie-break, NULL -> NULL, caller-supplied ids, withColumn
-        # replace semantics) — reuse it instead of a parallel copy
-        return _assign_cosine_argmax_blas(df, cents, vec_col, out_col="centroid")
-    if method != "expression":
-        raise ValueError(f"unknown method {method!r}")
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in vec]) for _, vec in cents])
-    id_arr = F.array(*[F.lit(int(i)) for i, _ in cents])
-    scores = F.transform(
-        cent_arr, lambda cv: _dot(F.col(vec_col).cast("array<double>"), cv) / (_norm(cv) + F.lit(1e-12))
-    )
-    best_pos = F.array_position(scores, F.array_max(scores)).cast("int")
-    # NULL vector -> NULL centroid (round 10): without the guard the
-    # position arithmetic resolved a NULL score list to the LAST cell,
-    # silently polluting that partition with unscoreable rows
-    return df.withColumn(
-        "centroid",
-        F.when(
-            F.col(vec_col).isNotNull(), F.element_at(id_arr, best_pos).cast("int")
-        ),
-    )
-
-
+    return _assign_cosine_argmax_blas(corpus, cents, vec_col, out_col="centroid"), cents
 
 
 def ivf_topk(
@@ -311,133 +269,74 @@ def ivf_topk(
     missed); recall governed by ``n_probe`` and tested by recall@k
     against :func:`cosine_topk`.
 
-    At scale the corpus is written partitioned by ``centroid``
-    (``write_parquet(..., partition_by=["centroid"])``) so the probe
-    filter becomes partition PRUNING — each query touches n_probe
-    directories, not a full scan; here the filter-after-assign plan has
-    the same shape in-memory.
+    The probe sets rank on the driver (:func:`_query_probes`), the
+    corpus is filtered to the probed cells, and :func:`_blas_topk`
+    scores each probed pair.  At scale the corpus is written partitioned
+    by ``centroid`` (:func:`ivf_write_index`) so the cell filter becomes
+    partition pruning; :func:`ivf_probe_index` is that path and returns
+    the same rows for the same centroids.
     """
     assigned, cents = ivf_assign(corpus, n_centroids, id_col, vec_col)
     q = _query_probes(queries, cents, n_probe, id_col, vec_col)
-    return _probe_score_topk(assigned, q, k, id_col, vec_col, round_to)
+    probed = assigned.filter(F.col("centroid").isin(q.probed()))
+    return _blas_topk(probed, q, k, id_col, vec_col, round_to)
+
+
+class _Queries(NamedTuple):
+    """The query side of :func:`_blas_topk`, collected to the driver —
+    small by contract."""
+
+    vecs: dict  # query_id -> vector; NULL vectors dropped, a repeated id keeps its first
+    qid_type: DataType
+    cells: dict | None = None  # query_id -> probed cell ids (an IVF probe)
+
+    def probed(self) -> list:
+        """The probed cell ids, sorted: ≤ n_centroids values."""
+        return sorted({c for cs in (self.cells or {}).values() for c in cs})
+
+
+def _collect_queries(q: DataFrame) -> _Queries:
+    """Collect a ``(query_id, __qvec)`` frame into :class:`_Queries`."""
+    vecs: dict = {}
+    for r in q.collect():
+        if r["__qvec"] is not None:  # a NULL-vector query scores nothing
+            vecs.setdefault(r["query_id"], list(r["__qvec"]))
+    return _Queries(vecs, q.schema["query_id"].dataType)
+
+
+def _unit_cents(cents: list):
+    """``(ids, C, Cn)`` of a ``[(cell id, vector)]`` list: the ids, the
+    centroid matrix and its rows scaled by ``1/(‖C_j‖ + 1e-12)``.  The
+    IVF cell rule scores vector x against cell j as ``x · Cn_j`` (the
+    constant ‖x‖ is skipped) and the first maximum wins."""
+    import numpy as np
+
+    ids = np.array([int(i) for i, _ in cents], dtype=np.int32)
+    C = np.ascontiguousarray(np.array([v for _, v in cents], dtype=np.float64))
+    return ids, C, C / (np.linalg.norm(C, axis=1)[:, None] + 1e-12)
 
 
 def _query_probes(
-    queries: DataFrame, cents: list, n_probe: int, id_col: str, vec_col: str,
-    method: str = "auto",
-) -> DataFrame:
-    """(query_id, __qvec, centroid) — each query exploded to its
-    ``n_probe`` nearest centroids, ranked driver-free: score each
-    centroid, sort (score desc, idx asc) via array_sort comparator,
-    slice the probe list.  Emitted ``centroid`` values are the
-    caller-supplied cell ids from ``cents`` (positions mapped through
-    an id lookup array) so probes line up with partitions written by
-    :func:`_assign_to_cents` for any id scheme.
+    queries: DataFrame, cents: list, n_probe: int, id_col: str, vec_col: str
+) -> _Queries:
+    """Collect the queries and give each its ``n_probe`` probed cells:
+    the centroids ranked by the cell rule of :func:`_unit_cents`, score
+    desc, ties to the lowest position in ``cents`` (a stable sort), so
+    ``n_probe=1`` probes exactly the cell :func:`_assign_cosine_argmax_blas`
+    assigns.  The cells are the caller-supplied ids from ``cents``, so
+    probes line up with the index partitions for any id scheme."""
+    import numpy as np
 
-    ``method``: the expression face embeds cents x dim LITERALS in the
-    plan — at web-scale centroid counts plan analysis alone dominated
-    (measured 30 s at 256 x 64; the interpreted-HOF trap's plan-size
-    sibling).  ``"driver"`` ranks probes in numpy over the collected
-    query set — ALREADY driver-bounded by contract here (every caller
-    collects probed cells from this frame) — and returns a plain
-    createDataFrame, no giant plan.  Same score formula
-    (dot / (norm + 1e-12)), same (score desc, idx asc) order; ties
-    under float summation-order can differ, which ``"auto"`` confines
-    to >= 32 centroids so every small fixture keeps its pinned plan."""
-    if method == "auto":
-        method = "driver" if len(cents) >= 32 else "expression"
-    if method == "driver":
-        import numpy as np
-
-        ids = [int(i) for i, _ in cents]
-        C = np.array([v for _, v in cents], dtype=np.float64)
-        Cn = C / (np.linalg.norm(C, axis=1) + 1e-12)[:, None]
-        qrows = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        ).collect()
-        out = []
-        for r in qrows:
-            if r["__qvec"] is None:
-                continue
-            qv = np.array(list(r["__qvec"]), dtype=np.float64)
-            scores = Cn @ qv
-            order = np.argsort(-scores, kind="stable")[:n_probe]
-            for pos in order:
-                out.append((r["query_id"], [float(x) for x in qv], int(ids[pos])))
-        spark = queries.sparkSession
-        qid_type = queries.schema[id_col].dataType
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("query_id", qid_type),
-                T.StructField("__qvec", T.ArrayType(T.DoubleType())),
-                T.StructField("centroid", T.IntegerType()),
-            ]
-        )
-        return spark.createDataFrame(out, schema)
-    if method != "expression":
-        raise ValueError(f"unknown method {method!r}")
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in vec]) for _, vec in cents])
-    id_arr = F.array(*[F.lit(int(i)) for i, _ in cents])
-    qv = F.col(vec_col).cast("array<double>")
-    scored_cents = F.transform(
-        cent_arr, lambda cv: _dot(qv, cv) / (_norm(cv) + F.lit(1e-12))
+    q = _collect_queries(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     )
-    pairs = F.transform(
-        scored_cents,
-        lambda s, i: F.struct(s.alias("score"), i.alias("idx")),
-    )
-    ranked = F.array_sort(
-        pairs,
-        lambda l, r: F.when(l["score"] > r["score"], F.lit(-1))
-        .when(l["score"] < r["score"], F.lit(1))
-        .otherwise(l["idx"].cast("int") - r["idx"].cast("int")),
-    )
-    probes = F.transform(
-        F.slice(ranked, 1, n_probe),
-        # .cast('int') for symmetry with _assign_to_cents: without it the
-        # emitted type depends on literal widening of the id array and can
-        # diverge (bigint) from the index's int partition column
-        lambda p: F.element_at(id_arr, p["idx"].cast("int") + 1).cast("int"),
-    )
-    # NULL-vector queries emit NOTHING on either face (ADVICE r10): a
-    # NULL vector scores NULL against every centroid, which the sort
-    # comparator passes through to idx order — without the filter this
-    # face emits n_probe (query, NULL, centroid) rows the driver face
-    # skips, and the blas scorer's driver-side list(__qvec) crashes on.
-    # Downstream the rows were dead anyway (NULL cosine is filtered),
-    # so dropping them here is semantics-preserving and face-equal.
-    return queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.explode(probes).alias("centroid"),
-    )
-
-
-def _probe_score_topk(
-    assigned: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str,
-    round_to: int | None, threshold: float | None = None,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Score probe pairs within shared cells; ``threshold=None`` ranks
-    top-k per query (one window shuffle), a float threshold instead
-    emits every pair with ``cosine >= threshold`` MAP-SIDE — no window,
-    no shuffle at all after the broadcast probe join, which is the
-    shape a streaming dedup probe wants per micro-batch.
-    ``exclude_self=False`` keeps pairs whose query and neighbor ids
-    collide — required when the stream's id space legitimately overlaps
-    the corpus's (round-8 review: the st13/st14 oracle emits such pairs
-    once the scaled corpus reaches the planted +300000 offsets)."""
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"), "centroid"
-    )
-    joined = c.join(F.broadcast(q), "centroid")
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn("cosine", cosine_sim(F.col("__qvec"), F.col("__cvec")))
-    keep = ("centroid",) if threshold is not None else ()
-    return _rank_topk(scored, k, round_to, *keep, threshold=threshold)
+    ids, _, Cn = _unit_cents(cents)
+    cells = {}
+    if q.vecs:
+        scores = np.array(list(q.vecs.values()), dtype=np.float64) @ Cn.T  # Q×cells
+        for qid, s in zip(q.vecs, scores):
+            cells[qid] = [int(ids[p]) for p in np.argsort(-s, kind="stable")[:n_probe]]
+    return q._replace(cells=cells)
 
 
 def ivf_write_index(
@@ -458,7 +357,9 @@ def ivf_write_index(
     ``<path>/centroids`` sidecar (n_centroids rows).  Build once, probe
     every batch with :func:`ivf_probe_index` — at 100 TB the corpus is
     scanned once at build time and each query batch touches only
-    n_probe/n_centroids of the files afterwards.
+    n_probe/n_centroids of the files afterwards.  Each vector lands in
+    its cell by the one IVF cell rule, :func:`_assign_cosine_argmax_blas`
+    (map-side numpy), which append and probe share.
 
     ``quantize=True`` stores the vectors SQ8-encoded
     (:func:`quantize_embeddings`: ``array<tinyint>`` codes + per-vector
@@ -561,7 +462,6 @@ class _IvfLayout(NamedTuple):
     books: list | None = None  # PQ codebooks
     residual: bool = False  # PQ codes quantize x - centroid[cell]
     vectors: DataFrame | None = None  # <path>/vectors, as read
-    cents_df: DataFrame | None = None  # <path>/centroids, as read
 
 
 def _read_ivf_layout(spark, path: str, vec_col: str) -> _IvfLayout:
@@ -569,10 +469,12 @@ def _read_ivf_layout(spark, path: str, vec_col: str) -> _IvfLayout:
     and append: the centroid sidecar, the encoding detected from the
     ``vectors`` schema (``pq_code`` -> PQ with its codebook sidecar and
     residual flag; ``vec_col`` -> float; ``emb_q`` -> SQ8), and the
-    read frames the probe scans.  A schema that matches none of them
+    read frame the probe scans.  A schema that matches none of them
     raises instead of letting an append land a second file schema."""
-    cents_df = spark.read.parquet(f"{path}/centroids")
-    cents = [(r["centroid"], list(r["vec"])) for r in cents_df.orderBy("centroid").collect()]
+    cents = [
+        (r["centroid"], list(r["vec"]))
+        for r in spark.read.parquet(f"{path}/centroids").orderBy("centroid").collect()
+    ]
     vectors = spark.read.parquet(f"{path}/vectors")
     cols = vectors.columns
     books, residual = None, False
@@ -589,7 +491,7 @@ def _read_ivf_layout(spark, path: str, vec_col: str) -> _IvfLayout:
             f"IVF index at {path} stores its vectors in {arrays}: vec_col={vec_col!r} "
             "matches neither its float layout nor the SQ8 layout (emb_q)"
         )
-    return _IvfLayout(cents, encoding, books, residual, vectors, cents_df)
+    return _IvfLayout(cents, encoding, books, residual, vectors)
 
 
 def _write_ivf_segment(
@@ -598,7 +500,7 @@ def _write_ivf_segment(
     """The one vector write path of build (``mode="overwrite"``) and
     append (``"append"``): assign rows to the index's frozen cells,
     encode them in its layout and write them partitioned by cell."""
-    assigned = _assign_to_cents(df, layout.cents, vec_col)
+    assigned = _assign_cosine_argmax_blas(df, layout.cents, vec_col, out_col="centroid")
     if layout.encoding == "pq":
         if layout.residual:
             # encode x − centroid[cell], not x (FAISS IndexIVFPQ): the
@@ -670,111 +572,59 @@ def ivf_probe_index(
     round_to: int | None = None,
     threshold: float | None = None,
     exclude_self: bool = True,
-    vectorized: bool = False,
 ) -> DataFrame:
     """B24 — probe a persisted :func:`ivf_write_index` index.  Same
     semantics as :func:`ivf_topk` with the same centroid sample (so the
     two are result-identical for the same corpus/params), but the
-    corpus side is the on-disk partitioned index: the probed centroid
-    set (≤ n_centroids distinct values BY CONSTRUCTION — the one
-    driver collect here is bounded by that contract, not by data size)
-    becomes a static partition filter, so the scan reads only the
-    probed directories — verified by a PartitionFilters plan assertion
-    in tests.
+    corpus side is the on-disk partitioned index: the queries collect
+    once (:func:`_query_probes`, small by contract), and their probed
+    cell set (≤ n_centroids ids) becomes a static partition filter, so
+    the scan reads only the probed directories — verified by a
+    PartitionFilters plan assertion in tests.
+
+    Every layout scores through :func:`_blas_topk`, one BLAS matmul per
+    Arrow batch of probed vectors: float vectors directly, SQ8 codes
+    directly (the per-vector scale cancels out of cosine), and PQ codes
+    through lookup tables built from the sidecar books (for cosine that
+    IS ADC: subspaces are disjoint), with a residual layout's centroid
+    terms folded into the tables.  ``round_to`` rounds JVM-side before
+    the rank or threshold.
 
     ``threshold`` switches from per-query top-k to PAIR emission:
     every (query, neighbor) in a probed cell with ``cosine >=
     threshold`` comes back (columns ``query_id, neighbor_id, centroid,
     cosine``), with NO window shuffle — the streaming-dedup probe shape
-    used by :func:`etlbigdata_spark.streaming.ops.foreach_batch_ann_probe`.
-
-    ``vectorized=True`` scores each Arrow batch of probed vectors as
-    ONE BLAS matmul against the query matrix instead of an interpreted
-    HOF cosine per pair (the s01 precedent; required once probed cells
-    hold millions of vectors — measured ~20x at the 2M x 64d scale
-    point, IVFPQ_SCALE_r10.json).  Requires ``round_to`` — both faces
-    round JVM-side before the rank/threshold so float summation-order
-    differences are absorbed and the two faces are tested EQUAL.  For
-    a PQ index the vectorized face reconstructs codewords in numpy
-    from the sidecar books (the ADC table route) rather than through
-    the per-row reconstruction expression."""
-    if vectorized and round_to is None:
-        raise ValueError("vectorized probe requires round_to (rounding absorbs "
-                         "float summation-order differences; the s01 contract)")
+    used by :func:`etlbigdata_spark.streaming.ops.foreach_batch_ann_probe`."""
     layout = _read_ivf_layout(spark, path, vec_col)
     q = _query_probes(queries, layout.cents, n_probe, id_col, vec_col)
-    if vectorized:
-        # ONE collect serves both the partition filter and the scoring
-        # kernel's query/probe tables — bounded by contract at
-        # |queries| x n_probe rows (round-10 review: the blas face used
-        # to re-collect q, re-running the query scan as a second job)
-        qrows = q.select("query_id", "__qvec", "centroid").collect()
-        probed = sorted({r["centroid"] for r in qrows})  # ≤ n_centroids values
-    else:
-        # the default face needs only the probed CELL SET for the
-        # partition filter — collect ≤ n_centroids ints, not
-        # |queries| x n_probe full vectors (ADVICE r10: the widened
-        # collect taxed driver memory on the path that never uses it)
-        qrows = None
-        probed = sorted(
-            r["centroid"] for r in q.select("centroid").distinct().collect()
-        )
-    assigned = layout.vectors.filter(F.col("centroid").isin(probed))
-    # an SQ8 index carries codes (scored directly — the per-vector
-    # scale cancels out of cosine); a PQ index carries m-byte codes
-    # scored against the codeword reconstruction (for cosine that IS
-    # ADC — disjoint subspaces), with the codebooks rebuilt from the
-    # sidecar so no caller-side state travels
+    assigned = layout.vectors.filter(F.col("centroid").isin(q.probed()))
     corpus_vec = {"float": vec_col, "sq8": "emb_q", "pq": "pq_code"}[layout.encoding]
-    if layout.encoding == "pq" and not vectorized:
-        recon = pq_reconstruct_col("pq_code", layout.books)
-        if layout.residual:
-            # residual layout: x̂ = centroid[cell] + decode(code).  The
-            # cell vectors come back via a BROADCAST join against the
-            # tiny centroids sidecar (never a cells×dim literal table —
-            # the round-10 plan-size trap), then one zip_with add
-            cvecs = layout.cents_df.select("centroid", F.col("vec").alias("__centvec"))
-            assigned = assigned.join(F.broadcast(cvecs), "centroid")
-            recon = F.zip_with(recon, F.col("__centvec"), lambda a, b: a + b)
-        assigned = assigned.withColumn("__recon", recon)
-        corpus_vec = "__recon"
-    if vectorized:
-        # the blas face folds a residual layout's centroid terms into its
-        # ADC LUTs (dot(q,x̂) = q·c + Σ_s LUT, ‖x̂‖² via a per-(cell, code)
-        # cross table) so the kernel stays gather-shaped
-        return _blas_topk(
-            assigned, q, k, id_col, corpus_vec, round_to, threshold,
-            exclude_self, pq_books=layout.books, qrows=qrows,
-            pq_residual_cents=dict(layout.cents) if layout.residual else None,
-        )
-    return _probe_score_topk(
-        assigned, q, k, id_col, corpus_vec, round_to, threshold, exclude_self
+    return _blas_topk(
+        assigned, q, k, id_col, corpus_vec, round_to, threshold, exclude_self,
+        pq_books=layout.books,
+        pq_residual_cents=dict(layout.cents) if layout.residual else None,
     )
 
 
 def _blas_topk(
-    corpus: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str,
+    corpus: DataFrame, q: _Queries, k: int, id_col: str, vec_col: str,
     round_to: int | None, threshold: float | None = None, exclude_self: bool = True,
-    pq_books: list | None = None, qrows: list | None = None,
-    pq_residual_cents: dict | None = None,
+    pq_books: list | None = None, pq_residual_cents: dict | None = None,
 ) -> DataFrame:
     """The one Arrow-batch cosine scorer (the per-partition local top-k
     that the window in :func:`_rank_topk` merges globally).
 
-    The query rows ``q`` (query_id, __qvec[, centroid]) collect to the
-    driver — small by contract, one vector per query_id (a repeated id
-    keeps its first vector); a caller that already collected them
-    passes ``qrows``.  Each Arrow batch of ``corpus`` vectors is scored
-    as one ``B x d @ d x Q`` float64 matmul.  ``pq_books`` scores PQ
-    codes through lookup tables instead, and ``pq_residual_cents`` adds
-    the centroid terms of a residual IVF-PQ layout.
+    The collected queries ``q`` ship to every task.  Each Arrow batch of
+    ``corpus`` vectors is scored as one ``B x d @ d x Q`` float64
+    matmul.  ``pq_books`` scores PQ codes through lookup tables
+    instead, and ``pq_residual_cents`` adds the centroid terms of a
+    residual IVF-PQ layout.
 
-    Candidates: with a ``centroid`` column on ``q`` (an IVF probe) a
-    pair scores only if the query probed that row's cell, as in the join
-    face :func:`_probe_score_topk`; without one every row is a candidate
-    for every query.  A NULL vector on either side scores nothing, and
-    a zero-norm one scores NaN, which neither the cut nor the emission
-    counts.
+    Candidates: with ``q.cells`` (an IVF probe) a pair scores only if
+    the query probed the corpus row's ``centroid``; without them every
+    row is a candidate for every query.  A NULL vector on either side
+    scores nothing, and a zero-norm one scores NaN, which neither the
+    cut nor the emission counts.
 
     The per-batch cut keeps a row iff its score is at least the k-th
     largest for that query within the batch minus a slack of one
@@ -785,46 +635,38 @@ def _blas_topk(
     float rounding is at most 1 ULP) cannot lift it into the top-k.
     Emitted rows per batch are therefore ~(k + tie band) x Q instead of
     B x Q.  Self-exclusion, rounding, the threshold filter and the rank
-    all run JVM-side in :func:`_rank_topk`, exactly as on the
-    expression faces, so the faces agree row for row (tested)."""
+    all run JVM-side in :func:`_rank_topk`, as on the expression
+    references, so the kernel and the references agree row for row
+    (tested)."""
     import numpy as np
     from pyspark.sql import types as T
 
-    cells = "centroid" in q.columns
-    if qrows is None:
-        qrows = q.collect()
-    by_qid: dict = {}
-    for r in qrows:
-        if r["__qvec"] is None:  # NULL-vector query scores nothing on any face
-            continue
-        e = by_qid.setdefault(r["query_id"], {"vec": list(r["__qvec"]), "cells": set()})
-        if cells:
-            e["cells"].add(r["centroid"])
+    cells = q.cells is not None
     out_schema = T.StructType(
         [
-            T.StructField("query_id", q.schema["query_id"].dataType),
+            T.StructField("query_id", q.qid_type),
             T.StructField("neighbor_id", corpus.schema[id_col].dataType),
             *([T.StructField("centroid", T.IntegerType())] if cells else []),
             T.StructField("cosine", T.DoubleType()),
         ]
     )
     keep = ("centroid",) if threshold is not None else ()
-    if not by_qid:  # empty/all-NULL query set: 0×d matmul would crash
+    if not q.vecs:  # empty/all-NULL query set: 0×d matmul would crash
         empty = corpus.sparkSession.createDataFrame([], out_schema)
         return _rank_topk(empty, k, round_to, *keep, threshold=threshold)
-    qids_list = list(by_qid)
-    qm = np.array([by_qid[i]["vec"] for i in qids_list], dtype=np.float64)
+    qids_list = list(q.vecs)
+    qm = np.array([q.vecs[i] for i in qids_list], dtype=np.float64)
     qnorm = np.linalg.norm(qm, axis=1)
     allow = None
     if cells:
-        cells_sorted = sorted({c for e in by_qid.values() for c in e["cells"]})
+        cells_sorted = q.probed()
         cell_pos = {c: i for i, c in enumerate(cells_sorted)}
         # one sentinel all-False row at index -1: a corpus row in a cell no
         # query probed masks to no-candidates instead of a KeyError, so the
         # kernel is safe even when a caller skips the probed-cell pre-filter
         allow = np.zeros((len(cells_sorted) + 1, len(qids_list)), dtype=bool)
         for qi, qid in enumerate(qids_list):
-            for c in by_qid[qid]["cells"]:
+            for c in q.cells[qid]:
                 allow[cell_pos[c], qi] = True
     qids = np.array(qids_list)
     # PQ scores via the real ADC LUT route (round 10): per subspace s,
@@ -1138,17 +980,15 @@ def cosine_topk_quantized(
     """
     import numpy as np
 
-    # NULL query vectors match nothing; drop them before the encoder
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    q = _collect_queries(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     )
-    qrows = []
-    for r in q.collect():
-        v = np.array(r["__qvec"], dtype=np.float64)
+    codes = {}
+    for qid, vec in q.vecs.items():
+        v = np.array(vec, dtype=np.float64)
         # quantize_embeddings' encoder: a zero vector keeps scale 1.0
-        codes = np.rint(v * (127.0 / (np.abs(v).max() or 1.0)))  # float64-exact
-        qrows.append({"query_id": r["query_id"], "__qvec": codes})
-    return _blas_topk(corpus_q, q, k, id_col, q_col, round_to, qrows=qrows)
+        codes[qid] = np.rint(v * (127.0 / (np.abs(v).max() or 1.0)))  # float64-exact
+    return _blas_topk(corpus_q, q._replace(vecs=codes), k, id_col, q_col, round_to)
 
 
 def ivf_append_index(
@@ -1160,8 +1000,8 @@ def ivf_append_index(
     """Incrementally grow a persisted :func:`ivf_write_index` index —
     the ANN twin of the dedup family's incremental signature index
     (d07): assign ONLY the new batch against the index's FROZEN
-    centroid sidecar (same cosine-argmax rule as the build, via
-    ``_assign_to_cents``) and append it into the centroid-partitioned
+    centroid sidecar (the build's cell rule,
+    :func:`_assign_cosine_argmax_blas`) and append it into the centroid-partitioned
     layout.  The existing corpus is never rescanned and never shuffles —
     per-append cost is O(new batch), which is the property that keeps a
     daily-embedding pipeline's index maintainable at 100 TB.  New
@@ -1260,8 +1100,8 @@ def _assign_cosine_argmax(
     ROUNDED before the argmax so an external engine computing the same
     rounded scores picks the same cell; ties break to the lowest
     centroid index (``array_position`` returns the first maximum).
-    Distinct from ``_assign_to_cents`` (IVF), which skips the constant
-    query norm and never needs cross-engine determinism.  Map-side
+    Distinct from the IVF cell rule (:func:`_assign_cosine_argmax_blas`),
+    which is unrounded and never needs cross-engine determinism.  Map-side
     codegen: the centroid matrix is a literal array, no shuffle.
     Emits the CALLER-SUPPLIED cell id (argmax position mapped through
     an id lookup array — round-8 review fix: previously positions,
@@ -1294,27 +1134,26 @@ def _assign_cosine_argmax(
 def _assign_cosine_argmax_blas(
     df: DataFrame, cents: list, vec_col: str, out_col: str = "cluster"
 ) -> DataFrame:
-    """BLAS twin of :func:`_assign_cosine_argmax` for the PRODUCTION
-    cell counts (round 8): the expression face evaluates k interpreted
-    HOF dot products PER ROW, which is fine at the 8-cell oracle scale
-    and dominates wall-clock at SemDeDup's √n-scaled counts (measured
-    at sf1/141 cells: 35 s expression vs ~2 s BLAS for the identical
-    assignment).  One (batch × k) matmul + argmax per Arrow batch, the
-    k×d matrix ships in the closure — map-side, no shuffle, same
-    lowest-index tie-break (np.argmax).  UNROUNDED scores: this face
-    skips the cross-engine rounding (no external engine replays it),
-    so a score exactly at a rounding boundary may pick a different —
-    equally valid — cell than the oracle face; identical vectors still
-    always share a cell, which is the dedup invariant that matters.
-    The assigned cell id is the CALLER-SUPPLIED id from ``cents``."""
+    """The IVF cell rule (:func:`_unit_cents`), and the BLAS twin of
+    :func:`_assign_cosine_argmax` for SemDeDup's production cell counts:
+    the expression face evaluates k interpreted HOF dot products PER
+    ROW, which is fine at the 8-cell oracle scale and dominates
+    wall-clock at SemDeDup's √n-scaled counts (measured at sf1/141
+    cells: 35 s expression vs ~2 s BLAS for the identical assignment).
+    One (batch × k) matmul + argmax per Arrow batch, the k×d matrix
+    ships in the closure — map-side, no shuffle, same lowest-index
+    tie-break (np.argmax); a NULL vector gets a NULL cell.  UNROUNDED
+    scores: no external engine replays this rule, so a score exactly
+    at a rounding boundary may pick a different — equally valid — cell
+    than the oracle face; identical vectors still always share a cell,
+    which is the dedup invariant that matters.  The assigned cell id is
+    the CALLER-SUPPLIED id from ``cents``."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql.functions import pandas_udf
 
-    ids = np.array([int(i) for i, _ in cents], dtype=np.int32)
-    C = np.ascontiguousarray(np.array([v for _, v in cents], dtype=np.float64))
-    Cn = C / (np.linalg.norm(C, axis=1)[:, None] + 1e-12)
+    ids, _, Cn = _unit_cents(cents)
 
     def _assign(v):  # pd.Series -> pd.Series; no hints (see b18 note)
         # Null embeddings get a NULL assignment, matching the expression
@@ -1917,7 +1756,7 @@ def pq_suggest_m(
     true neighbor DENSITY, so sample uniformly (never by cluster).
 
     ``residual_cents``: the ``[(cell_id, [floats]), ...]`` list every
-    IVF face shares — candidates are then evaluated as RESIDUAL
+    IVF function shares — candidates are then evaluated as RESIDUAL
     encodings (assign by the index's cosine-argmax rule, subtract,
     fit/encode on residuals, reconstruct ``x̂ = cent + decode(code)``),
     matching ``ivf_write_index(pq=..., pq_residual=True)``.
@@ -1988,11 +1827,9 @@ def pq_suggest_m(
     d = X.shape[1]
 
     def _residualize_rows(M):
-        """cosine-argmax assign (the _assign_to_cents metric) + subtract."""
-        C = np.array([v for _i, v in residual_cents], dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-        cell = (Mn @ Cn.T).argmax(axis=1)
+        """The index's cell rule (:func:`_unit_cents`) + subtract."""
+        _, C, Cn = _unit_cents(residual_cents)
+        cell = (M @ Cn.T).argmax(axis=1)
         return M - C[cell], C[cell]
 
     if residual_cents is not None:
@@ -2071,7 +1908,7 @@ def residualize(
     recall to 0.43 at 2M×64d).  Map-side only: the cell→vector table
     travels in the UDF closure, each Arrow batch is one gather +
     subtract, nothing shuffles, and the output is reshard-stable.
-    ``cents`` is the ``[(cell_id, [floats]), ...]`` list every IVF face
+    ``cents`` is the ``[(cell_id, [floats]), ...]`` list every IVF function
     here shares; rows whose vector OR cell is NULL (and rows assigned a
     cell missing from ``cents`` — impossible for an index-internal
     caller, guarded anyway) residualize to NULL, matching
@@ -2261,7 +2098,10 @@ def pq_topk(
     queries = queries.filter(F.col(vec_col).isNotNull())
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     if adc == "blas":
-        return _blas_topk(corpus_codes, q, k, id_col, code_col, round_to, pq_books=codebooks)
+        return _blas_topk(
+            corpus_codes, _collect_queries(q), k, id_col, code_col, round_to,
+            pq_books=codebooks,
+        )
     recon = pq_reconstruct_col(code_col, codebooks)
     c = corpus_codes.select(F.col(id_col).alias("neighbor_id"), recon.alias("__cvec"))
     scored = c.crossJoin(F.broadcast(q)).select(

@@ -183,42 +183,45 @@ def kafka_value_json(df: DataFrame, schema: T.StructType | str) -> DataFrame:
 
 
 # -- event-time windows (B20) + watermark (B21) ----------------------
+def _window_counts(
+    df: DataFrame, ts_col: str, window_len: str, slide: str | None,
+    keys: list[str] | None, watermark: str | None, value_col: str | None = None,
+) -> DataFrame:
+    """The one event-time window count: ``n_events`` (plus
+    ``sum_<value_col>``) per window and key, tumbling when ``slide`` is
+    None.  With ``watermark`` set, state for windows older than (max
+    event time - watermark) is evicted and late rows beyond it are
+    dropped (B21)."""
+    if watermark:
+        df = df.withWatermark(ts_col, watermark)
+    keys = [F.col(k) for k in (keys or [])]
+    aggs = {"n_events": F.count(F.lit(1))}
+    if value_col:
+        aggs[f"sum_{value_col}"] = F.sum(value_col)
+    win = F.window(F.col(ts_col), window_len, slide).alias("win")
+    return df.groupBy(win, *keys).agg(*[c.alias(n) for n, c in aggs.items()]).select(
+        F.col("win.start").alias("window_start"),
+        F.col("win.end").alias("window_end"),
+        *keys,
+        *aggs,
+    )
+
+
 def tumbling_counts(
     df: DataFrame, ts_col: str, window_len: str, keys: list[str] | None = None,
     watermark: str | None = None, value_col: str | None = None,
 ) -> DataFrame:
-    """Tumbling event-time window agg; with ``watermark`` set, state for
-    windows older than (max event time - watermark) is evicted and late
-    rows beyond it are dropped (B21)."""
-    if watermark:
-        df = df.withWatermark(ts_col, watermark)
-    group = [F.window(F.col(ts_col), window_len).alias("win")] + [F.col(k) for k in (keys or [])]
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    if value_col:
-        aggs.append(F.sum(value_col).alias(f"sum_{value_col}"))
-    return df.groupBy(*group).agg(*aggs).select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        *[F.col(k) for k in (keys or [])],
-        *[F.col(c) for c in ("n_events",) if True],
-        *([F.col(f"sum_{value_col}")] if value_col else []),
-    )
+    """Tumbling event-time window agg (:func:`_window_counts`)."""
+    return _window_counts(df, ts_col, window_len, None, keys, watermark, value_col)
 
 
 def sliding_counts(
     df: DataFrame, ts_col: str, window_len: str, slide: str,
     keys: list[str] | None = None, watermark: str | None = None,
 ) -> DataFrame:
-    """Sliding window — each event lands in window_len/slide windows."""
-    if watermark:
-        df = df.withWatermark(ts_col, watermark)
-    group = [F.window(F.col(ts_col), window_len, slide).alias("win")] + [F.col(k) for k in (keys or [])]
-    return df.groupBy(*group).agg(F.count(F.lit(1)).alias("n_events")).select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        *[F.col(k) for k in (keys or [])],
-        "n_events",
-    )
+    """Sliding window — each event lands in window_len/slide windows
+    (:func:`_window_counts`)."""
+    return _window_counts(df, ts_col, window_len, slide, keys, watermark)
 
 
 # -- stream-stream join (B19/B21) ------------------------------------
@@ -757,8 +760,10 @@ def foreach_batch_ann_probe(
     (columns ``query_id, neighbor_id, cosine, rank``) to map-side pair
     emission of every match with ``cosine >= threshold`` (columns
     ``query_id, neighbor_id, centroid, cosine``, no window shuffle) —
-    the streaming near-dup shape.  ``sink_fn`` receives the probe
-    RESULT, not the raw batch."""
+    the streaming near-dup shape.  Each batch's queries collect once
+    to rank their probes, and the pairs score in the one BLAS kernel of
+    ``ivf_probe_index``; ``round_to`` rounds before the threshold.
+    ``sink_fn`` receives the probe RESULT, not the raw batch."""
     from ..functions import similarity as fsim
 
     def fn(df: DataFrame, epoch_id: int) -> None:

@@ -2495,8 +2495,11 @@ WHERE rank <= 5
 def s03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B24 — IVF probe-path search (approximate: probes 4/16 cells;
     recall-tested against s01 in tests; with n_probe=n_centroids the
-    output equals the exact path).  At scale the corpus is partitioned
-    by centroid so probing = partition pruning."""
+    output equals the exact path).  Cells, probes and pair scores run
+    in numpy (cell argmax per Arrow batch, probe ranking on the driver,
+    the :func:`similarity._blas_topk` scorer); the plan holds no
+    interpreted HOF.  At scale the corpus is partitioned by centroid so
+    probing = partition pruning."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return fsim.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4, round_to=6)
@@ -2823,8 +2826,8 @@ def s09_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float summation-order difference vs the SQL twin's sequential
     d-dim fold — EMPIRICAL agreement, not structural (a cosine landing
     within reorder error of a 0.5e-6 boundary could flip; the trade
-    every vectorized oracle face here makes, with adc="expression"
-    kept as the exact twin) — and the face stops paying the
+    every kernel-scored oracle face here makes — s01, s09 and st14's
+    IVF probe — with adc="expression" kept as the exact twin) — and the face stops paying the
     interpreted per-pair expression cost (89 → 11 s at sf1).  The
     full production path (kmeans codebooks + blas encode) is
     recall-bounded in tests/test_recall.py."""
@@ -4626,7 +4629,7 @@ def st13_stream_probe_appended_index(spark: SparkSession, sf_dir: str) -> DataFr
         chunk1.coalesce(1).write.mode("append").parquet(stage)
 
         stream = stops.read_file_stream(spark, stage, chunk1.schema)
-        s = fsim._assign_to_cents(stream, cents, "embedding").select(
+        s = fsim._assign_cosine_argmax_blas(stream, cents, "embedding", "centroid").select(
             F.col("vec_id").alias("id_stream"),
             F.col("embedding").alias("__vs"),
             "centroid",

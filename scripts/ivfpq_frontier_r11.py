@@ -93,7 +93,7 @@ def main() -> None:
         km_vecs, _a, _h = fsim.kmeans_fit(corpus, k=N_CENTROIDS, iters=4)
         km_cents = list(enumerate(km_vecs))
         resid_km = fsim.residualize(
-            fsim._assign_to_cents(corpus, km_cents, "embedding"), km_cents
+            fsim._assign_cosine_argmax_blas(corpus, km_cents, "embedding", "centroid"), km_cents
         )
         cb64 = fsim.pq_fit(resid_km, n_subspaces=64, n_codes=128,
                            method="kmeans", train_n=4096, vec_col="__resid")
@@ -119,8 +119,7 @@ def main() -> None:
         # error diagnostic (cosine column = the ADC estimate)
         t0 = time.perf_counter()
         rows = fsim.ivf_probe_index(
-            spark, path, queries, k=max(overfetch) * K, n_probe=N_PROBE,
-            round_to=6, vectorized=True,
+            spark, path, queries, k=max(overfetch) * K, n_probe=N_PROBE, round_to=6,
         ).collect()
         v["probe_sec"] = round(time.perf_counter() - t0, 2)
         ranked: dict = {}

@@ -103,8 +103,7 @@ def probed_bytes(spark, path: str, queries) -> int:
     cents_rows = spark.read.parquet(f"{path}/centroids").orderBy("centroid").collect()
     cents = [(r["centroid"], list(r["vec"])) for r in cents_rows]
     q = fsim._query_probes(queries, cents, N_PROBE, "vec_id", "embedding")
-    probed = sorted(r["centroid"] for r in q.select("centroid").distinct().collect())
-    return sum(du(f"{path}/vectors/centroid={c}") for c in probed)
+    return sum(du(f"{path}/vectors/centroid={c}") for c in q.probed())
 
 
 def main() -> None:
@@ -157,8 +156,7 @@ def main() -> None:
         for _ in range(RUNS):
             t0 = time.perf_counter()
             rows = fsim.ivf_probe_index(
-                spark, path, queries, k=K, n_probe=N_PROBE,
-                round_to=6, vectorized=True,
+                spark, path, queries, k=K, n_probe=N_PROBE, round_to=6,
             ).collect()
             ts.append(round(time.perf_counter() - t0, 2))
             got = {}
@@ -177,8 +175,7 @@ def main() -> None:
 
             t0 = time.perf_counter()
             rows4k = fsim.ivf_probe_index(
-                spark, path, queries, k=16 * K, n_probe=N_PROBE,
-                round_to=6, vectorized=True,
+                spark, path, queries, k=16 * K, n_probe=N_PROBE, round_to=6,
             ).collect()
             cand: dict = {}
             for r in rows4k:

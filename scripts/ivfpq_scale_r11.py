@@ -100,7 +100,7 @@ def main() -> None:
     out["kmeans_fit_sec"] = round(time.perf_counter() - t0, 1)
     t0 = time.perf_counter()
     resid_km = fsim.residualize(
-        fsim._assign_to_cents(corpus, km_cents, "embedding"), km_cents
+        fsim._assign_cosine_argmax_blas(corpus, km_cents, "embedding", "centroid"), km_cents
     )
     cb_res_km = fsim.pq_fit(resid_km, n_subspaces=32, n_codes=128,
                             method="kmeans", train_n=4096, vec_col="__resid")
@@ -126,8 +126,7 @@ def main() -> None:
         for _ in range(RUNS):
             t0 = time.perf_counter()
             rows = fsim.ivf_probe_index(
-                spark, path, queries, k=K, n_probe=N_PROBE,
-                round_to=6, vectorized=True,
+                spark, path, queries, k=K, n_probe=N_PROBE, round_to=6,
             ).collect()
             ts.append(round(time.perf_counter() - t0, 2))
             got = {}
@@ -144,8 +143,7 @@ def main() -> None:
 
             t0 = time.perf_counter()
             rows4k = fsim.ivf_probe_index(
-                spark, path, queries, k=16 * K, n_probe=N_PROBE,
-                round_to=6, vectorized=True,
+                spark, path, queries, k=16 * K, n_probe=N_PROBE, round_to=6,
             ).collect()
             cand: dict = {}
             for r in rows4k:

@@ -892,6 +892,36 @@ def test_image_near_dups_uses_hash_fn(engine):
     assert {(r["id_a"], r["id_b"]) for r in via_engine.collect()} == want
 
 
+def test_null_media_blob_yields_no_row(engine):
+    """A NULL media cell (a failed fetch, an outer join) yields no output
+    row from every per-blob operator instead of aborting the job, and
+    the real blobs beside it come through unchanged."""
+    import numpy as np
+
+    from etlbigdata_spark.functions import codecs
+    from etlbigdata_spark.functions.multimodal import (
+        add_image_ahash,
+        image_near_dups,
+        resize_media,
+        sample_frames,
+    )
+
+    img = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
+    ppm = bytearray(codecs.encode_ppm(img))
+    df = engine.spark.createDataFrame(
+        [("a", ppm), ("b", ppm), ("gone", None)], "key string, blob binary"
+    )
+    real = {"a", "b"}
+    keys = lambda out: sorted(r["key"] for r in out.collect())  # noqa: E731
+    assert keys(extract_media_features(df, "key", "blob")) == sorted(real)
+    assert keys(sample_frames(df, "key", "blob", n_frames=2)) == sorted(real)
+    assert keys(resize_media(df, "key", "blob", 3, 2)) == sorted(real)
+    hashes = {r["key"]: r["ahash"] for r in add_image_ahash(df, "key", "blob").collect()}
+    assert set(hashes) == real and hashes["a"] == codecs.image_ahash(bytes(ppm))
+    pairs = image_near_dups(df, "key", "blob", max_hamming=0).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [("a", "b")]
+
+
 def test_wav_strict_audio_features_real_codec(engine):
     """Default audio path: a synthesized stereo 16-bit PCM sine decodes
     through the stdlib wave codec to exact rate/channels/frames and the

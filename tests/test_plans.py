@@ -217,12 +217,11 @@ def test_curation_builders_run_no_job(spark, sf_dir):
 
 
 def test_threshold_probe_scores_each_pair_once(spark, sf_dir, tmp_path):
-    """The pair-emission face of the IVF probe (st13/st14's per-batch
-    shape) computes the interpreted HOF cosine once per probed pair: a
-    filter on a projected cosine is pushed under the projection and
-    evaluates it again.  The pair cosine is the ``zip_with`` over the
-    corpus vector ``__cvec`` (the query-to-centroid assignment has its
-    own)."""
+    """The IVF probe scores each probed pair once, in the BLAS kernel —
+    its pair-emission face (st14's per-batch shape) and its ranked face
+    alike, and s03's in-memory IVF search too: each plan holds one
+    Python map and no interpreted HOF, so no ``zip_with(`` and no
+    ``aggregate`` fold."""
     from etlbigdata_spark.functions import similarity as fsim
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -233,8 +232,13 @@ def test_threshold_probe_scores_each_pair_once(spark, sf_dir, tmp_path):
         spark, path, queries, n_probe=2, round_to=6, threshold=0.5, exclude_self=False
     )
     assert pairs.collect(), "vacuous: no pair passed the threshold"
-    scored = [n.text.count("zip_with(") for n in walk(pairs) if "__cvec" in n.text]
-    assert sum(scored) == 1, scored
+    ranked = fsim.ivf_probe_index(spark, path, queries, k=5, n_probe=2, round_to=6)
+    s03 = workload.QUERIES["s03_ivf_topk"](spark, sf_dir)
+    for name, df in (("threshold", pairs), ("ranked", ranked), ("s03", s03)):
+        plan = _final_plan(df)
+        assert audit(df).hof_folds == 0, name
+        assert not any("zip_with(" in n.text for n in plan), name
+        assert _names(plan).count("MapInPandas") == 1, (name, _names(plan))
 
 
 def test_d09_within_cell_equi_join_only(plans):

@@ -1566,11 +1566,64 @@ def test_pq_validation_and_null_embeddings(emb, spark):
     assert len(cb2) == 8 and all(len(b) == 1 for b in cb2)
 
 
-def test_assign_to_cents_blas_matches_expression(emb, spark):
-    """Round-10: the BLAS assignment face (one matmul per Arrow batch)
-    must agree with the expression face vector-for-vector, including a
-    NULL embedding assigning NULL, and the auto cutover must route
-    >= 32 centroids to blas (the interpreted-HOF trap regime)."""
+def _probe_reference(spark, path, queries, n_probe, k, round_to, threshold=None):
+    """The expression reference of ``ivf_probe_index``: each query's
+    probed cells (``_query_probes``) scored by the kept JVM references —
+    ``cosine_topk(vectorized=False)`` over float vectors or SQ8 codes,
+    ``pq_topk(adc="expression")`` over raw PQ codes, and
+    ``cosine_topk(vectorized=False)`` over ``x̂ = centroid + decode(code)``
+    (built in numpy here) for residual PQ.  ``threshold`` keeps every
+    pair with ``cosine >= threshold`` and its cell, as the pair face does."""
+    import numpy as np
+
+    layout = fsim._read_ivf_layout(spark, path, "embedding")
+    vecs = layout.vectors
+    if layout.encoding == "sq8":
+        corpus = vecs.select("vec_id", "centroid", F.col("emb_q").alias("embedding"))
+    elif layout.encoding == "pq" and layout.residual:
+        cents, books = dict(layout.cents), layout.books
+        decoded = [
+            (
+                r["vec_id"], r["centroid"],
+                [float(x) for x in np.asarray(cents[r["centroid"]]) + np.concatenate(
+                    [books[s][c] for s, c in enumerate(r["pq_code"])]
+                )],
+            )
+            for r in vecs.collect()
+        ]
+        corpus = spark.createDataFrame(
+            decoded, "vec_id long, centroid int, embedding array<double>"
+        )
+    else:
+        corpus = vecs
+    probes = fsim._query_probes(queries, layout.cents, n_probe, "vec_id", "embedding")
+    kk = corpus.count() if threshold is not None else k
+    rows = []
+    for qid, cells in probes.cells.items():
+        q = queries.filter(F.col("vec_id") == qid)
+        c = corpus.filter(F.col("centroid").isin(cells))
+        if layout.encoding == "pq" and not layout.residual:
+            res = fsim.pq_topk(c, q, layout.books, k=kk, round_to=round_to, adc="expression")
+        else:
+            res = fsim.cosine_topk(c, q, k=kk, round_to=round_to, vectorized=False)
+        if threshold is not None:
+            cell = c.select(F.col("vec_id").alias("neighbor_id"), "centroid")
+            res = res.filter(F.col("cosine") >= threshold).join(cell, "neighbor_id").select(
+                "query_id", "neighbor_id", "centroid", "cosine"
+            )
+        rows.extend(tuple(r) for r in res.collect())
+    return sorted(rows)
+
+
+def test_ivf_cell_rule_matches_expression_reference(emb, spark):
+    """The one IVF cell rule (``_assign_cosine_argmax_blas``: one matmul
+    per Arrow batch) puts every vector in the cell the kept expression
+    argmax (``_assign_cosine_argmax``, rounded far below the score gaps)
+    picks, a NULL embedding gets a NULL cell, and ``_query_probes`` ranks
+    cells by the same rule — score desc, ties to the lowest position —
+    so ``n_probe=1`` probes exactly the assigned cell."""
+    import numpy as np
+
     cents = [
         (i, list(r["embedding"]))
         for i, r in enumerate(emb.orderBy("vec_id").limit(40).collect())
@@ -1580,36 +1633,37 @@ def test_assign_to_cents_blas_matches_expression(emb, spark):
     )
     expr = {
         r.vec_id: r.centroid
-        for r in fsim._assign_to_cents(nulled, cents, "embedding", method="expression").collect()
+        for r in fsim._assign_cosine_argmax(nulled, cents, "embedding", 12, "centroid").collect()
     }
     blas = {
         r.vec_id: r.centroid
-        for r in fsim._assign_to_cents(nulled, cents, "embedding", method="blas").collect()
+        for r in fsim._assign_cosine_argmax_blas(nulled, cents, "embedding", "centroid").collect()
     }
     assert expr == blas
     assert blas[999999] is None
-    with pytest.raises(ValueError, match="unknown method"):
-        fsim._assign_to_cents(emb, cents, "embedding", method="plz")
-    # the driver probe-ranking face agrees with the expression face on
-    # the same 40-centroid list (query probes are (qid, cell) pairs)
-    queries = emb.orderBy("vec_id").limit(5)
-    pe = {(r.query_id, r.centroid)
-          for r in fsim._query_probes(queries, cents, 4, "vec_id", "embedding",
-                                      method="expression").collect()}
-    pd_ = {(r.query_id, r.centroid)
-           for r in fsim._query_probes(queries, cents, 4, "vec_id", "embedding",
-                                       method="driver").collect()}
-    assert pe == pd_
-    with pytest.raises(ValueError, match="unknown method"):
-        fsim._query_probes(queries, cents, 4, "vec_id", "embedding", method="plz")
+    # probe ranking against a plain-Python spelling of the rule
+    queries = emb.select("vec_id", "embedding").orderBy("vec_id").limit(5).unionByName(
+        spark.createDataFrame([(888888, None)], "vec_id long, embedding array<float>")
+    )
+    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
+    want = {}
+    for r in queries.collect():
+        if r["embedding"] is None:
+            continue
+        x = np.asarray(r["embedding"], dtype=np.float64)
+        s = [float(x @ c) / (float(np.linalg.norm(c)) + 1e-12) for c in C]
+        want[r["vec_id"]] = sorted(range(len(C)), key=lambda p: (-s[p], p))[:4]
+    probes = fsim._query_probes(queries, cents, 4, "vec_id", "embedding")
+    assert probes.cells == want  # the NULL query probes nothing
+    one = fsim._query_probes(queries, cents, 1, "vec_id", "embedding")
+    assert {q: c[0] for q, c in one.cells.items()} == {q: blas[q] for q in want}
 
 
 def test_ivf_probe_vectorized_matches_expression(emb, spark, tmp_path):
-    """Round-10: the vectorized probe (one BLAS matmul per batch with a
-    per-row probed-cell mask) is row-for-row equal to the expression
-    probe on all three index layouts (float / SQ8 / PQ) and on the
-    threshold (pair-emission) face; it refuses to run without round_to
-    (rounding is what absorbs summation-order differences)."""
+    """The probe (one BLAS matmul per batch with a per-row probed-cell
+    mask) is row-for-row equal to the expression references over each
+    query's probed cells on the float, SQ8 and PQ layouts, and on the
+    threshold (pair-emission) face."""
     queries = emb.orderBy("vec_id").limit(5)
     cb = fsim.pq_fit(emb, n_subspaces=8, n_codes=16, method="sample")
     paths = {}
@@ -1618,28 +1672,24 @@ def test_ivf_probe_vectorized_matches_expression(emb, spark, tmp_path):
         fsim.ivf_write_index(emb, paths[name], n_centroids=8, **kw)
     key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     for name, path in paths.items():
-        a = key(fsim.ivf_probe_index(spark, path, queries, k=7, n_probe=3, round_to=6))
-        b = key(fsim.ivf_probe_index(spark, path, queries, k=7, n_probe=3, round_to=6,
-                                     vectorized=True))
-        assert a == b, f"vectorized probe diverged on the {name} layout"
-    a = key(fsim.ivf_probe_index(spark, paths["f"], queries, n_probe=3, round_to=6,
-                                 threshold=0.2))
-    b = key(fsim.ivf_probe_index(spark, paths["f"], queries, n_probe=3, round_to=6,
-                                 threshold=0.2, vectorized=True))
-    assert a == b and len(a) > 0
-    with pytest.raises(ValueError, match="round_to"):
-        fsim.ivf_probe_index(spark, paths["f"], queries, vectorized=True)
+        got = key(fsim.ivf_probe_index(spark, path, queries, k=7, n_probe=3, round_to=6))
+        want = _probe_reference(spark, path, queries, 3, 7, 6)
+        assert got == want and len(got) == 35, f"probe diverged on the {name} layout"
+    got = key(fsim.ivf_probe_index(spark, paths["f"], queries, n_probe=3, round_to=6,
+                                   threshold=0.2))
+    want = _probe_reference(spark, paths["f"], queries, 3, None, 6, threshold=0.2)
+    assert got == want and len(got) > 0
 
 
 def test_probe_zero_norm_vectors_excluded_both_faces(emb, spark, tmp_path):
     """Round-10 review: a zero-norm vector has NO defined cosine.  Its
-    NaN used to rank FIRST under Spark's desc ordering on the
-    expression face (displacing real neighbors) and to POISON the
-    vectorized face's per-batch candidate cut (NaN cut drops every
-    real row in the batch).  Both faces now exclude unscoreable pairs
+    NaN must neither rank first nor POISON the kernel's per-batch
+    candidate cut (a NaN cut drops every real row in the batch).  The
+    probe and the expression reference both exclude unscoreable pairs
     and stay row-for-row equal, with every real neighbor retained —
     exercised with MORE zero vectors than k so the cut-poisoning class
-    can't regress silently."""
+    can't regress silently.  All 4 cells are probed, so the reference
+    is ``cosine_topk(vectorized=False)`` over the whole corpus."""
     real = emb.select("vec_id", "embedding").limit(40)
     zeros = spark.createDataFrame(
         [(10_000 + i, [0.0] * 64) for i in range(15)],
@@ -1649,11 +1699,13 @@ def test_probe_zero_norm_vectors_excluded_both_faces(emb, spark, tmp_path):
     path = str(tmp_path / "ivf_zeros")
     fsim.ivf_write_index(corpus, path, n_centroids=4)
     queries = real.orderBy("vec_id").limit(3)
-    kw = dict(k=10, n_probe=4, round_to=6)
-    a = sorted(tuple(r) for r in fsim.ivf_probe_index(spark, path, queries, **kw).collect())
+    a = sorted(
+        tuple(r)
+        for r in fsim.ivf_probe_index(spark, path, queries, k=10, n_probe=4, round_to=6).collect()
+    )
     b = sorted(
         tuple(r)
-        for r in fsim.ivf_probe_index(spark, path, queries, vectorized=True, **kw).collect()
+        for r in fsim.cosine_topk(corpus, queries, k=10, round_to=6, vectorized=False).collect()
     )
     assert a == b
     ids = {r[1] for r in a}
@@ -1663,59 +1715,48 @@ def test_probe_zero_norm_vectors_excluded_both_faces(emb, spark, tmp_path):
 
     per_q = Counter(r[0] for r in a)
     assert set(per_q.values()) == {10}, per_q
-    # threshold (pair) face: NaN pairs excluded on both faces too
+    # threshold (pair) face: NaN pairs excluded here and in the reference
     at = sorted(
         tuple(r)
         for r in fsim.ivf_probe_index(spark, path, queries, n_probe=4, round_to=6,
                                       threshold=-1.0).collect()
     )
-    bt = sorted(
-        tuple(r)
-        for r in fsim.ivf_probe_index(spark, path, queries, n_probe=4, round_to=6,
-                                      threshold=-1.0, vectorized=True).collect()
-    )
-    assert at == bt and all(i < 10_000 for _q, i, _c, _s in at)
+    bt = _probe_reference(spark, path, queries, 4, None, 6, threshold=-1.0)
+    assert at == bt and len(at) == 3 * 39 and all(i < 10_000 for _q, i, _c, _s in at)
 
 
 def test_probe_null_and_empty_query_sets_both_faces(emb, spark, tmp_path):
-    """Round-11 (ADVICE r10): (a) a NULL query vector emits NOTHING on
-    either probe face — the < 32-centroid expression _query_probes face
-    used to emit n_probe NULL-__qvec rows that hard-crashed the blas
-    scorer's driver-side list(); (b) an empty or all-NULL query set
-    returns an empty frame on the vectorized face instead of a 0-d
-    matmul crash; (c) the blas kernel masks corpus rows whose cell no
-    query probed (sentinel row) instead of a KeyError, so it no longer
-    depends on the caller's probed-cell pre-filter."""
+    """Round-11 (ADVICE r10): (a) a NULL query vector emits NOTHING, and
+    the other queries match the expression reference; (b) an empty or
+    all-NULL query set returns an empty frame with the ranked columns
+    instead of a 0-d matmul crash; (c) the kernel masks corpus rows whose
+    cell no query probed (sentinel row) instead of a KeyError, so it
+    does not depend on the caller's probed-cell pre-filter."""
     real = emb.select("vec_id", "embedding").limit(40)
     path = str(tmp_path / "ivf_nullq")
-    fsim.ivf_write_index(real, path, n_centroids=8)  # < 32: expression faces
+    fsim.ivf_write_index(real, path, n_centroids=8)
     nullq = spark.createDataFrame(
         [(77_001, None)], "vec_id long, embedding array<float>"
     )
     queries = real.orderBy("vec_id").limit(3).unionByName(nullq)
-    kw = dict(k=5, n_probe=3, round_to=6)
-    a = sorted(tuple(r) for r in fsim.ivf_probe_index(spark, path, queries, **kw).collect())
-    b = sorted(
+    a = sorted(
         tuple(r)
-        for r in fsim.ivf_probe_index(spark, path, queries, vectorized=True, **kw).collect()
+        for r in fsim.ivf_probe_index(spark, path, queries, k=5, n_probe=3, round_to=6).collect()
     )
-    assert a == b and len(a) == 15  # 3 real queries x k, nothing for the NULL
+    assert a == _probe_reference(spark, path, queries, 3, 5, 6)
+    assert len(a) == 15  # 3 real queries x k, nothing for the NULL
     assert all(q != 77_001 for q, *_rest in a)
     for qset in (queries.limit(0), nullq):  # empty and all-NULL
-        for vec in (False, True):
-            got = fsim.ivf_probe_index(spark, path, qset, vectorized=vec, **kw)
-            assert got.count() == 0
-            assert got.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+        got = fsim.ivf_probe_index(spark, path, qset, k=5, n_probe=3, round_to=6)
+        assert got.count() == 0
+        assert got.columns == ["query_id", "neighbor_id", "cosine", "rank"]
     # (c) kernel-level: an UNFILTERED corpus (cells nobody probed) scores
     # identically to the pre-filtered one the production caller passes
-    cents = [
-        (r["centroid"], list(r["vec"]))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("centroid").collect()
-    ]
+    cents = fsim._read_ivf_layout(spark, path, "embedding").cents
     q = fsim._query_probes(queries, cents, 2, "vec_id", "embedding")
     assigned_all = spark.read.parquet(f"{path}/vectors")
-    probed = {r["centroid"] for r in q.select("centroid").distinct().collect()}
-    assigned_cut = assigned_all.filter(F.col("centroid").isin(sorted(probed)))
+    assigned_cut = assigned_all.filter(F.col("centroid").isin(q.probed()))
+    assert len(q.probed()) < 8  # some cells really are unprobed
     key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     full = key(fsim._blas_topk(assigned_all, q, 5, "vec_id", "embedding", 6))
     cut = key(fsim._blas_topk(assigned_cut, q, 5, "vec_id", "embedding", 6))
@@ -1816,7 +1857,8 @@ def test_ivf_pq_index_smallest_pruned_recall_and_append(emb, spark, tmp_path):
 def test_ivf_pq_residual_encoding(emb, spark, tmp_path):
     """Round-11 (VERDICT r10 item 3): residual-encoded IVF-PQ (FAISS
     IndexIVFPQ formulation — codes quantize x − centroid[cell]).
-    (a) Both probe faces agree row-for-row on the residual layout;
+    (a) The probe agrees row-for-row with the expression reference
+    over ``x̂ = centroid + decode(code)`` on the residual layout;
     (b) the sidecar self-describes (marker true; a raw index reads
     false) and the vectors dir stays code-only; (c) an append
     residualizes against the frozen centroids — a half+append index
@@ -1838,8 +1880,7 @@ def test_ivf_pq_residual_encoding(emb, spark, tmp_path):
     kw = dict(k=5, n_probe=3, round_to=6)
     key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     a = key(fsim.ivf_probe_index(spark, path, queries, **kw))
-    b = key(fsim.ivf_probe_index(spark, path, queries, vectorized=True, **kw))
-    assert a == b and len(a) == 20
+    assert a == _probe_reference(spark, path, queries, 3, 5, 6) and len(a) == 20
     # (c) append homogeneity: half-build + append == all-at-once build
     apath = str(tmp_path / "ivf_res_app")
     fsim.ivf_write_index(

@@ -1383,7 +1383,7 @@ def test_foreach_batch_ann_probe_partition_pruned_and_matches_st13(
     mini = chunk1.orderBy("vec_id").limit(3)
     expect_cells = {
         r.centroid
-        for r in fsim._assign_to_cents(mini, cents, "embedding")
+        for r in fsim._assign_cosine_argmax_blas(mini, cents, "embedding", "centroid")
         .select("centroid")
         .collect()
     }
